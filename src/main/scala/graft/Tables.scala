@@ -17,15 +17,13 @@ object Tables {
     * region table should never fan out 32 ways). Overridable per
     * session (`spark.graft.scan.minBytesPerTask`) so a cluster with
     * different task-overhead economics can retune without a rebuild. */
-  private def minBytesPerTask(s: SparkSession): Long =
+  private[graft] def minBytesPerTask(s: SparkSession): Long =
     s.conf.getOption("spark.graft.scan.minBytesPerTask")
       .map { v =>
-        val parsed = try v.toLong catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
+        v.toLongOption.filter(_ > 0).getOrElse(
+          throw new IllegalArgumentException(
             s"spark.graft.scan.minBytesPerTask must be a positive byte " +
-              s"count, got '$v'")
-        }
-        math.max(1L, parsed) // clamp: 0 would divide-by-zero in spread
+              s"count, got '$v'"))
       }.getOrElse(16L * 1024)
 
   /** Scan-parallelism floor (optimization guide §2.5 "input skew: one
@@ -78,18 +76,18 @@ object Tables {
   }
 
   /** Total data bytes under `path` — a single file's length, or the sum
-    * of file lengths one level down for a directory-style parquet table
+    * of file lengths under a directory-style parquet table, recursing
+    * into Hive-style `key=value/` partition directories
     * (java.io.File.length() on a directory returns the dirent size,
     * which silently no-op'd [[spread]]'s under-supply gate on multi-file
     * tables — ADVICE r18). Non-local filesystems return 0 (File can't
     * see them); there the natural split count already supplies
     * parallelism and the no-op is the correct answer. */
-  private def dataBytes(path: String): Long = {
-    val f = new java.io.File(path)
-    if (f.isDirectory)
-      Option(f.listFiles()).map(_.filter(_.isFile).map(_.length()).sum)
-        .getOrElse(0L)
-    else f.length()
+  private[graft] def dataBytes(path: String): Long = {
+    def bytes(f: java.io.File): Long =
+      if (f.isDirectory) Option(f.listFiles()).map(_.map(bytes).sum).getOrElse(0L)
+      else f.length()
+    bytes(new java.io.File(path))
   }
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")

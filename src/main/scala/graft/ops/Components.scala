@@ -1,122 +1,53 @@
 package graft.ops
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** Connected components over a pair table — the step every dedup
-  * pipeline runs AFTER candidate-pair generation: near-dup pairs only
-  * relate documents two at a time, but retention decisions need the
-  * transitive duplicate CLUSTER (if a~b and b~c, keeping a and c is
-  * still a leak). The north-star extension of the reference's pairwise
-  * exact dedup (commercial_rfp_raw_data_ingestion_and_cleaning.py:251).
-  *
-  * Algorithm: iterative min-label propagation — every node starts
-  * labeled with itself; each round, a node adopts the minimum label in
-  * its closed neighborhood; stop at fixpoint. This is the standard
-  * shuffle-based connected components used for web-scale dedup: each
-  * round is one join + one aggregation (both on the node key), rounds ≤
-  * the largest cluster's diameter — small by construction for near-dup
-  * clusters (capBuckets bounds bucket size upstream, and dup clusters
-  * are dense). The result is the fixpoint min-reachable-id labeling, so
-  * it is deterministic regardless of execution order.
-  *
-  * The driver-side convergence loop holds only a changed-row COUNT per
-  * round — no data is collected.
+  * pipeline runs AFTER candidate-pair generation: retention needs the
+  * transitive duplicate CLUSTER (if a~b and b~c, keeping a and c is still
+  * a leak). The north-star extension of the reference's pairwise exact
+  * dedup (commercial_rfp_raw_data_ingestion_and_cleaning.py:251).
   */
 object Components {
 
-  /** (node, cluster_id) for every node in `edges` (columns `a`, `b`);
-    * cluster_id = the minimum node id reachable from the node.
+  /** (node, cluster_id) for every node in `edges` (integral columns `a`,
+    * `b`); cluster_id = the minimum node id reachable from the node.
     *
-    * Resource contract: returns with NO blocks left in the cache. Each
-    * round's intermediate is persisted only until the next round
-    * materializes, and the final labeling is checkpointed (lineage
-    * truncated) before the last cache is dropped — unpersisting alone
-    * would leave the caller a plan that re-runs every round, with each
-    * round referencing its input twice (exponential recompute). Uses the
-    * session checkpoint dir; if none is configured, a local temp dir is
-    * set (single-JVM convenience — on a real cluster set
-    * `sc.setCheckpointDir` to shared storage first). */
-  def connectedComponents(edges: DataFrame, maxIter: Int = 25,
-                          ckptEvery: Int = 4): DataFrame = {
-    require(ckptEvery >= 1, s"ckptEvery must be >= 1: $ckptEvery")
-    val sc = edges.sparkSession.sparkContext
-    Checkpoints.ensureDir(sc)
-    // the symmetrized edge list is joined EVERY round: checkpoint it
-    // once so (a) an expensive upstream edge plan — e.g. the FastSS
-    // variant join feeding q_entity_canon — executes once, not
-    // once per round, and (b) the per-round logical plan embeds a
-    // constant-size scan instead of the whole upstream tree (observed:
-    // multi-MB plan strings per action on the depth-2 match graph,
-    // re-rendered every round, before this truncation)
-    val sym = edges.select(col("a"), col("b"))
-      .unionAll(edges.select(col("b").as("a"), col("a").as("b")))
-      .checkpoint(eager = true)
-    // one propagation hop: each node adopts the min label in its closed
-    // neighborhood. Plain one-hop propagation: rounds = cluster
-    // diameter. The pointer-jumping shortcut (adopt the label OF the
-    // label, O(log d) rounds) was measured SLOWER here — its extra
-    // per-round self-join shuffle outweighs the saved rounds for the
-    // small-diameter clusters near-dup pipelines produce; reach for it
-    // only if cluster diameters grow past ~tens.
-    def hop(cur: DataFrame): DataFrame = {
-      val nbrMin = sym.toDF("src", "dst")
-        .join(cur.select(col("node"), col("label")),
-          col("dst") === col("node"))
-        .groupBy(col("src"))
-        .agg(min(col("label")).as("nbr_label"))
-      cur.join(nbrMin, col("node") === col("src"), "left")
-        .select(
-          cur.columns.filter(_ != "label").map(col).toIndexedSeq :+
-            least(col("label"), coalesce(col("nbr_label"), col("label")))
-              .as("label"): _*)
-    }
-    var labels = sym.select(col("a").as("node")).distinct()
-      .withColumn("label", col("node"))
-    var changed = 1L
-    var rounds = 0
-    var prev: DataFrame = null
-    while (changed > 0 && rounds < maxIter) {
-      // one hop per action; `label0` carries the pre-hop label for the
-      // changed filter. (A double-hop-per-action variant — exact because
-      // labels only decrease — halves the count actions but serializes
-      // two joins into every job; measured 4.6 s vs 2.8 s on
-      // q_dup_clusters at sf0.1, so the extra action is the cheaper
-      // side of the trade here.)
-      val next = hop(labels.withColumn("label0", col("label")))
-      val persisted = next.persist()
-      changed = persisted.filter(col("label") =!= col("label0")).count()
-      // blocking: with async unpersist, removal lags job submission and
-      // a fast convergence loop can hold every round's blocks at once
-      if (prev != null) prev.unpersist(blocking = true)
-      rounds += 1
-      if (changed > 0 && rounds % ckptEvery == 0) {
-        // periodic lineage truncation: persist keeps EXECUTION linear but
-        // the LOGICAL plan still doubles per round (hop references its
-        // input twice), so a long-diameter graph grows the plan tree
-        // exponentially — observed as a driver heap OOM inside the
-        // per-action plan-string rendering (explainString) after ~12
-        // rounds, long before any executor limit. A checkpoint every few
-        // rounds caps plan depth at a constant for one extra
-        // materialization per ckptEvery rounds; dedup clusters converge
-        // in <= ckptEvery rounds and never pay it.
-        labels = persisted.select(col("node"), col("label"))
-          .checkpoint(eager = true)
-        persisted.unpersist(blocking = true)
-        prev = null
-      } else {
-        prev = persisted
-        labels = persisted.select(col("node"), col("label"))
+    * Min-label propagation on [[GraphLoop]]: each round a node adopts the
+    * minimum label in its closed neighborhood, at one message shuffle and
+    * one job (the changed-label count the driver stops on). Rounds = the
+    * largest cluster's diameter, small for dedup clusters.
+    *
+    * Resource contract: returns with NO blocks left in the cache; the
+    * labeling is reliably checkpointed (session checkpoint dir, else a
+    * local temp dir; on a cluster set shared storage first), so the
+    * caller never re-runs a round. */
+  def connectedComponents(edges: DataFrame, maxIter: Int = 25): DataFrame = {
+    val g = new GraphLoop(edges)
+    try {
+      var labels = g.adj.mapPartitions(_.map { case (v, _) => (v, v) },
+        preservesPartitioning = true)
+      var changed = 1L
+      var rounds = 0
+      var prev: RDD[_] = null
+      while (changed > 0 && rounds < maxIter) {
+        val nbrMin = g.round(labels)((nbrs, l) => nbrs.iterator.map(_ -> l))(
+          math.min)
+        val step = g.hold(g.zipJoin(labels, nbrMin)((_, _))) // (label, nbrMin)
+        changed = step.filter { case (_, (l, m)) => m < l }.count()
+        if (prev != null) g.release(prev)
+        prev = step
+        labels = step.mapValues { case (l, m) => math.min(l, m) }
+        rounds += 1
       }
-    }
-    require(changed == 0,
-      s"connectedComponents did not converge in $maxIter rounds")
-    // checkpoint (eager) cuts the plan free of the cached iteration
-    // chain, so the final unpersist leaves the session cache-clean
-    val out = labels.select(col("node"), col("label").as("cluster_id"))
-      .checkpoint(eager = true)
-    if (prev != null) prev.unpersist(blocking = true)
-    out
+      require(changed == 0,
+        s"connectedComponents did not converge in $maxIter rounds")
+      g.result(labels, "cluster_id", LongType)
+        .select(col("node"), col("cluster_id").cast(g.keyType))
+    } finally g.close()
   }
 
   /** Alternating large-star / small-star connected components (Kiveris
@@ -185,20 +116,14 @@ object Components {
       (row.getLong(0), row.getLong(1))
     }
 
-    // r19 (one action per round instead of two): the per-round signature
-    // rides the checkpoint's own materialization as an OBSERVED metric
-    // (Dataset.observe — computed as the rows stream to the checkpoint
-    // writer, no second scan). Observed metrics are accumulator-backed,
-    // and accumulators can over-count under task re-execution, so the
-    // convergence DECISION never rests on them alone: when two
-    // consecutive observed signatures match, the loop confirms with the
-    // exact [[signature]] aggregation over both checkpointed edge sets
-    // (two cheap scans, once at convergence) — a phantom match keeps
-    // iterating (smallStar∘largeStar is idempotent at the fixpoint, so
-    // extra rounds cannot change the answer), a phantom mismatch only
-    // costs those extra rounds. Saves rounds−2 jobs per call; in local
-    // mode (no speculation, task failure fails the job) the observed
-    // values are exact anyway.
+    // One action per round: the signature rides the checkpoint's own
+    // materialization as an OBSERVED metric (Dataset.observe, no second
+    // scan). Observed metrics are accumulator-backed and can over-count
+    // under task re-execution, so when two consecutive observed
+    // signatures match the loop confirms with the exact [[signature]]
+    // over both checkpointed edge sets: a phantom match keeps iterating
+    // (the step is idempotent at the fixpoint), a phantom mismatch only
+    // costs extra rounds.
     def observed(e: DataFrame): (DataFrame, org.apache.spark.sql.Observation) = {
       val obs = org.apache.spark.sql.Observation()
       (e.observe(obs, count(lit(1)).as("n"),

@@ -1,67 +1,46 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DoubleType
 
-/** Fixed-iteration PageRank over an undirected edge set, computed ENTIRELY
-  * in fixed-point integer arithmetic so the result is bit-identical across
-  * engines, partitionings, and summation orders — the same determinism
-  * discipline as [[graft.expressions.FixedPointDot]], applied to an
-  * iterative graph computation. Scores carry 12 decimal digits
-  * (`fp = round(score·1e12)`); each iteration is
+/** Fixed-iteration PageRank over an undirected edge set in fixed-point
+  * integer arithmetic, so the result is bit-identical across engines,
+  * partitionings and summation orders (the [[graft.expressions.FixedPointDot]]
+  * discipline). Scores carry 12 decimal digits (`fp = round(score·1e12)`);
+  * each iteration is
   *
   *   fp'(v) = round(0.15·1e12 / N) + (Σ_{u→v} (fp(u) div deg(u))) · 85 div 100
   *
   * with `div` the floor division both engines define identically for
-  * non-negative longs. The per-edge truncation loses ≤ deg(u)·1e-12 of
-  * mass per node per iteration — a deterministic quantization, not an
-  * approximation the engines could disagree on.
+  * non-negative longs: a deterministic quantization (≤ deg(u)·1e-12 of
+  * mass per node per iteration), not an approximation.
   *
-  * The reference has no graph layer at all; together with
-  * [[Components]] (reachability) and [[Triangles]] (local density) this
-  * completes the match-graph analytics a dedup/ER pipeline reads:
-  * PageRank centrality ranks WHICH member of a duplicate family is the
-  * canonical-most (most-corroborated) record.
-  *
-  * Scale: each iteration is one keyed join (scores × out-edges) and one
-  * map-side-combined sum — the CC cost model with a FIXED round count
-  * (no convergence detection, no driver feedback loop; `iters` plays the
-  * role maxIter plays in production PageRank). Degree and N are computed
-  * once; N rides along as a broadcast single-row frame, never a collect.
+  * Runs on [[GraphLoop]]: one message shuffle per iteration, the rounds
+  * chained lazily; deg(u) is u's neighbour count in the shared adjacency,
+  * N its node count. Three jobs (N, the rounds, the checkpoint write), and
+  * [[Components.connectedComponents]]' resource contract.
   */
 object PageRank {
+
+  /** Spark's `round` on a double (HALF_UP on its decimal form). */
+  private def rounded(x: Double): Long =
+    BigDecimal(x).setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
 
   /** (node, pr) after `iters` damped iterations; `pr` = fp/1e12, exact in
     * double (fp ≤ 1e12 < 2^53). Input edges: undirected, `a` < `b`. */
   def scores(edges: DataFrame, iters: Int = 5): DataFrame = {
     require(iters >= 1, s"iters must be >= 1: $iters")
-    val sc = edges.sparkSession.sparkContext
-    Checkpoints.ensureDir(sc)
-    // sym and deg are referenced by EVERY unrolled iteration of one lazy
-    // plan — without truncation the upstream edge plan (e.g. the FastSS
-    // variant join) is embedded ~3·iters times and re-executed per
-    // reference; one eager checkpoint each makes every iteration read a
-    // constant-size scan (the Components.connectedComponents discipline)
-    val sym = edges.select(col("a"), col("b"))
-      .unionAll(edges.select(col("b").as("a"), col("a").as("b")))
-      .checkpoint(eager = true)
-    val deg = sym.groupBy("a").agg(count(lit(1)).as("d"))
-      .checkpoint(eager = true)
-    val nn = deg.agg(count(lit(1)).as("n"))
-    var pr = deg.crossJoin(broadcast(nn))
-      .select(col("a").as("node"),
-        round(lit(1e12) / col("n")).cast("long").as("fp"))
-    for (_ <- 1 to iters) {
-      pr = sym.join(pr, sym("a") === pr("node"))
-        .join(deg, "a")
-        .select(col("b"), expr("fp div d").as("c"))
-        .groupBy(col("b").as("node"))
-        .agg(expr("(sum(c) * 85) div 100").as("cs"))
-        .crossJoin(broadcast(nn))
-        .select(col("node"),
-          (round(lit(0.15e12) / col("n")).cast("long") + col("cs")).as("fp"))
-    }
-    pr.select(col("node"), (col("fp").cast("double") / 1e12).as("pr"))
+    val g = new GraphLoop(edges)
+    try {
+      val n = g.adj.count()
+      val (fp0, base) =
+        if (n == 0) (0L, 0L) else (rounded(1e12 / n), rounded(0.15e12 / n))
+      var fp = g.adj.mapValues(_ => fp0)
+      for (_ <- 1 to iters)
+        fp = g.round(fp)((nbrs, f) => nbrs.iterator.map(_ -> f / nbrs.length))(
+          _ + _).mapValues(s => base + s * 85 / 100)
+      g.result(fp.mapValues(_.toDouble / 1e12), "pr", DoubleType)
+    } finally g.close()
   }
 
   /** The oracle's replica as unrolled DuckDB CTEs (`psym`, `pdeg`, `pn`,

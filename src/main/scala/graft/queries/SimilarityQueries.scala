@@ -1875,6 +1875,25 @@ object SimilarityQueries {
        |FROM xtop x LEFT JOIN ${prefix}top a
        |  ON a.query_id = x.query_id AND a.nbr_id = x.nbr_id""".stripMargin
 
+  /** Both futures' results, after waiting for BOTH — a failed first
+    * future never leaves the second running detached. When both fail,
+    * the first failure is rethrown carrying the second as a suppressed
+    * exception, so neither root cause is lost. */
+  private[graft] def awaitBoth[A, B](a: scala.concurrent.Future[A],
+      b: scala.concurrent.Future[B]): (A, B) = {
+    import scala.concurrent.Await
+    import scala.concurrent.duration.Duration
+    import scala.util.{Failure, Try}
+    val ta = Try(Await.result(a, Duration.Inf))
+    val tb = Try(Await.result(b, Duration.Inf))
+    (ta, tb) match {
+      case (Failure(ea), Failure(eb)) =>
+        if (ea ne eb) ea.addSuppressed(eb)
+        throw ea
+      case _ => (ta.get, tb.get)
+    }
+  }
+
   /** q_ann_recall — the ANN quality metric the index ladder is judged by:
     * recall@3 = |ANN top-3 ∩ exact top-3| / 3, averaged over the capped
     * query set, one row per method (lsh / mp / ivf). Every exact top-3
@@ -1919,16 +1938,15 @@ object SimilarityQueries {
     // trainer's driver-side rounds back-fill the exact pass's tail
     // instead of waiting behind it (the same concurrency discipline as
     // qAnnRecall's two fixture sides, one level down).
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
+    import scala.concurrent.{ExecutionContext, Future}
     // r19 (ADVICE r18): a DEDICATED 2-thread pool instead of the global
     // EC — its threads are created at first submit FROM THIS THREAD, so
     // Spark's InheritableThreadLocal local properties (job description/
     // group) propagate, where the global EC's long-lived daemon threads
     // may have inherited someone else's; and both futures are awaited
-    // (Try) before rethrowing, so a failed exact pass cannot leave the
-    // trainer running detached against a session the caller is tearing
-    // down.
+    // ([[awaitBoth]]) before rethrowing, so a failed exact pass cannot
+    // leave the trainer running detached against a session the caller
+    // is tearing down.
     val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     val (exact, trained) = try {
@@ -1951,9 +1969,7 @@ object SimilarityQueries {
         KMeans.trainMany(base.select("vec_id", "v"),
           (0, embDims) +: pqSlices, ivfCells, ivfIters))
     }
-    val exactT = scala.util.Try(Await.result(exactF, Duration.Inf))
-    val trainedT = scala.util.Try(Await.result(trainedF, Duration.Inf))
-    (exactT.get, trainedT.get)
+    awaitBoth(exactF, trainedF)
     } finally pool.shutdown()
     val (coarse, books) = (trained.head, trained.tail)
     def recallOf(method: String, ann: DataFrame): DataFrame =

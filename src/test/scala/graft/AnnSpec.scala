@@ -126,4 +126,20 @@ class AnnSpec extends SparkSpec {
         s"$name rank-1 beat the exact scan — impossible")
     }
   }
+
+  test("q_ann_recall's await: two failures surface as one with a suppressed") {
+    import scala.concurrent.Future
+    import graft.queries.SimilarityQueries.awaitBoth
+    val exactErr = new IllegalStateException("exact kNN pass failed")
+    val trainErr = new IllegalArgumentException("trainer failed")
+    val both = intercept[IllegalStateException](
+      awaitBoth(Future.failed(exactErr), Future.failed(trainErr)))
+    assert(both eq exactErr)
+    assert(both.getSuppressed.toSeq === Seq(trainErr))
+    val second = new IllegalArgumentException("trainer only")
+    val one = intercept[IllegalArgumentException](
+      awaitBoth(Future.successful(1), Future.failed(second)))
+    assert((one eq second) && one.getSuppressed.isEmpty)
+    assert(awaitBoth(Future.successful(1), Future.successful("x")) === (1 -> "x"))
+  }
 }

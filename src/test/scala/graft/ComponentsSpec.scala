@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.ops.Components
 
 /** Connected components: hand-checked shapes plus a property check
@@ -61,11 +60,8 @@ class ComponentsSpec extends SparkSpec {
   }
 
   test("fixpoint survives a long path: plan depth stays bounded, cache clean") {
-    // a 16-node path needs 15 propagation rounds — without the periodic
-    // mid-loop checkpoint the logical plan doubles per round (hop
-    // references its input twice) and the per-action plan rendering
-    // OOMed the driver around round ~12; this pins both the answer and
-    // the resource contract on the shape that triggered it
+    // a 16-node path needs 15 propagation rounds: pins both the answer
+    // and the resource contract on a deep chain
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val edges = (0L until 15L).map(i => (i, i + 1)).toDF("a", "b")
     val got = Components.connectedComponents(edges)
@@ -74,6 +70,43 @@ class ComponentsSpec extends SparkSpec {
     val after = spark.sparkContext.getPersistentRDDs.keySet
     assert((after -- before).isEmpty,
       s"connectedComponents leaked cached RDDs: ${after -- before}")
+  }
+
+  test("long path: one job per round plus at most 3; the result re-runs no round") {
+    import org.apache.spark.GraftTestBus
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = "components-job-budget"
+    val jobs = scala.collection.mutable.ArrayBuffer.empty[SparkListenerJobStart]
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (j.properties != null &&
+            j.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.synchronized { jobs += j; () }
+    }
+    def drained(): Seq[SparkListenerJobStart] = {
+      GraftTestBus.drain(sc)
+      jobs.synchronized { val js = jobs.toList; jobs.clear(); js }
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "connectedComponents job budget")
+    try {
+      val edges = (0L until 15L).map(i => (i, i + 1)).toDF("a", "b")
+      val out = Components.connectedComponents(edges)
+      val loopJobs = drained()
+      // 15 propagating rounds and one that finds no change, plus the
+      // checkpoint's two jobs; several jobs per round would break this
+      assert(loopJobs.size <= 15 + 3, s"${loopJobs.size} jobs for 15 rounds")
+      assert(out.as[(Long, Long)].collect().toMap === (0L to 15L).map(_ -> 0L).toMap)
+      // reading the checkpointed result is one stage per job: no shuffle
+      // parent, so no round can be re-executed
+      val readJobs = drained()
+      assert(readJobs.nonEmpty && readJobs.forall(_.stageInfos.size == 1),
+        s"stages per read job: ${readJobs.map(_.stageInfos.size)}")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
   }
 
   test("property: star variant equals the fixpoint on random graphs") {

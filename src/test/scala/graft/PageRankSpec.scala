@@ -53,4 +53,14 @@ class PageRankSpec extends SparkSpec {
     // the damping rounding — bound generously and assert we stay close
     assert(math.abs(total - 1e12) < 1e6, s"mass drifted: $total")
   }
+
+  test("leaves no cached blocks behind (resource contract)") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val out = PageRank.scores(Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("a", "b"))
+    // materialize the RESULT after return, then check nothing stays cached
+    assert(out.count() === 5)
+    val after = spark.sparkContext.getPersistentRDDs.keySet
+    assert((after -- before).isEmpty,
+      s"PageRank.scores leaked cached RDDs: ${after -- before}")
+  }
 }
