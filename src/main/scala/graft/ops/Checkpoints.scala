@@ -36,9 +36,39 @@ object Checkpoints {
     }
   }
 
-  private def deleteRec(f: java.io.File): Unit = {
+  private[graft] def deleteRec(f: java.io.File): Unit = {
     if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRec))
     f.delete()
     ()
+  }
+
+  /** How old a scratch dir must be before another JVM's sweep may
+    * remove it: a live run's dir, written minutes ago at most, is never
+    * pulled out from under it. */
+  private[graft] val staleAfterMs: Long = 3600 * 1000L
+
+  /** Deletes the dirs directly under `root` whose name starts with
+    * `prefix` and whose mtime is older than [[staleAfterMs]], except
+    * `keep`: scratch left by a JVM that died before its own cleanup
+    * (shutdown hook or `finally`) ran. */
+  private[graft] def sweepStale(root: java.io.File, prefix: String,
+                                keep: Option[java.io.File] = None): Unit = {
+    val cutoff = System.currentTimeMillis() - staleAfterMs
+    val kept = keep.map(_.getAbsolutePath)
+    Option(root.listFiles()).getOrElse(Array.empty).foreach { d =>
+      if (d.isDirectory && d.getName.startsWith(prefix) &&
+          !kept.contains(d.getAbsolutePath) && d.lastModified() < cutoff)
+        deleteRec(d)
+    }
+  }
+
+  private val swept = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  /** [[sweepStale]] once per JVM for each (root, prefix); true when this
+    * call swept. */
+  private[graft] def sweepStaleOnce(root: java.io.File, prefix: String): Boolean = {
+    val first = swept.add(root.getAbsolutePath + java.io.File.separator + prefix)
+    if (first) sweepStale(root, prefix)
+    first
   }
 }

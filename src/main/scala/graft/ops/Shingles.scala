@@ -46,9 +46,11 @@ object Shingles {
   }
 
   /** Per-document distinct 3-gram shingle SET as an array column (pure
-    * narrow projection — no explode, no distinct shuffle), for
-    * `array_intersect` Jaccard verification; docs with <3 tokens get an
-    * empty set. `words` MUST
+    * narrow projection — no explode, no distinct shuffle), for consumers
+    * that need the shingle strings themselves; pairwise overlap counts
+    * come from [[shingleJaccardCol]] / [[shingleOverlapCol]] instead
+    * (this set + `array_intersect` is their test twin). Docs with <3
+    * tokens get an empty set. `words` MUST
     * be a projected column, not an inline `split(...)` expression:
     * higher-order functions evaluate interpreted (no codegen
     * subexpression elimination), so an un-aliased split inside the
@@ -102,6 +104,28 @@ object Shingles {
     import org.apache.spark.sql.GraftSqlBridge
     GraftSqlBridge.column(graft.expressions.MinHashSlicedExpr(
       GraftSqlBridge.expression(words)))
+  }
+
+  /** Exact distinct word 3-gram Jaccard of two token-array columns
+    * (custom codegen'd expression, [[graft.expressions.ShingleJaccardExpr]]):
+    * equal to `|sa ∩ sb| / |sa ∪ sb|` over [[shingleSetOfWords]] of each
+    * side, from one hash-set pass and no shingle strings, so a copy
+    * that predicate pushdown places in a join condition costs
+    * microseconds. Null when neither side has 3 tokens. */
+  def shingleJaccardCol(a: Column, b: Column): Column = {
+    import org.apache.spark.sql.GraftSqlBridge
+    GraftSqlBridge.column(graft.expressions.ShingleJaccardExpr(
+      GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
+  }
+
+  /** The same pass as [[shingleJaccardCol]] returning the counts as
+    * struct(ni, na, nb): |sa ∩ sb|, |sa|, |sb|
+    * ([[graft.expressions.ShingleOverlapExpr]]). Bind it in its own
+    * projection: the struct is read field by field. */
+  def shingleOverlapCol(a: Column, b: Column): Column = {
+    import org.apache.spark.sql.GraftSqlBridge
+    GraftSqlBridge.column(graft.expressions.ShingleOverlapExpr(
+      GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
   }
 
   /** One-pass PROJECTION form of the 64-bit SimHash fingerprint (custom

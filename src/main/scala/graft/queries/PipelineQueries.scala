@@ -3,7 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{ManifestSynth, Q, RfpSynth, Tables}
-import graft.ops.{Clean, Dedup, Keys, Render}
+import graft.ops.{Checkpoints, Clean, Dedup, Keys, Render}
+import graft.ops.Checkpoints.deleteRec
 
 /** Pipeline-stage queries beyond the cleaning core: document rendering
   * (S9/P15/S10/P16), latest-file selection (S5/S6/T2/A10), manifest-shaped
@@ -539,11 +540,6 @@ object PipelineQueries {
     "ref commercial_rfp_raw_data_ingestion_and_cleaning.py:286 (S1/S2): " +
       "real .xlsx bytes -> table, oracle re-parses the same bytes in SQL")
 
-  private def deleteRec(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRec))
-    f.delete(); ()
-  }
-
   /** Dirs this JVM has registered an exit-time delete for (idempotent —
     * the query body runs many times per session, the hook must not). */
   private val cleanupRegistered =
@@ -554,15 +550,8 @@ object PipelineQueries {
   private def sweepStaleAndRegisterCleanup(own: java.io.File): Unit = {
     if (cleanupRegistered.add(own.getAbsolutePath)) {
       Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRec(own)))
-      val prefix = own.getName.split('_').init.mkString("_") + "_"
-      val cutoff = System.currentTimeMillis() - 3600 * 1000L
-      Option(own.getParentFile.listFiles()).getOrElse(Array.empty).foreach {
-        sib =>
-          if (sib.isDirectory && sib.getName.startsWith(prefix) &&
-              sib.getAbsolutePath != own.getAbsolutePath &&
-              sib.lastModified() < cutoff)
-            deleteRec(sib)
-      }
+      Checkpoints.sweepStale(own.getParentFile,
+        own.getName.split('_').init.mkString("_") + "_", keep = Some(own))
     }
   }
 
@@ -607,8 +596,11 @@ object PipelineQueries {
       deleteRec(new java.io.File(out)) // S11 truncate-then-write semantics
       graft.ops.Docx.writeDocx(lib, "file_name", "doc_text", out,
         stored = true)
-      graft.ops.Docx.readDocs(
-          s.read.format("binaryFile").load(out + "/*.docx"))
+      // a glob path expands to one path per file, and past
+      // parallelPartitionDiscovery.threshold (32) Spark lists them in a
+      // job of its own; a filtered directory load lists in the driver
+      graft.ops.Docx.readDocs(s.read.format("binaryFile")
+          .option("pathGlobFilter", "*.docx").load(out))
         .toDF().orderBy("file_name", "para_id")
     },
     Some("WITH lib AS (\n" + qPipelineE2e.oracle.get + """

@@ -451,29 +451,36 @@ object SimilarityQueries {
     * bit-equality with the aggregation formulation the oracle mirrors)
     * → 4 bands of 2 slices, [[Shingles.capBuckets]] skew guard. Shared
     * by the all-pairs ([[qNearDup]]) and representative
-    * ([[qNearDupRep]]) verification variants. */
+    * ([[qNearDupRep]]) verification variants. Under-3-token documents
+    * (null signature) are dropped on the banded `sig`, not on the
+    * signature: a filter on the signature column is pushed below its
+    * projection, which runs the MinHash a second time in the scan
+    * filter, while a null signature simply bands into four null-`sig`
+    * rows. */
   private def nearDupBands(corpus: DataFrame): DataFrame = {
     val sigTok = split(trim(col("text")), "\\s+")
     val sigs = corpus
       .select(col("doc_id"), Shingles.minhashSlicedCol(sigTok).as("s8"))
-      .filter(col("s8").isNotNull)
     def sl(i: Int) = element_at(col("s8"), i + 1)
     Shingles.capBuckets(
       sigs.select(col("doc_id"), posexplode(array(
           concat(sl(0), sl(1)), concat(sl(2), sl(3)),
           concat(sl(4), sl(5)), concat(sl(6), sl(7)))))
-        .toDF("doc_id", "band", "sig"), cap = maxBucket)
+        .toDF("doc_id", "band", "sig")
+        .filter(col("sig").isNotNull), cap = maxBucket)
   }
 
   /** Exact 3-gram Jaccard for candidate (doc_a, doc_b) pairs: pairs join
-    * back to the corpus TEXT (small), and the shingle-set arrays +
-    * array_intersect are computed only for rows that survive the join —
-    * |candidates| set builds, not 2×|corpus|, which is the LSH premise
-    * (candidates ≪ corpus) paid out in the plan. Words/sets/counts each
-    * bound in their OWN projection step so no non-cheap expression is
-    * duplicated downstream (see Shingles.shingleSetOfWords on why
-    * inlining would go quadratic). Emits unrounded `jac` so callers
-    * filter before display rounding. */
+    * back to the corpus TEXT (small), and the Jaccard is computed only
+    * for rows that survive the join — |candidates| kernel calls, not
+    * 2×|corpus| set builds, which is the LSH premise (candidates ≪
+    * corpus) paid out in the plan. The kernel
+    * ([[Shingles.shingleJaccardCol]]) counts the distinct shingle
+    * overlap in one hash-set pass without building shingle strings.
+    * Callers filter the unrounded `jac` before display rounding, and
+    * Catalyst pushes that filter into the second join's condition, so
+    * the kernel runs twice per candidate pair (condition and
+    * projection); that copy is what the kernel's cost makes harmless. */
   private def jaccardPairs(cand: DataFrame, corpus: DataFrame): DataFrame = {
     val wtok = split(trim(col("text")), "\\s+")
     cand
@@ -482,13 +489,7 @@ object SimilarityQueries {
       .join(corpus.select(col("doc_id").as("doc_b"), wtok.as("wb")),
         "doc_b")
       .select(col("doc_a"), col("doc_b"),
-        Shingles.shingleSetOfWords(col("wa")).as("sa"),
-        Shingles.shingleSetOfWords(col("wb")).as("sb"))
-      .select(col("doc_a"), col("doc_b"),
-        size(array_intersect(col("sa"), col("sb"))).as("ni"),
-        size(col("sa")).as("na"), size(col("sb")).as("nb"))
-      .withColumn("jac", col("ni").cast("double") /
-        (col("na") + col("nb") - col("ni")))
+        Shingles.shingleJaccardCol(col("wa"), col("wb")).as("jac"))
   }
 
   val qNearDup = Q("q_near_dup",
@@ -590,21 +591,10 @@ object SimilarityQueries {
         .select((col("doc_id") - 1000000).as("doc_id"), wtok.as("wb"))
       base.join(variant, "doc_id")
         // both sides need >= 3 tokens (mirrors the oracle's shing CTE,
-        // which only materializes docs that have shingles at all).
-        // Filter on TOKEN counts here, before the set projections: a
-        // filter on set size placed after them would be predicate-pushed
-        // below the wa/wb projections with the full set expression
-        // inlined over the raw split() — the quadratic HOF trap
-        // (measured 10x on this query; see Shingles.shingleSetOfWords).
+        // which only materializes docs that have shingles at all)
         .filter(size(col("wa")) >= 3 && size(col("wb")) >= 3)
-        .select(col("doc_id"),
-          Shingles.shingleSetOfWords(col("wa")).as("sa"),
-          Shingles.shingleSetOfWords(col("wb")).as("sb"))
-        .select(col("doc_id"),
-          size(array_intersect(col("sa"), col("sb"))).as("ni"),
-          size(col("sa")).as("na"), size(col("sb")).as("nb"))
-        .select(col("doc_id"), round(col("ni").cast("double") /
-          (col("na") + col("nb") - col("ni")), 6).as("jaccard"))
+        .select(col("doc_id"), round(
+          Shingles.shingleJaccardCol(col("wa"), col("wb")), 6).as("jaccard"))
     },
     Some("WITH " + corpusSql + ",\n" + shingSql + """,
       |sizes AS (SELECT doc_id, count(*) AS n FROM shing GROUP BY doc_id),
@@ -642,7 +632,7 @@ object SimilarityQueries {
     * Scale shape: pair-keyed joins on known ids (the q_jaccard
     * construction discipline); at corpus scale the candidate pairs come
     * from the LSH bucket join and this scoring is the per-pair verify
-    * kernel — one array_intersect over two bounded shingle sets. */
+    * kernel — one shingle-overlap pass over two bounded token arrays. */
   val qContainment = Q("q_containment",
     (s, dir) => {
       val wtok = split(trim(col("text")), "\\s+")
@@ -662,24 +652,24 @@ object SimilarityQueries {
           col("doc_id").as("whole_id")))
         .unionAll(comp.select((col("doc_id") - 3000000).as("src_id"),
           (col("doc_id") - 3000000 + 1).as("whole_id")))
-      // only pair participants need shingle sets — membership is id
+      // only pair participants need tokens — membership is id
       // arithmetic (sources ≡ 0/1 mod 20, composites ≥ 3e6), so the
-      // filter prunes the shingling 10× BEFORE the set projection (the
+      // filter prunes the shingling 10× BEFORE the token projection (the
       // first cut shingled the whole corpus for 3 pairs per composite:
       // 7.6 s at sf0.1, ~2 s pruned)
-      val sets = corpus
+      val toks = corpus
         .filter(col("doc_id") % 20 <= 1 || col("doc_id") >= 3000000)
         .filter(size(wtok) >= 3)
-        .select(col("doc_id"),
-          Shingles.shingleSetOfWords(wtok).as("sh"))
+        .select(col("doc_id"), wtok.as("w"))
       pairs
-        .join(sets.select(col("doc_id").as("src_id"), col("sh").as("sa")),
+        .join(toks.select(col("doc_id").as("src_id"), col("w").as("wa")),
           "src_id")
-        .join(sets.select(col("doc_id").as("whole_id"), col("sh").as("sb")),
+        .join(toks.select(col("doc_id").as("whole_id"), col("w").as("wb")),
           "whole_id")
         .select(col("src_id"), col("whole_id"),
-          size(array_intersect(col("sa"), col("sb"))).as("ni"),
-          size(col("sa")).as("na"), size(col("sb")).as("nb"))
+          Shingles.shingleOverlapCol(col("wa"), col("wb")).as("ov"))
+        .select(col("src_id"), col("whole_id"), col("ov.ni").as("ni"),
+          col("ov.na").as("na"), col("ov.nb").as("nb"))
         .select(col("src_id"), col("whole_id"),
           round(col("ni").cast("double") / col("na"), 6).as("containment"),
           round(col("ni").cast("double") /

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.{Q, Tables}
+import graft.ops.Checkpoints
+import graft.ops.Checkpoints.deleteRec
 
 /** Event-stream semantics over the `events` table, validated in batch mode
   * (batch/streaming unification: the same groupBy(window(...)) plan runs
@@ -252,12 +254,21 @@ object StreamQueries {
     * fixture the per-batch data is 2.5M rows and width 8 STARVES the
     * aggregation (q_stream_hourly 2.4 s at 32, 7.7 s at 8). Width
     * follows the events source size: 8 below 32 MiB, the session width
-    * above. */
+    * above — and never more than the session width, so a session
+    * narrower than 8 (a 4-core box) runs its state stages in one task
+    * wave and commits no more stores per batch than it has cores. */
   private def streamStateParts(s: SparkSession, dir: String): Int = {
     val bytes = new java.io.File(s"$dir/events.parquet").length()
-    if (bytes < 32L * 1024 * 1024) 8
-    else s.sessionState.conf.numShufflePartitions
+    val session = s.sessionState.conf.numShufflePartitions
+    if (bytes < 32L * 1024 * 1024) math.min(8, session) else session
   }
+
+  /** The state width a gate stream runs at: [[streamStateParts]] divided
+    * by the query's store multiplicity (see [[withStateParts]]), at
+    * least 2. */
+  private[graft] def stateWidth(s: SparkSession, dir: String,
+                                storeDivisor: Int = 1): Int =
+    math.max(streamStateParts(s, dir) / storeDivisor, 2)
 
   /** Shared oracle preamble for every [[lateSlicedEventsDir]] gate
     * query: the late-set predicate and the final-watermark cutoff,
@@ -295,8 +306,7 @@ object StreamQueries {
                                 storeDivisor: Int = 1)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val prev = s.conf.get(key)
-    s.conf.set(key,
-      math.max(streamStateParts(s, dir) / storeDivisor, 2).toString)
+    s.conf.set(key, stateWidth(s, dir, storeDivisor).toString)
     try body finally s.conf.set(key, prev)
   }
 
@@ -315,15 +325,20 @@ object StreamQueries {
     * restartable — needs a durable checkpoint and would pass its own
     * checkpointLocation instead of this scratch; the conf
     * (`spark.graft.stream.scratchDir`) retunes the scratch root per
-    * deployment without a rebuild. */
+    * deployment without a rebuild. A JVM killed mid-run leaves its
+    * checkpoint behind, so the first run on each scratch root in a JVM
+    * sweeps `graft_stream_ckpt_*` dirs older than an hour
+    * ([[Checkpoints.sweepStaleOnce]]). */
   private def withScratchCheckpoint[T](s: SparkSession)(body: String => T): T = {
     val base = s.conf.getOption("spark.graft.stream.scratchDir").getOrElse {
       val shm = new java.io.File("/dev/shm")
       if (shm.isDirectory && shm.canWrite) shm.getAbsolutePath
       else System.getProperty("java.io.tmpdir")
     }
+    val prefix = "graft_stream_ckpt_"
+    Checkpoints.sweepStaleOnce(new java.io.File(base), prefix)
     val dir = new java.io.File(base,
-      s"graft_stream_ckpt_${streamRunId.incrementAndGet()}_" +
+      s"$prefix${streamRunId.incrementAndGet()}_" +
         java.util.UUID.randomUUID().toString.take(8))
     try body(dir.getAbsolutePath) finally deleteRec(dir)
   }
@@ -479,12 +494,6 @@ object StreamQueries {
       }
     }
     out.getAbsolutePath
-  }
-
-  private def deleteRec(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRec))
-    f.delete()
-    ()
   }
 
   /** readStream over [[slicedEventsDir]]: one micro-batch per time slice. */

@@ -16,6 +16,40 @@ class PlanSpec extends SparkSpec {
   private def countOcc(s: String, needle: String): Int =
     s.sliding(needle.length).count(_ == needle)
 
+  test("near-dup plans run MinHash only in projections and no array HOFs") {
+    import org.apache.spark.sql.catalyst.expressions._
+    import org.apache.spark.sql.execution.{ProjectExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    val helper = new AdaptiveSparkPlanHelper {}
+    // another spec may have cached the same frame: its plan then sits
+    // behind the in-memory scan
+    def allNodes(p: SparkPlan): Seq[SparkPlan] =
+      helper.collectWithSubqueries(p) { case n => n }.flatMap {
+        case m: InMemoryTableScanExec => m +: allNodes(m.relation.cachedPlan)
+        case n => Seq(n)
+      }
+    for (q <- Seq(SimilarityQueries.qNearDup, SimilarityQueries.qNearDupRep)) {
+      val df = q.fn(spark, dir)
+      df.collect() // the final adaptive plan
+      val nodes = allNodes(df.queryExecution.executedPlan)
+      def has(p: SparkPlan)(f: PartialFunction[Expression, Unit]) =
+        p.expressions.exists(_.exists(f.isDefinedAt))
+      val minhashAt = nodes.filter(has(_) {
+        case _: graft.expressions.MinHashSlicedExpr => })
+      assert(minhashAt.nonEmpty, s"${q.name}: no MinHash in the plan")
+      // a copy in a Filter or scan DataFilters runs MinHash twice per doc
+      assert(minhashAt.forall(_.isInstanceOf[ProjectExec]),
+        s"${q.name}: MinHash outside a Project in\n" +
+          minhashAt.filterNot(_.isInstanceOf[ProjectExec])
+            .map(_.simpleString(200)).mkString("\n"))
+      val hofs = nodes.filter(has(_) {
+        case _: ArrayTransform | _: ArrayDistinct | _: ArrayIntersect => })
+      assert(hofs.isEmpty, s"${q.name}: array HOFs remain in\n" +
+        hofs.map(_.simpleString(200)).mkString("\n"))
+    }
+  }
+
   test("q1_agg pushes the shipdate filter into the parquet scan") {
     val p = plan(RelationalQueries.q1)
     assert(p.contains("PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate"))

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.streaming.StreamingQueryListener._
 
 /** The stream-slice fixture's load-bearing invariants: the gate's
   * multi-micro-batch streaming runs are only correct if the slices carry
@@ -100,5 +102,45 @@ class StreamSliceSpec extends SparkSpec {
     val onMax = onRanges.last._2
     assert(lateMax < onMax - 7200L * 1000000L,
       "late rows must sit beyond the 2h watermark delay when they arrive")
+  }
+
+  // State width is never wider than the session: on a session of shuffle
+  // width 2 the gate streams keep 2 state partitions on both the
+  // single-store rung (q_stream_dedup) and the join rung (q_stream_join,
+  // store divisor 2), in the rule and in the streams' own progress
+  // reports. Fresh sessions, so the shared session's conf never changes.
+
+  test("small sources: state width is capped at the session width") {
+    val narrow = spark.newSession()
+    narrow.conf.set("spark.sql.shuffle.partitions", "2")
+    assert(queries.StreamQueries.stateWidth(narrow, dir) === 2)
+    assert(queries.StreamQueries.stateWidth(narrow, dir, storeDivisor = 2) === 2)
+    val wide = spark.newSession()
+    wide.conf.set("spark.sql.shuffle.partitions", "16")
+    assert(queries.StreamQueries.stateWidth(wide, dir) === 8)
+    assert(queries.StreamQueries.stateWidth(wide, dir, storeDivisor = 2) === 4)
+  }
+
+  test("single-store and join streams run their state at width 2") {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.shuffle.partitions", "2")
+    val widths = java.util.concurrent.ConcurrentHashMap.newKeySet[(String, Long)]()
+    s.streams.addListener(new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        e.progress.stateOperators.foreach(o =>
+          widths.add((e.progress.name, o.numShufflePartitions)))
+    })
+    for (q <- Seq("q_stream_dedup", "q_stream_join")) {
+      assert(Registry.byName(q).fn(s, dir).count() > 0)
+    }
+    org.apache.spark.GraftTestBus.drain(s.sparkContext)
+    import scala.jdk.CollectionConverters._
+    val seen = widths.asScala.toSet
+    assert(seen.exists(_._1.startsWith("graft_stream_dedup_")), seen)
+    assert(seen.exists(_._1.startsWith("graft_stream_join_")), seen)
+    assert(seen.forall(_._2 == 2L), seen)
+    assert(s.conf.get("spark.sql.shuffle.partitions") === "2")
   }
 }
