@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Deterministic "dirty RFP workbook" synthesized from the `documents`
@@ -26,6 +26,10 @@ object RfpSynth {
   val cutoff = "2023-06-01"
 
   private def str(c: Column): Column = c.cast("string")
+
+  /** The raw (dirty) frame over the `documents` table in `dir`. */
+  def load(s: SparkSession, dir: String): DataFrame =
+    frame(Tables.documents(s, dir))
 
   /** The raw (dirty) frame. Mirrors [[sql]] exactly. */
   def frame(docs: DataFrame): DataFrame = {

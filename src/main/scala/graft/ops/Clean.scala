@@ -10,8 +10,10 @@ import graft.RfpSynth
   * Reference: commercial_rfp_raw_data_ingestion_and_cleaning.py:179-241
   * (`clean_data`) — operators P1-P13 of SURVEY.md §2.2. Everything here is
   * a narrow projection/filter over codegen'd built-ins, so at 100 TB the
-  * whole chain fuses into one WholeStageCodegen pass over the scan with
-  * zero shuffles; filters on parquet-backed columns push down to the scan.
+  * whole chain is one WholeStageCodegen stage over the scan with zero
+  * shuffles. [[cleanRfp]] computes the cleaned columns in one projection
+  * and filters them above an [[evaluateOnce]] barrier, so the filters read
+  * the computed values instead of re-deriving them in the scan.
   */
 object Clean {
 
@@ -85,11 +87,22 @@ object Clean {
     df.filter(!lower(col("response")).isin("n/a", "not applicable.") &&
       lower(col("question")) =!= "contact")
 
+  /** Passes every row through a one-row generator
+    * (`inline(array(struct(cols…)))`). Catalyst pushes no predicate on a
+    * generator's output below the Generate, so filters above this barrier
+    * read the columns the projection below it computed, instead of having
+    * the projection's expressions substituted into a scan-side Filter and
+    * evaluated once per predicate reference and again in the Project. */
+  def evaluateOnce(df: DataFrame): DataFrame =
+    df.select(inline(array(struct(df.columns.toIndexedSeq.map(col): _*))))
+
   /** The full cleaning chain over an RFP-shaped frame — the reference's
-    * `clean_data` (:179-241) as one fused narrow pipeline. */
+    * `clean_data` (:179-241) as one narrow pipeline: whitespace
+    * normalization and the date parse run once per row in one projection,
+    * the P5-P11 filters run on its output above [[evaluateOnce]]. */
   def cleanRfp(raw: DataFrame, asOf: String = RfpSynth.asOf): DataFrame = {
     val ws = normalizeWhitespace(normalizeColumnNames(raw))
-    val dated = ws.withColumn("date", parseDateMulti(col("date")))
+    val dated = evaluateOnce(ws.withColumn("date", parseDateMulti(col("date"))))
     val recent = recencyFilter(dated, "date", asOf)
     dropStopValues(
       dropEmpty(

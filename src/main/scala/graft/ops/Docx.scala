@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
+import graft.ops.Checkpoints.deleteRec
 
 /** REAL .docx codec — S9/S10 at full honesty. The reference's per-row
   * output is a binary OOXML Word document (python-docx `Document()` →
@@ -183,11 +184,5 @@ object DocxFixture {
       if (!tmp.renameTo(out)) deleteRec(tmp) // lost a build race: theirs won
     }
     path
-  }
-
-  private def deleteRec(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRec))
-    f.delete()
-    ()
   }
 }

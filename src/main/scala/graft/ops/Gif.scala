@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions.{col, element_at, split}
+import graft.ops.Checkpoints.deleteRec
 
 /** One GIF file's census row: the structural fields derivable from the
   * block walk — version, logical-screen geometry, global-color-table
@@ -365,11 +366,5 @@ object GifFixture {
       if (!tmp.renameTo(out)) deleteRec(tmp)
     }
     path
-  }
-
-  private def deleteRec(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRec))
-    f.delete()
-    ()
   }
 }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions.{col, element_at, split}
+import graft.ops.Checkpoints.deleteRec
 
 /** One decoded JPEG's header census (one row per file): everything here
   * lives in UNCOMPRESSED marker segments, so the DuckDB oracle re-reads
@@ -935,11 +936,5 @@ object JpegFixture {
       if (!tmp.renameTo(out)) deleteRec(tmp)
     }
     path
-  }
-
-  private def deleteRec(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRec))
-    f.delete()
-    ()
   }
 }

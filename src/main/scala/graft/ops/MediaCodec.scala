@@ -3,6 +3,7 @@ package graft.ops
 import java.nio.{ByteBuffer, ByteOrder}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import graft.ops.Checkpoints.deleteRec
 
 /** REAL multimodal decode (VERDICT r10 #2) for the two self-describing
   * uncompressed formats whose codecs are pure byte arithmetic — WAV
@@ -612,12 +613,6 @@ object MediaFixture {
     }
     path
   }
-
-  private def deleteRec(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRec))
-    f.delete()
-    ()
-  }
 }
 
 /** Deterministic on-disk PNG corpus for q_media_png — written by a
@@ -810,11 +805,5 @@ object PngFixture {
       if (!tmp.renameTo(out)) deleteRec(tmp) // lost a build race: theirs won
     }
     path
-  }
-
-  private def deleteRec(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRec))
-    f.delete()
-    ()
   }
 }

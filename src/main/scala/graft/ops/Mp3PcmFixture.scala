@@ -1,5 +1,7 @@
 package graft.ops
 
+import graft.ops.Checkpoints.deleteRec
+
 /** Deterministic MPEG-1 Layer III DECODE corpus — the encoder side of
   * the sample-exactness differential (see [[Mp3Pcm]]'s Scaladoc). Every
   * file is a real mono no-CRC frame stream PACKED bit by bit from a
@@ -289,11 +291,5 @@ object Mp3PcmFixture {
       if (!tmp.renameTo(out)) deleteRec(tmp)
     }
     path
-  }
-
-  private def deleteRec(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRec))
-    f.delete()
-    ()
   }
 }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions.{col, element_at, split}
+import graft.ops.Checkpoints.deleteRec
 
 /** One extracted PDF page: the page's text (every string literal shown
   * by a `Tj`/`TJ` text op, escape-decoded, in stream order), the literal
@@ -1151,11 +1152,5 @@ object PdfFixture {
       if (!tmp.renameTo(out)) deleteRec(tmp)
     }
     path
-  }
-
-  private def deleteRec(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRec))
-    f.delete()
-    ()
   }
 }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions.{col, element_at, split}
+import graft.ops.Checkpoints.deleteRec
 
 /** One TAR entry's scan row: archive member name, declared size, POSIX
   * type flag, and the payload text — the projection a WebDataset-style
@@ -444,11 +445,5 @@ object TarFixture {
       if (!tmp.renameTo(out)) deleteRec(tmp)
     }
     path
-  }
-
-  private def deleteRec(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRec))
-    f.delete()
-    ()
   }
 }

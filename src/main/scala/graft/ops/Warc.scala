@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions.{col, element_at, split}
+import graft.ops.Checkpoints.deleteRec
 
 /** One WARC record's scan row: the fields a crawl-ingest stage projects
   * before any content processing — record framing (type, URI, declared
@@ -636,11 +637,5 @@ object WarcFixture {
       if (!tmp.renameTo(out)) deleteRec(tmp)
     }
     path
-  }
-
-  private def deleteRec(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRec))
-    f.delete()
-    ()
   }
 }

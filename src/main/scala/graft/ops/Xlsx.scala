@@ -3,6 +3,7 @@ package graft.ops
 import java.util.zip.{CRC32, ZipEntry, ZipInputStream, ZipOutputStream}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import graft.ops.Checkpoints.deleteRec
 
 /** REAL XLSX ingestion (S1/S2 — the reference's actual entry format,
   * commercial_rfp_raw_data_ingestion_and_cleaning.py:286 reads .xlsx
@@ -303,11 +304,5 @@ object XlsxFixture {
       if (!tmp.renameTo(out)) deleteRec(tmp)
     }
     path
-  }
-
-  private def deleteRec(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRec))
-    f.delete()
-    ()
   }
 }

@@ -17,9 +17,6 @@ import graft.ops.Checkpoints.deleteRec
   */
 object PipelineQueries {
 
-  private def cleaned(s: SparkSession, dir: String): DataFrame =
-    Clean.cleanRfp(RfpSynth.frame(Tables.documents(s, dir)))
-
   private def manifest(s: SparkSession, dir: String): DataFrame =
     ManifestSynth.frame(Tables.documents(s, dir))
 
@@ -35,7 +32,7 @@ object PipelineQueries {
         substring(col("response"), 1, 120))
       val kh = when(col("doc_id") % 17 === 0, lit(null).cast("string"))
         .otherwise(Keys.keyHash(key))
-      cleaned(s, dir).select(
+      RfpQueries.cleaned(s, dir).select(
         col("doc_id"),
         Render.docName(kh, col("doc_id")).as("file_name"),
         Render.docBody(col("client"), col("rfp_type"), col("consultant"),
@@ -103,9 +100,10 @@ object PipelineQueries {
       "commercial_rfp_content_doc_library_creation.py:24-44")
 
   // --- O7/O8 sync reconciliation over two listing frames ----------------
+  // Both listings derive from one `documents` load, so a sync query runs
+  // one parquet schema-inference job, not one per listing.
 
-  private def blobListing(s: SparkSession, dir: String): DataFrame = {
-    val d = Tables.documents(s, dir)
+  private def blobListing(d: DataFrame): DataFrame = {
     val id = col("doc_id")
     d.filter(id % 3 =!= 0).select(
         concat(lit("RFP_Content_"), md5(concat(lit("f"), id.cast("string"))),
@@ -114,8 +112,7 @@ object PipelineQueries {
         concat(lit("audit_"), id.cast("string"), lit(".log")).as("name")))
   }
 
-  private def spListing(s: SparkSession, dir: String): DataFrame = {
-    val d = Tables.documents(s, dir)
+  private def spListing(d: DataFrame): DataFrame = {
     val id = col("doc_id")
     d.filter(id % 3 =!= 1).select(
         concat(lit("RFP_Content_"), md5(concat(lit("f"), id.cast("string"))),
@@ -140,9 +137,12 @@ object PipelineQueries {
   /** q_sync_upload — O7: blob .docx files absent from the SharePoint
     * listing (left_anti on name, P12 extension filter both sides). */
   val qSyncUpload = Q("q_sync_upload",
-    (s, dir) => blobListing(s, dir).filter(col("name").endsWith(".docx"))
-      .join(spListing(s, dir).filter(col("name").endsWith(".docx")),
-        Seq("name"), "left_anti"),
+    (s, dir) => {
+      val d = Tables.documents(s, dir)
+      blobListing(d).filter(col("name").endsWith(".docx"))
+        .join(spListing(d).filter(col("name").endsWith(".docx")),
+          Seq("name"), "left_anti")
+    },
     Some("WITH " + syncSql + """
       |SELECT b.name FROM blobs b
       |WHERE b.name LIKE '%.docx'
@@ -153,9 +153,12 @@ object PipelineQueries {
     * container. upload ∪ delete reconciles the two listings (property
     * tested in SyncSpec). */
   val qSyncDelete = Q("q_sync_delete",
-    (s, dir) => spListing(s, dir).filter(col("name").endsWith(".docx"))
-      .join(blobListing(s, dir).filter(col("name").endsWith(".docx")),
-        Seq("name"), "left_anti"),
+    (s, dir) => {
+      val d = Tables.documents(s, dir)
+      spListing(d).filter(col("name").endsWith(".docx"))
+        .join(blobListing(d).filter(col("name").endsWith(".docx")),
+          Seq("name"), "left_anti")
+    },
     Some("WITH " + syncSql + """
       |SELECT s.name FROM sp s
       |WHERE s.name LIKE '%.docx'
@@ -169,9 +172,10 @@ object PipelineQueries {
     * asserts that equivalence against q_sync_upload/q_sync_delete. */
   val qSyncDiff = Q("q_sync_diff",
     (s, dir) => {
-      val b = blobListing(s, dir).filter(col("name").endsWith(".docx"))
+      val d = Tables.documents(s, dir)
+      val b = blobListing(d).filter(col("name").endsWith(".docx"))
         .withColumn("in_blob", lit(1))
-      val p = spListing(s, dir).filter(col("name").endsWith(".docx"))
+      val p = spListing(d).filter(col("name").endsWith(".docx"))
         .withColumn("in_sp", lit(1))
       b.join(p, Seq("name"), "full_outer")
         .select(col("name"),
@@ -223,7 +227,7 @@ object PipelineQueries {
   /** q_dup_stats — A2 scalar sum + A3 distinct-group count over the
     * duplicate census, as one single-row aggregate. */
   val qDupStats = Q("q_dup_stats",
-    (s, dir) => Dedup.duplicateGroups(cleaned(s, dir),
+    (s, dir) => Dedup.duplicateGroups(RfpQueries.cleaned(s, dir),
         Seq("question", "response"))
       .agg(count(lit(1)).as("n_dup_groups"),
         coalesce(sum(col("cnt")), lit(0L)).as("n_dup_rows")),
@@ -321,16 +325,20 @@ object PipelineQueries {
     * latest-per-question → longest-per-question → Confirmed
     * canonicalization → rendered document with key_hash naming). The
     * flagship "a reference user could switch" query: its output is the
-    * reference pipeline's final artifact set. Lazy composition means
-    * Catalyst fuses the whole chain: all narrow stages collapse into the
-    * scan pass and the three dedup windows cost only TWO exchanges — the
-    * latest/longest stages both partition by (question), so the second
-    * window reuses the third's partitioning (pinned in PlanSpec). */
+    * reference pipeline's final artifact set. The narrow stages run in the
+    * first stage's one codegen pass: keys and the cleaned columns are
+    * computed once per row in projections, and the cleaning filters read
+    * them above [[Clean.evaluateOnce]]'s generator instead of re-deriving
+    * them in a scan Filter. The three dedup windows cost only TWO
+    * exchanges — the latest/longest stages both partition by (question),
+    * so the second window reuses the third's partitioning (both pinned in
+    * PlanSpec). */
   val qPipelineE2e = Q("q_pipeline_e2e",
     (s, dir) => {
-      val keyed = Keys.addRfpKeys(RfpSynth.frame(Tables.documents(s, dir)))
-      // cleanRfp whitespace-normalizes every string column, including the
-      // raw-built key — replicating the reference's clean-after-keys order
+      // keys on the raw frame, then clean — the reference's order; only
+      // key_hash is read downstream, so the raw key is not carried into
+      // cleanRfp's per-column normalization
+      val keyed = Keys.addRfpKeys(RfpSynth.load(s, dir)).drop("key")
       val cleanedK = Clean.cleanRfp(keyed)
       val d1 = Dedup.dedupExact(cleanedK, Seq("question", "response"),
         Seq("date", "doc_id"))

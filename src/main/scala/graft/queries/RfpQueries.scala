@@ -10,11 +10,9 @@ import graft.ops.{Clean, Dedup, Keys}
   */
 object RfpQueries {
 
-  private def raw(s: SparkSession, dir: String): DataFrame =
-    RfpSynth.frame(Tables.documents(s, dir))
-
-  private def cleaned(s: SparkSession, dir: String): DataFrame =
-    Clean.cleanRfp(raw(s, dir))
+  /** The cleaned RFP frame every RFP-family query starts from. */
+  private[queries] def cleaned(s: SparkSession, dir: String): DataFrame =
+    Clean.cleanRfp(RfpSynth.load(s, dir))
 
   /** Dates cross the engine/oracle boundary as 'yyyy-MM-dd' strings —
     * parquet DATE and DuckDB DATE round-trip through the harness with
@@ -34,7 +32,7 @@ object RfpQueries {
   /** q_keys — K1 business key + K2 md5 key hash on the RAW frame
     * (reference computes keys before cleaning, :291 vs :297). */
   val qKeys = Q("q_keys",
-    (s, dir) => Keys.addRfpKeys(raw(s, dir))
+    (s, dir) => Keys.addRfpKeys(RfpSynth.load(s, dir))
       .select("doc_id", "key", "key_hash"),
     Some(s"""${RfpSynth.sql}
       |SELECT doc_id, key,
@@ -59,7 +57,7 @@ object RfpQueries {
     * java.security.MessageDigest instead. */
   val qKeysSha = Q("q_keys_sha",
     (s, dir) => {
-      val k = Keys.addRfpKeys(raw(s, dir))
+      val k = Keys.addRfpKeys(RfpSynth.load(s, dir))
       k.select(col("doc_id"),
         Keys.keyHash(col("key"), "sha256").as("key_hash_sha256"))
     },

@@ -115,6 +115,40 @@ class PlanSpec extends SparkSpec {
     assert(countOcc(p, "Exchange hashpartitioning") === 2)
   }
 
+  test("RFP cleaning runs once, never in a Filter") {
+    import org.apache.spark.sql.catalyst.expressions._
+    import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val helper = new AdaptiveSparkPlanHelper {}
+    def isCleaning(e: Expression): Boolean =
+      e.exists(x => x.isInstanceOf[RegExpReplace] || x.isInstanceOf[GetTimestamp])
+    for (q <- Seq(RfpQueries.qClean, graft.queries.PipelineQueries.qPipelineE2e)) {
+      val df = q.fn(spark, dir)
+      df.collect() // the final adaptive plan
+      val nodes = helper.collectWithSubqueries(df.queryExecution.executedPlan) {
+        case n => n }
+      val conditions = nodes.flatMap {
+        case f: FilterExec => Seq(f.condition)
+        case s: FileSourceScanExec => s.dataFilters ++ s.partitionFilters
+        case _ => Nil
+      }
+      assert(!conditions.exists(isCleaning),
+        s"${q.name}: cleaning expressions in a filter:\n" +
+          conditions.filter(isCleaning).mkString("\n"))
+      // the P2 normalization, trim(regexp_replace(c, "\s+", " ")), once
+      // per cleaned column: a second copy of the same subject is a rerun
+      val subjects = nodes.flatMap(_.expressions.flatMap(_.collect {
+        case RegExpReplace(subject, Literal(p, _), Literal(r, _), _)
+            if String.valueOf(p) == "\\s+" && String.valueOf(r) == " " =>
+          subject.canonicalized
+      }))
+      assert(subjects.size >= 7, s"${q.name}: ${subjects.size} normalizations")
+      val reruns = subjects.groupBy(identity).filter(_._2.size > 1)
+      assert(reruns.isEmpty, s"${q.name}: normalized more than once:\n" +
+        reruns.map { case (e, c) => s"${c.size}× $e" }.mkString("\n"))
+    }
+  }
+
   test("curation family: redact/sample are shuffle-free, pack/upsert one shuffle") {
     import graft.queries.CurationQueries
     assert(!plan(CurationQueries.qRedact).contains("Exchange"))
