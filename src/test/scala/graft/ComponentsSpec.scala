@@ -109,6 +109,43 @@ class ComponentsSpec extends SparkSpec {
     }
   }
 
+  test("star long path: one job per round plus at most 3; the result re-runs no round") {
+    import org.apache.spark.GraftTestBus
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = "components-star-job-budget"
+    val jobs = scala.collection.mutable.ArrayBuffer.empty[SparkListenerJobStart]
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (j.properties != null &&
+            j.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.synchronized { jobs += j; () }
+    }
+    def drained(): Seq[SparkListenerJobStart] = {
+      GraftTestBus.drain(sc)
+      jobs.synchronized { val js = jobs.toList; jobs.clear(); js }
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "connectedComponentsStar job budget")
+    try {
+      val edges = (0L until 39L).map(i => (i, i + 1)).toDF("a", "b")
+      val out = Components.connectedComponentsStar(edges)
+      val loopJobs = drained()
+      // the 40-node path contracts in 6 rounds (7 reach the fixpoint of
+      // the sorted neighbour lists), then the checkpoint's two jobs
+      assert(loopJobs.size <= 6 + 3, s"${loopJobs.size} jobs for 6 rounds")
+      assert(out.as[(Long, Long)].collect().toMap === (0L to 39L).map(_ -> 0L).toMap)
+      // reading the checkpointed result is one stage per job: no shuffle
+      // parent, so no round can be re-executed
+      val readJobs = drained()
+      assert(readJobs.nonEmpty && readJobs.forall(_.stageInfos.size == 1),
+        s"stages per read job: ${readJobs.map(_.stageInfos.size)}")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
   test("property: star variant equals the fixpoint on random graphs") {
     import org.scalacheck.{Gen, Prop}
     val edgeGen = Gen.zip(Gen.choose(0L, 15L), Gen.choose(0L, 15L))
