@@ -1,8 +1,5 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{col, expr, struct, xxhash64}
-
 /** Per-round bench history (VERDICT r8 #8, widened to the FULL registry
   * by VERDICT r10 #1a): appends one JSON line of [[Probe]]-style medians
   * for every registry query to `bench_history.jsonl`, so a judge can
@@ -93,19 +90,14 @@ object BenchHistory {
       else SparkEntry.queries.keys.toSeq.sorted
     val spark = Sessions.local()
     spark.sparkContext.setLogLevel("ERROR")
-    def mat(df: DataFrame): Unit = {
-      df.select(xxhash64(struct(df.columns.map(col).toIndexedSeq: _*)).as("h"))
-        .agg(expr("bit_xor(h)")).collect()
-      ()
-    }
     val meds = names.map { name =>
       val fn = SparkEntry.queries(name)
       def timed(): Double = {
         spark.catalog.clearCache()
-        val t0 = System.nanoTime(); mat(fn(spark, sfDir))
+        val t0 = System.nanoTime(); Materialize.digest(fn(spark, sfDir))
         (System.nanoTime() - t0) / 1e9
       }
-      mat(fn(spark, sfDir)) // untimed warmup
+      Materialize.digest(fn(spark, sfDir)) // untimed warmup
       val first = timed()
       val med =
         if (!heavyQueries.contains(name) && first < 0.7) first

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.ops.{Tar, Warc, WarcFixture}
+import graft.ops.{Checkpoints, Tar, Warc, WarcFixture}
 
 /** Dev measurement for the INGEST-codec scale claims (VERDICT r15 #5):
   * the WARC/TAR container paths are architecturally linear-per-file
@@ -47,22 +47,14 @@ object IngestScale {
     val scales = Seq(("1x", 12, 5, 1), ("10x", 40, 15, 2),
       ("100x", 120, 50, 4), ("1000x", 360, 150, 8))
 
-    // content-keyed + tmp/rename (the WarcFixture.ensure discipline,
-    // review r15): bump the version when the generator changes; an
-    // interrupted run leaves only a .tmp dir, never a trusted partial
+    // built once per scale by Checkpoints.buildOnce: bump the version when
+    // the generator changes
     val root = new java.io.File(
       System.getProperty("java.io.tmpdir"), "graft_ingest_scale_v3")
-    def delRec(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(delRec))
-      f.delete(); ()
-    }
 
     for ((label, segs, pages, mul) <- scales) {
       val dir = new java.io.File(root, label)
-      if (!dir.exists()) {
-        val tmp = new java.io.File(root, label + ".tmp")
-        if (tmp.exists()) delRec(tmp)
-        tmp.mkdirs()
+      Checkpoints.buildOnce(dir.getAbsolutePath) { tmp =>
         // chunked twins in a SUBDIRECTORY so the *.warc globs keep
         // their exact plain file set (the WarcFixture v4 discipline)
         val chunkedDir = new java.io.File(tmp, "chunked")
@@ -83,7 +75,6 @@ object IngestScale {
             WarcFixture.recordsChunkedOf(i, pages, mul).mkString.getBytes(
               java.nio.charset.StandardCharsets.US_ASCII))
         }
-        require(tmp.renameTo(dir), s"could not rename $tmp to $dir")
       }
       val plainBytes = dir.listFiles().filter(_.getName.endsWith(".warc"))
         .map(_.length).sum

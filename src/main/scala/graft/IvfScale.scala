@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{col, expr, struct, xxhash64}
 import graft.queries.SimilarityQueries
 
 /** Dev measurement for the IVF √n-cells claim (VERDICT r8 #2).
@@ -37,11 +36,6 @@ object IvfScale {
     val spark = Sessions.local()
     spark.sparkContext.setLogLevel("ERROR")
 
-    def mat(df: DataFrame): Unit = {
-      df.select(xxhash64(struct(df.columns.map(col).toIndexedSeq: _*)).as("h"))
-        .agg(expr("bit_xor(h)")).collect()
-      ()
-    }
     val sf = sfDir.stripSuffix("/").split('/').last
 
     def config(frameName: String, emb: DataFrame, confName: String,
@@ -52,17 +46,17 @@ object IvfScale {
         spark.catalog.clearCache()
         val t0 = System.nanoTime()
         val (cb, idx) = SimilarityQueries.ivfSqIndexOn(emb, cells, permille)
-        mat(idx)
+        Materialize.digest(idx)
         (System.nanoTime() - t0) / 1e9
       }.sorted.apply(runs / 2)
       // query phase: against a WARM prebuilt index — the deployment shape
       val (codebook, index0) = SimilarityQueries.ivfSqIndexOn(emb, cells, permille)
       val index = index0.persist()
       index.count()
-      mat(SimilarityQueries.ivfSqQueryOn(emb, codebook, index, np)) // warmup
+      Materialize.digest(SimilarityQueries.ivfSqQueryOn(emb, codebook, index, np)) // warmup
       val queryS = (1 to runs).map { _ =>
         val t0 = System.nanoTime()
-        mat(SimilarityQueries.ivfSqQueryOn(emb, codebook, index, np))
+        Materialize.digest(SimilarityQueries.ivfSqQueryOn(emb, codebook, index, np))
         (System.nanoTime() - t0) / 1e9
       }.sorted.apply(runs / 2)
       val cands = SimilarityQueries.ivfCandidateCount(emb, codebook, index, np)

@@ -1,6 +1,5 @@
 package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.functions.{col, expr, struct, xxhash64}
 
 /** Dev utility: time ONE registered query (warmup + N cache-cleared runs)
   * at a given SF dir — the single-query view of [[Bench]]'s harness, for
@@ -36,8 +35,7 @@ object Probe {
       val t0 = System.nanoTime()
       val df = SparkEntry.queries(name)(spark, sfDir)
       val t1 = System.nanoTime()
-      df.select(xxhash64(struct(df.columns.map(col).toIndexedSeq: _*)).as("h"))
-        .agg(expr("bit_xor(h)")).collect()
+      Materialize.digest(df)
       ((t1 - t0) / 1e9, (System.nanoTime() - t1) / 1e9)
     }
     run()

@@ -1,6 +1,5 @@
 package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.functions.{col, expr, struct, xxhash64}
 
 /** Dev utility: time a SEQUENCE of registered queries run back-to-back
   * in one session — the measurement shape for cross-registration
@@ -37,10 +36,7 @@ object ProbeSeq {
         spark.catalog.clearCache()
         cpuNs.set(0L)
         val t0 = System.nanoTime()
-        val df = SparkEntry.queries(name)(spark, sfDir)
-        df.select(xxhash64(struct(df.columns.map(col).toIndexedSeq: _*))
-            .as("h"))
-          .agg(expr("bit_xor(h)")).collect()
+        Materialize.digest(SparkEntry.queries(name)(spark, sfDir))
         val w = (System.nanoTime() - t0) / 1e9
         Thread.sleep(200)
         total += w

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.functions.{col, expr, struct, xxhash64}
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Dev utility (r19): run ONE registered stream query under the bench's
@@ -36,8 +35,7 @@ object StreamDiag {
       val t0 = System.nanoTime()
       val df = SparkEntry.queries(name)(spark, sfDir)
       val t1 = System.nanoTime()
-      df.select(xxhash64(struct(df.columns.map(col).toIndexedSeq: _*)).as("h"))
-        .agg(expr("bit_xor(h)")).collect()
+      Materialize.digest(df)
       val t2 = System.nanoTime()
       println(f"[diag] build(incl stream exec)=${(t1 - t0) / 1e9}%.3f s " +
         f"mat=${(t2 - t1) / 1e9}%.3f s")

@@ -14,17 +14,8 @@ import org.apache.spark.sql.functions._
 object Tables {
   /** Floor on bytes per scan task for [[spread]] — below this, extra
     * parallelism costs more in task overhead than it buys (a 2 KB
-    * region table should never fan out 32 ways). Overridable per
-    * session (`spark.graft.scan.minBytesPerTask`) so a cluster with
-    * different task-overhead economics can retune without a rebuild. */
-  private[graft] def minBytesPerTask(s: SparkSession): Long =
-    s.conf.getOption("spark.graft.scan.minBytesPerTask")
-      .map { v =>
-        v.toLongOption.filter(_ > 0).getOrElse(
-          throw new IllegalArgumentException(
-            s"spark.graft.scan.minBytesPerTask must be a positive byte " +
-              s"count, got '$v'"))
-      }.getOrElse(16L * 1024)
+    * region table should never fan out 32 ways). */
+  private val minBytesPerTask: Long = 16L * 1024
 
   /** Scan-parallelism floor (optimization guide §2.5 "input skew: one
     * huge unsplittable file"): the driver testdata ships every table as
@@ -55,7 +46,7 @@ object Tables {
     val maxSplit = s.sessionState.conf.filesMaxPartitionBytes
     val natural = math.max(1L, (bytes + maxSplit - 1) / maxSplit)
     val target = math.min(s.sparkContext.defaultParallelism.toLong,
-      math.max(1L, bytes / minBytesPerTask(s))).toInt
+      math.max(1L, bytes / minBytesPerTask)).toInt
     if (natural < target) df.repartition(target, col(key)) else df
   }
 

@@ -2,7 +2,10 @@ package graft.ops
 
 import org.apache.spark.SparkContext
 
-/** Shared checkpoint-dir bootstrap for the iterative operators
+/** Scratch and fixture directories. [[buildOnce]] writes a reusable file
+  * tree once; [[sweepStale]] removes scratch a killed JVM left behind.
+  *
+  * Shared checkpoint-dir bootstrap for the iterative operators
   * ([[Components]], [[PageRank]]): sets a session checkpoint dir ONCE if
   * none is configured, and — because reliable checkpoint files are only
   * reclaimed when the ContextCleaner GCs their RDD references
@@ -70,5 +73,48 @@ object Checkpoints {
     val first = swept.add(root.getAbsolutePath + java.io.File.separator + prefix)
     if (first) sweepStale(root, prefix)
     first
+  }
+
+  private val building = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
+
+  /** Builds the directory `path` once and returns `path`; a call that
+    * finds it already built does nothing. Used for every file tree that
+    * is written once and then reused (the codec fixtures, the stream
+    * slice dirs). The contract:
+    *  - each build fills its OWN sibling tmp dir `<name>.tmp-<uuid>`, so
+    *    concurrent builds (threads or JVMs) never write into or delete
+    *    each other's files;
+    *  - the tmp dir is renamed into place atomically, so `path` exists
+    *    only as a complete tree and an existing `path` is trusted;
+    *  - a build whose rename loses to another's deletes its own tmp dir
+    *    and returns the winner's tree; a rename that fails with no tree
+    *    in place throws, and so does a failing `fill`, after its tmp dir
+    *    is deleted;
+    *  - tmp dirs older than [[staleAfterMs]] (a build killed mid-fill)
+    *    are swept when a build starts;
+    *  - within one JVM at most one build per `path` runs at a time.
+    * Every build must write the same bytes, so the directory name
+    * carries a version tag (`graft_xlsx_v1`) that MUST be bumped
+    * whenever the generated bytes change; otherwise a tree built by
+    * older code is served as current. */
+  private[graft] def buildOnce(path: String)(fill: java.io.File => Unit): String = {
+    val out = new java.io.File(path)
+    if (!out.exists()) building.computeIfAbsent(path, _ => new Object).synchronized {
+      if (!out.exists()) {
+        val root = out.getAbsoluteFile.getParentFile
+        sweepStale(root, out.getName + ".tmp")
+        val tmp = new java.io.File(root, s"${out.getName}.tmp-${java.util.UUID.randomUUID()}")
+        try {
+          if (!tmp.mkdirs()) throw new java.io.IOException(s"could not create $tmp")
+          fill(tmp)
+        } catch { case t: Throwable => deleteRec(tmp); throw t }
+        if (!tmp.renameTo(out)) {
+          deleteRec(tmp)
+          if (!out.isDirectory)
+            throw new java.io.IOException(s"could not rename $tmp to $out")
+        }
+      }
+    }
+    path
   }
 }

@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
-import graft.ops.Checkpoints.deleteRec
 
 /** REAL .docx codec — S9/S10 at full honesty. The reference's per-row
   * output is a binary OOXML Word document (python-docx `Document()` →
@@ -170,19 +169,11 @@ object DocxFixture {
       .mkString("\n")
 
   /** Build the fixture if missing; returns [[path]]. */
-  def ensure(): String = this.synchronized {
-    val out = new java.io.File(path)
-    if (!out.exists()) {
-      val tmp = new java.io.File(out.getParent, out.getName + ".tmp")
-      deleteRec(tmp)
-      tmp.mkdirs()
-      (0 until count).foreach { i =>
-        java.nio.file.Files.write(
-          new java.io.File(tmp, f"doc_$i%03d.docx").toPath,
-          Docx.docxBytes(docText(i), stored = true))
-      }
-      if (!tmp.renameTo(out)) deleteRec(tmp) // lost a build race: theirs won
+  def ensure(): String = Checkpoints.buildOnce(path) { tmp =>
+    (0 until count).foreach { i =>
+      java.nio.file.Files.write(
+        new java.io.File(tmp, f"doc_$i%03d.docx").toPath,
+        Docx.docxBytes(docText(i), stored = true))
     }
-    path
   }
 }

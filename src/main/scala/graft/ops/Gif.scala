@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions.{col, element_at, split}
-import graft.ops.Checkpoints.deleteRec
 
 /** One GIF file's census row: the structural fields derivable from the
   * block walk — version, logical-screen geometry, global-color-table
@@ -347,24 +346,16 @@ object GifFixture {
     bo.toByteArray
   }
 
-  /** Build the fixture if missing; returns [[path]]. Same benign-race
-    * contract as [[PngFixture.ensure]] (content-keyed, tmp+rename). */
-  def ensure(): String = this.synchronized {
-    val out = new java.io.File(path)
-    if (!out.exists()) {
-      val tmp = new java.io.File(out.getParent, out.getName + ".tmp")
-      deleteRec(tmp)
-      tmp.mkdirs()
-      (0 until count).foreach { i =>
-        java.nio.file.Files.write(
-          new java.io.File(tmp, f"img_$i%03d.gif").toPath, gifBytes(i))
-      }
-      (0 until animCount).foreach { i =>
-        java.nio.file.Files.write(
-          new java.io.File(tmp, f"seq_$i%03d.gif").toPath, gifAnimBytes(i))
-      }
-      if (!tmp.renameTo(out)) deleteRec(tmp)
+  /** Build the fixture if missing; returns [[path]]. Race and versioning
+    * contract: [[Checkpoints.buildOnce]]. */
+  def ensure(): String = Checkpoints.buildOnce(path) { tmp =>
+    (0 until count).foreach { i =>
+      java.nio.file.Files.write(
+        new java.io.File(tmp, f"img_$i%03d.gif").toPath, gifBytes(i))
     }
-    path
+    (0 until animCount).foreach { i =>
+      java.nio.file.Files.write(
+        new java.io.File(tmp, f"seq_$i%03d.gif").toPath, gifAnimBytes(i))
+    }
   }
 }

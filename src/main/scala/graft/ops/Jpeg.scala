@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions.{col, element_at, split}
-import graft.ops.Checkpoints.deleteRec
 
 /** One decoded JPEG's header census (one row per file): everything here
   * lives in UNCOMPRESSED marker segments, so the DuckDB oracle re-reads
@@ -921,20 +920,12 @@ object JpegFixture {
     bo.toByteArray
   }
 
-  /** Build the fixture if missing; returns [[path]]. Same benign-race
-    * contract as [[PngFixture.ensure]] (content-keyed, tmp+rename). */
-  def ensure(): String = this.synchronized {
-    val out = new java.io.File(path)
-    if (!out.exists()) {
-      val tmp = new java.io.File(out.getParent, out.getName + ".tmp")
-      deleteRec(tmp)
-      tmp.mkdirs()
-      (0 until count).foreach { i =>
-        java.nio.file.Files.write(
-          new java.io.File(tmp, f"img_$i%03d.jpg").toPath, jpegBytes(i))
-      }
-      if (!tmp.renameTo(out)) deleteRec(tmp)
+  /** Build the fixture if missing; returns [[path]]. Race and versioning
+    * contract: [[Checkpoints.buildOnce]]. */
+  def ensure(): String = Checkpoints.buildOnce(path) { tmp =>
+    (0 until count).foreach { i =>
+      java.nio.file.Files.write(
+        new java.io.File(tmp, f"img_$i%03d.jpg").toPath, jpegBytes(i))
     }
-    path
   }
 }

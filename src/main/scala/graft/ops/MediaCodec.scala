@@ -3,7 +3,6 @@ package graft.ops
 import java.nio.{ByteBuffer, ByteOrder}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import graft.ops.Checkpoints.deleteRec
 
 /** REAL multimodal decode (VERDICT r10 #2) for the two self-describing
   * uncompressed formats whose codecs are pure byte arithmetic — WAV
@@ -478,9 +477,8 @@ object MediaCodec {
 
 /** Deterministic on-disk WAV/BMP corpus for [[MediaCodec]]'s gate queries:
   * [[count]] files of each format, every byte a pure function of the file
-  * index, written once per JVM under java.io.tmpdir (atomic tmp+rename,
-  * the stream-slice cache discipline; the version tag in the dir name is
-  * the cache key — bump it whenever the generation contract changes).
+  * index, written once under java.io.tmpdir by [[Checkpoints.buildOnce]]
+  * (its scaladoc holds the race and version-tag contract).
   * Like q_binary_scan's container dir, the fixture is SF-invariant: a
   * media store does not scale with the analytic SF, and a static oracle
   * must name its filesystem root. */
@@ -592,26 +590,18 @@ object MediaFixture {
   }
 
   /** Build the fixture if missing; returns [[path]]. */
-  def ensure(): String = this.synchronized {
-    val out = new java.io.File(path)
-    if (!out.exists()) {
-      val tmp = new java.io.File(out.getParent, out.getName + ".tmp")
-      deleteRec(tmp)
-      tmp.mkdirs()
-      (0 until count).foreach { i =>
-        java.nio.file.Files.write(
-          new java.io.File(tmp, f"wav_$i%03d.wav").toPath, wavBytes(i))
-        java.nio.file.Files.write(
-          new java.io.File(tmp, f"bmp_$i%03d.bmp").toPath, bmpBytes(i))
-      }
-      (0 until palBmpCount).foreach { i =>
-        java.nio.file.Files.write(
-          new java.io.File(tmp, f"bmpp_$i%03d.bmp").toPath,
-          bmpPaletteBytes(i))
-      }
-      if (!tmp.renameTo(out)) deleteRec(tmp) // lost a build race: theirs won
+  def ensure(): String = Checkpoints.buildOnce(path) { tmp =>
+    (0 until count).foreach { i =>
+      java.nio.file.Files.write(
+        new java.io.File(tmp, f"wav_$i%03d.wav").toPath, wavBytes(i))
+      java.nio.file.Files.write(
+        new java.io.File(tmp, f"bmp_$i%03d.bmp").toPath, bmpBytes(i))
     }
-    path
+    (0 until palBmpCount).foreach { i =>
+      java.nio.file.Files.write(
+        new java.io.File(tmp, f"bmpp_$i%03d.bmp").toPath,
+        bmpPaletteBytes(i))
+    }
   }
 }
 
@@ -632,11 +622,9 @@ object MediaFixture {
 object PngFixture {
   val count = 32
 
-  // Deterministic (non-run-keyed) path ON PURPOSE: the fixture is
-  // content-keyed — every builder writes byte-identical files into a .tmp
-  // dir and renames, so a concurrent-build race is benign (loser discards
-  // its dir; VERDICT r12 wrong-#2 reviewed and kept this). Run-keyed dirs
-  // are only required for sinks whose content varies per run
+  // Deterministic (non-run-keyed) path ON PURPOSE: every build writes
+  // the same bytes (the Checkpoints.buildOnce contract). Run-keyed
+  // dirs are only required for sinks whose content varies per run
   // (q_docx_roundtrip's truncate-then-write).
   def path: String = new java.io.File(
     System.getProperty("java.io.tmpdir"), "graft_png_v5").getAbsolutePath
@@ -782,28 +770,20 @@ object PngFixture {
   }
 
   /** Build the fixture if missing; returns [[path]]. */
-  def ensure(): String = this.synchronized {
-    val out = new java.io.File(path)
-    if (!out.exists()) {
-      val tmp = new java.io.File(out.getParent, out.getName + ".tmp")
-      deleteRec(tmp)
-      tmp.mkdirs()
-      (0 until count).foreach { i =>
-        java.nio.file.Files.write(
-          new java.io.File(tmp, f"img_$i%03d.png").toPath, pngBytes(i))
-      }
-      (0 until paletteCount).foreach { i =>
-        java.nio.file.Files.write(
-          new java.io.File(tmp, f"pimg_$i%03d.png").toPath,
-          pngPaletteBytes(i))
-      }
-      (0 until grayCount).foreach { i =>
-        java.nio.file.Files.write(
-          new java.io.File(tmp, f"gimg_$i%03d.png").toPath,
-          pngGrayBytes(i))
-      }
-      if (!tmp.renameTo(out)) deleteRec(tmp) // lost a build race: theirs won
+  def ensure(): String = Checkpoints.buildOnce(path) { tmp =>
+    (0 until count).foreach { i =>
+      java.nio.file.Files.write(
+        new java.io.File(tmp, f"img_$i%03d.png").toPath, pngBytes(i))
     }
-    path
+    (0 until paletteCount).foreach { i =>
+      java.nio.file.Files.write(
+        new java.io.File(tmp, f"pimg_$i%03d.png").toPath,
+        pngPaletteBytes(i))
+    }
+    (0 until grayCount).foreach { i =>
+      java.nio.file.Files.write(
+        new java.io.File(tmp, f"gimg_$i%03d.png").toPath,
+        pngGrayBytes(i))
+    }
   }
 }

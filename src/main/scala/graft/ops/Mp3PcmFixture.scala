@@ -1,7 +1,5 @@
 package graft.ops
 
-import graft.ops.Checkpoints.deleteRec
-
 /** Deterministic MPEG-1 Layer III DECODE corpus — the encoder side of
   * the sample-exactness differential (see [[Mp3Pcm]]'s Scaladoc). Every
   * file is a real mono no-CRC frame stream PACKED bit by bit from a
@@ -276,20 +274,12 @@ object Mp3PcmFixture {
   def path: String = new java.io.File(
     System.getProperty("java.io.tmpdir"), "graft_mp3pcm_v1").getAbsolutePath
 
-  /** Build the on-disk corpus if missing (content-keyed dir, tmp+rename
-    * — the [[Mp3Fixture.ensure]] contract). */
-  def ensure(): String = this.synchronized {
-    val out = new java.io.File(path)
-    if (!out.exists()) {
-      val tmp = new java.io.File(out.getParent, out.getName + ".tmp")
-      deleteRec(tmp)
-      tmp.mkdirs()
-      (0 until count).foreach { i =>
-        java.nio.file.Files.write(
-          new java.io.File(tmp, f"pcm_$i%03d.mp3").toPath, mp3Bytes(i))
-      }
-      if (!tmp.renameTo(out)) deleteRec(tmp)
+  /** Build the on-disk corpus if missing; returns [[path]]. Race and
+    * versioning contract: [[Checkpoints.buildOnce]]. */
+  def ensure(): String = Checkpoints.buildOnce(path) { tmp =>
+    (0 until count).foreach { i =>
+      java.nio.file.Files.write(
+        new java.io.File(tmp, f"pcm_$i%03d.mp3").toPath, mp3Bytes(i))
     }
-    path
   }
 }

@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions.{col, element_at, split}
-import graft.ops.Checkpoints.deleteRec
 
 /** One extracted PDF page: the page's text (every string literal shown
   * by a `Tj`/`TJ` text op, escape-decoded, in stream order), the literal
@@ -1128,29 +1127,21 @@ object PdfFixture {
     bytes
   }
 
-  /** Build the fixture if missing; returns [[path]]. Same benign-race
-    * contract as [[Mp3Fixture.ensure]] (content-keyed, tmp+rename). v3:
+  /** Build the fixture if missing; returns [[path]]. Race and versioning
+    * contract: [[Checkpoints.buildOnce]]. v3:
     * every doc ships in THREE framings — classic doc_NNN.pdf, the
     * PDF 1.5 doc15_NNN.pdf (xref stream + ObjStm), and docp_NNN.pdf
     * ([[pdfPrevBytes]]: Predictor-12 Flate xref streams + a /Prev
     * incremental update) — so the gate covers the real-writer 1.5+
     * path, not just PdfSpec. */
-  def ensure(): String = this.synchronized {
-    val out = new java.io.File(path)
-    if (!out.exists()) {
-      val tmp = new java.io.File(out.getParent, out.getName + ".tmp")
-      deleteRec(tmp)
-      tmp.mkdirs()
-      (0 until count).foreach { i =>
-        java.nio.file.Files.write(
-          new java.io.File(tmp, f"doc_$i%03d.pdf").toPath, pdfBytes(i))
-        java.nio.file.Files.write(
-          new java.io.File(tmp, f"doc15_$i%03d.pdf").toPath, pdf15Bytes(i))
-        java.nio.file.Files.write(
-          new java.io.File(tmp, f"docp_$i%03d.pdf").toPath, pdfPrevBytes(i))
-      }
-      if (!tmp.renameTo(out)) deleteRec(tmp)
+  def ensure(): String = Checkpoints.buildOnce(path) { tmp =>
+    (0 until count).foreach { i =>
+      java.nio.file.Files.write(
+        new java.io.File(tmp, f"doc_$i%03d.pdf").toPath, pdfBytes(i))
+      java.nio.file.Files.write(
+        new java.io.File(tmp, f"doc15_$i%03d.pdf").toPath, pdf15Bytes(i))
+      java.nio.file.Files.write(
+        new java.io.File(tmp, f"docp_$i%03d.pdf").toPath, pdfPrevBytes(i))
     }
-    path
   }
 }

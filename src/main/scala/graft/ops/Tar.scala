@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions.{col, element_at, split}
-import graft.ops.Checkpoints.deleteRec
 
 /** One TAR entry's scan row: archive member name, declared size, POSIX
   * type flag, and the payload text — the projection a WebDataset-style
@@ -423,27 +422,19 @@ object TarFixture {
         s"sample_${i}_$k.cls" -> clsOf(i, k).getBytes("US-ASCII"))
     })
 
-  /** Build the fixture if missing; returns [[path]]. Same benign-race
-    * contract as [[Mp3Fixture.ensure]] (content-keyed, tmp+rename). */
-  def ensure(): String = this.synchronized {
-    val out = new java.io.File(path)
-    if (!out.exists()) {
-      val tmp = new java.io.File(out.getParent, out.getName + ".tmp")
-      deleteRec(tmp)
-      tmp.mkdirs()
-      (0 until count).foreach { i =>
-        java.nio.file.Files.write(
-          new java.io.File(tmp, f"shard_$i%03d.tar").toPath, tarBytes(i))
-      }
-      val pax = new java.io.File(tmp, "pax")
-      pax.mkdirs()
-      (0 until paxCount).foreach { i =>
-        java.nio.file.Files.write(
-          new java.io.File(pax, f"paxshard_$i%03d.tar").toPath,
-          paxTarBytes(i))
-      }
-      if (!tmp.renameTo(out)) deleteRec(tmp)
+  /** Build the fixture if missing; returns [[path]]. Race and versioning
+    * contract: [[Checkpoints.buildOnce]]. */
+  def ensure(): String = Checkpoints.buildOnce(path) { tmp =>
+    (0 until count).foreach { i =>
+      java.nio.file.Files.write(
+        new java.io.File(tmp, f"shard_$i%03d.tar").toPath, tarBytes(i))
     }
-    path
+    val pax = new java.io.File(tmp, "pax")
+    pax.mkdirs()
+    (0 until paxCount).foreach { i =>
+      java.nio.file.Files.write(
+        new java.io.File(pax, f"paxshard_$i%03d.tar").toPath,
+        paxTarBytes(i))
+    }
   }
 }

@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions.{col, element_at, split}
-import graft.ops.Checkpoints.deleteRec
 
 /** One WARC record's scan row: the fields a crawl-ingest stage projects
   * before any content processing — record framing (type, URI, declared
@@ -600,8 +599,8 @@ object WarcFixture {
       r.getBytes(java.nio.charset.StandardCharsets.US_ASCII)))
       .foldLeft(Array.empty[Byte])(_ ++ _)
 
-  /** Build the fixture if missing; returns [[path]]. Same benign-race
-    * contract as [[Mp3Fixture.ensure]] (content-keyed, tmp+rename). v5:
+  /** Build the fixture if missing; returns [[path]]. Race and versioning
+    * contract: [[Checkpoints.buildOnce]]. v5:
     * every segment ships in THREE framings — seg_NNN.warc, the
     * per-record-gzip seg_NNN.warc.gz, and chunked/segc_NNN.warc (every
     * response Transfer-Encoding: chunked, same origin bodies) — plus
@@ -610,32 +609,24 @@ object WarcFixture {
     * SUBDIRECTORIES so the flat-directory globs the crawl-composition
     * and streaming queries use keep their exact file set; q_warc_scan
     * lists the subdirectories explicitly. */
-  def ensure(): String = this.synchronized {
-    val out = new java.io.File(path)
-    if (!out.exists()) {
-      val tmp = new java.io.File(out.getParent, out.getName + ".tmp")
-      deleteRec(tmp)
-      tmp.mkdirs()
-      val chunkedDir = new java.io.File(tmp, "chunked")
-      chunkedDir.mkdirs()
-      val derivedDir = new java.io.File(tmp, "derived")
-      derivedDir.mkdirs()
-      (0 until count).foreach { i =>
-        java.nio.file.Files.write(
-          new java.io.File(tmp, f"seg_$i%03d.warc").toPath, warcBytes(i))
-        java.nio.file.Files.write(
-          new java.io.File(tmp, f"seg_$i%03d.warc.gz").toPath, warcGzBytes(i))
-        java.nio.file.Files.write(
-          new java.io.File(chunkedDir, f"segc_$i%03d.warc").toPath,
-          warcChunkedBytes(i))
-      }
-      (0 until derivedCount).foreach { i =>
-        java.nio.file.Files.write(
-          new java.io.File(derivedDir, f"segd_$i%03d.warc").toPath,
-          warcDerivedBytes(i))
-      }
-      if (!tmp.renameTo(out)) deleteRec(tmp)
+  def ensure(): String = Checkpoints.buildOnce(path) { tmp =>
+    val chunkedDir = new java.io.File(tmp, "chunked")
+    chunkedDir.mkdirs()
+    val derivedDir = new java.io.File(tmp, "derived")
+    derivedDir.mkdirs()
+    (0 until count).foreach { i =>
+      java.nio.file.Files.write(
+        new java.io.File(tmp, f"seg_$i%03d.warc").toPath, warcBytes(i))
+      java.nio.file.Files.write(
+        new java.io.File(tmp, f"seg_$i%03d.warc.gz").toPath, warcGzBytes(i))
+      java.nio.file.Files.write(
+        new java.io.File(chunkedDir, f"segc_$i%03d.warc").toPath,
+        warcChunkedBytes(i))
     }
-    path
+    (0 until derivedCount).foreach { i =>
+      java.nio.file.Files.write(
+        new java.io.File(derivedDir, f"segd_$i%03d.warc").toPath,
+        warcDerivedBytes(i))
+    }
   }
 }

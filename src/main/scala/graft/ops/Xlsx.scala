@@ -3,7 +3,6 @@ package graft.ops
 import java.util.zip.{CRC32, ZipEntry, ZipInputStream, ZipOutputStream}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import graft.ops.Checkpoints.deleteRec
 
 /** REAL XLSX ingestion (S1/S2 — the reference's actual entry format,
   * commercial_rfp_raw_data_ingestion_and_cleaning.py:286 reads .xlsx
@@ -291,18 +290,10 @@ object XlsxFixture {
       stored)
 
   /** Build the fixture if missing; returns [[path]]. */
-  def ensure(): String = this.synchronized {
-    val out = new java.io.File(path)
-    if (!out.exists()) {
-      val tmp = new java.io.File(out.getParent, out.getName + ".tmp")
-      deleteRec(tmp)
-      tmp.mkdirs()
-      (0 until count).foreach { i =>
-        java.nio.file.Files.write(
-          new java.io.File(tmp, f"wb_$i%03d.xlsx").toPath, workbookBytes(i))
-      }
-      if (!tmp.renameTo(out)) deleteRec(tmp)
+  def ensure(): String = Checkpoints.buildOnce(path) { tmp =>
+    (0 until count).foreach { i =>
+      java.nio.file.Files.write(
+        new java.io.File(tmp, f"wb_$i%03d.xlsx").toPath, workbookBytes(i))
     }
-    path
   }
 }

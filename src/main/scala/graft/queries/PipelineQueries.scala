@@ -587,8 +587,8 @@ object PipelineQueries {
       // Spark application id is unique per session, so each run owns its
       // dir; truncation still proves S11 semantics WITHIN a run because
       // Verify/Bench execute every query at least twice per session.
-      // (Content-keyed fixtures like the PNG corpus keep deterministic
-      // names — identical bytes make their race benign.)
+      // (Fixtures like the PNG corpus keep deterministic names: see
+      // Checkpoints.buildOnce.)
       val out = new java.io.File(
         System.getProperty("java.io.tmpdir"),
         "graft_docx_rt_" + java.util.UUID.nameUUIDFromBytes(

@@ -461,39 +461,30 @@ object StreamQueries {
     val stamp = s"$dir|$tag|${src.length()}|${src.lastModified()}"
     val key = java.security.MessageDigest.getInstance("MD5")
       .digest(stamp.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    val out = new java.io.File(
-      System.getProperty("java.io.tmpdir"), s"graft_stream_slices_$key")
-    this.synchronized {
-      if (!out.exists()) {
-        val tmp = new java.io.File(out.getParent, out.getName + ".tmp")
-        deleteRec(tmp)
-        tmp.mkdirs()
-        slices.zipWithIndex.foreach { case (slice, k) =>
-          // slices carry the NORMALIZED ts TIMESTAMP (Tables.events), so
-          // the stream reader consumes them without re-normalizing
-          val sdir = new java.io.File(tmp, s"build$k")
-          slice.coalesce(1).write.parquet(sdir.getAbsolutePath)
-          val part = sdir.listFiles()
-            .find(f => f.getName.startsWith("part-") &&
-              f.getName.endsWith(".parquet"))
-            .getOrElse(sys.error(s"no part file written for slice $k"))
-          val dst = new java.io.File(tmp, f"slice_$k%02d.parquet")
-          java.nio.file.Files.move(part.toPath, dst.toPath)
-          deleteRec(sdir)
-          // the file source replays in (mtime, path) order and ms-level
-          // mtimes of back-to-back writes can collide — stamp explicit
-          // ascending mtimes so slice order IS time order; fail loudly at
-          // build time if the filesystem refuses the stamp (silent
-          // failure would surface much later as an order-dependent
-          // q_stream_sessionize mismatch far from this cause)
-          require(dst.setLastModified(1700000000000L + k * 60000L),
-            s"could not stamp mtime on $dst")
-        }
-        if (!tmp.renameTo(out)) // lost a race: another session built it
-          deleteRec(tmp)
+    Checkpoints.buildOnce(new java.io.File(System.getProperty("java.io.tmpdir"),
+        s"graft_stream_slices_$key").getAbsolutePath) { tmp =>
+      slices.zipWithIndex.foreach { case (slice, k) =>
+        // slices carry the NORMALIZED ts TIMESTAMP (Tables.events), so
+        // the stream reader consumes them without re-normalizing
+        val sdir = new java.io.File(tmp, s"build$k")
+        slice.coalesce(1).write.parquet(sdir.getAbsolutePath)
+        val part = sdir.listFiles()
+          .find(f => f.getName.startsWith("part-") &&
+            f.getName.endsWith(".parquet"))
+          .getOrElse(sys.error(s"no part file written for slice $k"))
+        val dst = new java.io.File(tmp, f"slice_$k%02d.parquet")
+        java.nio.file.Files.move(part.toPath, dst.toPath)
+        deleteRec(sdir)
+        // the file source replays in (mtime, path) order and ms-level
+        // mtimes of back-to-back writes can collide — stamp explicit
+        // ascending mtimes so slice order IS time order; fail loudly at
+        // build time if the filesystem refuses the stamp (silent
+        // failure would surface much later as an order-dependent
+        // q_stream_sessionize mismatch far from this cause)
+        require(dst.setLastModified(1700000000000L + k * 60000L),
+          s"could not stamp mtime on $dst")
       }
     }
-    out.getAbsolutePath
   }
 
   /** readStream over [[slicedEventsDir]]: one micro-batch per time slice. */

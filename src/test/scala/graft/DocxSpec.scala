@@ -126,23 +126,23 @@ class DocxSpec extends SparkSpec {
 
   test("distributed sink writes one real .docx per row and the reader " +
       "closes the loop") {
-    val out = java.nio.file.Files.createTempDirectory("graft_docx_sink")
-      .toFile.getAbsolutePath
-    val df = spark.range(7).select(
-      concat(lit("doc_"), col("id"), lit(".docx")).as("file_name"),
-      concat(lit("Client Name: c"), col("id") % 3, lit("\nResponse: r"),
-        col("id")).as("doc_text"))
-    Docx.writeDocx(df, "file_name", "doc_text", out)
-    val files = new java.io.File(out).listFiles()
-      .filter(_.getName.endsWith(".docx"))
-    assert(files.length === 7)
-    val got = Docx.readDocs(
-        spark.read.format("binaryFile").load(out + "/*.docx"))
-      .collect().groupBy(_.file_name)
-      .map { case (f, ps) =>
-        f -> ps.sortBy(_.para_id).map(_.text).mkString("\n")
-      }
-    assert(got === (0 until 7).map(i =>
-      s"doc_$i.docx" -> s"Client Name: c${i % 3}\nResponse: r$i").toMap)
+    withTempDir("graft_docx_sink") { out =>
+      val df = spark.range(7).select(
+        concat(lit("doc_"), col("id"), lit(".docx")).as("file_name"),
+        concat(lit("Client Name: c"), col("id") % 3, lit("\nResponse: r"),
+          col("id")).as("doc_text"))
+      Docx.writeDocx(df, "file_name", "doc_text", out.getAbsolutePath)
+      val files = out.listFiles()
+        .filter(_.getName.endsWith(".docx"))
+      assert(files.length === 7)
+      val got = Docx.readDocs(
+          spark.read.format("binaryFile").load(s"$out/*.docx"))
+        .collect().groupBy(_.file_name)
+        .map { case (f, ps) =>
+          f -> ps.sortBy(_.para_id).map(_.text).mkString("\n")
+        }
+      assert(got === (0 until 7).map(i =>
+        s"doc_$i.docx" -> s"Client Name: c${i % 3}\nResponse: r$i").toMap)
+    }
   }
 }

@@ -1,28 +1,19 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
-
 /** Layout invariance: a query's result does not depend on the shuffle
   * width. Each width runs on its own `newSession()` (same SparkContext,
   * separate SQLConf), so the shared session's conf is never changed, and
   * with AQE partition coalescing off, so width 5 really runs 5 reducers.
-  * The digest is the bench's materialization — bit_xor of per-row
-  * xxhash64 over every column — plus the row count. */
+  * The digest is [[Materialize.digest]]: bit_xor of per-row xxhash64
+  * over every column, plus the row count. */
 class LayoutInvarianceSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
-
-  private def digest(df: DataFrame): (Long, Long) = {
-    val r = df.select(xxhash64(struct(df.columns.map(col).toIndexedSeq: _*)).as("h"))
-      .agg(expr("bit_xor(h)"), count(lit(1))).head()
-    (r.getLong(0), r.getLong(1))
-  }
 
   private def run(query: String, shufflePartitions: Int): (Long, Long) = {
     val s = spark.newSession()
     s.conf.set("spark.sql.shuffle.partitions", shufflePartitions.toString)
     s.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    digest(Registry.byName(query).fn(s, dir))
+    Materialize.digest(Registry.byName(query).fn(s, dir))
   }
 
   for (query <- Seq("q_clean", "q_pipeline_e2e", "q_docx_roundtrip"))

@@ -150,24 +150,25 @@ class MultimodalSpec extends SparkSpec {
       }
       val baos = new java.io.ByteArrayOutputStream()
       assert(javax.imageio.ImageIO.write(img, "png", baos))
-      val out = java.nio.file.Files.createTempDirectory("graft_png_rt")
-      java.nio.file.Files.write(out.resolve("rt.png"), baos.toByteArray)
-      val got = graft.ops.MediaCodec.decodePng(
-          spark.read.format("binaryFile").load(out.toString + "/rt.png"))
-        .collect().map(r => r.channel -> r).toMap
-      val bpp = kind match { case 0 => 3; case 1 => 4; case _ => 1 }
-      assert(got.size === bpp)
-      for (c <- 0 until bpp) {
-        val vs = for (x <- 0 until w; y <- 0 until h) yield (y, px(x, y, c))
-        val r = got(c)
-        assert(r.width === w && r.height === h)
-        assert(r.color_type === (kind match {
-          case 0 => 2; case 1 => 6; case _ => 0 }))
-        assert(r.n_px === w.toLong * h)
-        assert(r.sum_v === vs.map(_._2.toLong).sum,
-          s"i=$i c=$c sum mismatch")
-        assert(r.row_weighted === vs.map { case (y, v) =>
-          (y + 1).toLong * v }.sum, s"i=$i c=$c row_weighted mismatch")
+      withTempDir("graft_png_rt") { out =>
+        java.nio.file.Files.write(out.toPath.resolve("rt.png"), baos.toByteArray)
+        val got = graft.ops.MediaCodec.decodePng(
+            spark.read.format("binaryFile").load(out.toString + "/rt.png"))
+          .collect().map(r => r.channel -> r).toMap
+        val bpp = kind match { case 0 => 3; case 1 => 4; case _ => 1 }
+        assert(got.size === bpp)
+        for (c <- 0 until bpp) {
+          val vs = for (x <- 0 until w; y <- 0 until h) yield (y, px(x, y, c))
+          val r = got(c)
+          assert(r.width === w && r.height === h)
+          assert(r.color_type === (kind match {
+            case 0 => 2; case 1 => 6; case _ => 0 }))
+          assert(r.n_px === w.toLong * h)
+          assert(r.sum_v === vs.map(_._2.toLong).sum,
+            s"i=$i c=$c sum mismatch")
+          assert(r.row_weighted === vs.map { case (y, v) =>
+            (y + 1).toLong * v }.sum, s"i=$i c=$c row_weighted mismatch")
+        }
       }
     }
   }

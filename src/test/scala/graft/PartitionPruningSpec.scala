@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 /** Partition pruning: the Tables scan layer's 100 TB posture is that the
@@ -11,22 +10,22 @@ import org.apache.spark.sql.functions._
 class PartitionPruningSpec extends SparkSpec {
 
   test("filter on the partition column prunes to one partition") {
-    val dir = Files.createTempDirectory("graft-part").toFile
-    dir.deleteOnExit()
-    val out = s"${dir.getAbsolutePath}/documents_by_lang"
-    Tables.documents(spark, "/root/testdata/sf0.001")
-      .write.partitionBy("lang").mode("overwrite").parquet(out)
+    withTempDir("graft-part") { dir =>
+      val out = s"${dir.getAbsolutePath}/documents_by_lang"
+      Tables.documents(spark, "/root/testdata/sf0.001")
+        .write.partitionBy("lang").mode("overwrite").parquet(out)
 
-    val q = spark.read.parquet(out).filter(col("lang") === "de")
-      .groupBy("source").agg(count(lit(1)).as("n"))
-    val plan = q.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("lang#"))
+      val q = spark.read.parquet(out).filter(col("lang") === "de")
+        .groupBy("source").agg(count(lit(1)).as("n"))
+      val plan = q.queryExecution.executedPlan.toString
+      assert(plan.contains("PartitionFilters") && plan.contains("lang#"))
 
-    // pruning is observable, not just planned: the filtered read returns
-    // exactly the single partition directory's rows
-    val deOnly = spark.read.parquet(s"$out/lang=de").count()
-    assert(deOnly > 0)
-    assert(q.agg(sum("n")).as[Long](org.apache.spark.sql.Encoders.scalaLong)
-      .head() === deOnly)
+      // pruning is observable, not just planned: the filtered read returns
+      // exactly the single partition directory's rows
+      val deOnly = spark.read.parquet(s"$out/lang=de").count()
+      assert(deOnly > 0)
+      assert(q.agg(sum("n")).as[Long](org.apache.spark.sql.Encoders.scalaLong)
+        .head() === deOnly)
+    }
   }
 }

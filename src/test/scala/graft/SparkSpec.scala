@@ -2,12 +2,14 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.ops.Checkpoints
 
 /** Shared local session for all specs (one JVM-wide session — Spark
   * startup dominates test time otherwise). */
 object SparkTestSession {
   lazy val get: SparkSession = {
     val wh = java.nio.file.Files.createTempDirectory("graft-warehouse")
+    sys.addShutdownHook(Checkpoints.deleteRec(wh.toFile))
     val s = Sessions.builder("4").appName("graft-test")
       .config("spark.sql.warehouse.dir", wh.toString)
       .getOrCreate()
@@ -16,7 +18,16 @@ object SparkTestSession {
   }
 }
 
-trait SparkSpec extends AnyFunSuite {
+/** Scratch dirs for specs. `File.deleteOnExit` skips a directory that
+  * still holds files, so every spec dir is deleted recursively here. */
+trait TempDirs {
+  def withTempDir[T](prefix: String)(body: java.io.File => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
+    try body(dir) finally Checkpoints.deleteRec(dir)
+  }
+}
+
+trait SparkSpec extends AnyFunSuite with TempDirs {
   lazy val spark: SparkSession = SparkTestSession.get
 
   /** Runs a ScalaCheck property and fails the ScalaTest test if it does

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.queries.RetrievalQueries
@@ -64,46 +63,46 @@ class StreamBm25Spec extends SparkSpec {
     // nothing; "" has dl=1 (one empty token); edge tabs survive the
     // space-only trim and produce an empty edge token — all three must
     // move the streamed scores exactly as they move the batch plan's
-    val dir = Files.createTempDirectory("graft-bm25-crafted").toFile
-    dir.deleteOnExit()
-    val src = s"${dir.getAbsolutePath}/docs"
-    val docs = Seq(
-      (1L, "g", "join join vector stays hot"),
-      (2L, "g", "\tjoin filter\n"),
-      (3L, "g", "stream stream stream cold filter"),
-      (4L, "g", "no match here"),
-      (5L, "g", ""),
-      (6L, "g", null.asInstanceOf[String]),
-      (7L, "h", "  vector  "),
-      (8L, "h", "vector vector join")
-    ).toDF("doc_id", "source", "text")
-    docs.coalesce(1).write.parquet(src)
-    assert(runStream(src, None) === batchTop(docs),
-      "crafted-corpus stream != batch BM25")
+    withTempDir("graft-bm25-crafted") { dir =>
+      val src = s"${dir.getAbsolutePath}/docs"
+      val docs = Seq(
+        (1L, "g", "join join vector stays hot"),
+        (2L, "g", "\tjoin filter\n"),
+        (3L, "g", "stream stream stream cold filter"),
+        (4L, "g", "no match here"),
+        (5L, "g", ""),
+        (6L, "g", null.asInstanceOf[String]),
+        (7L, "h", "  vector  "),
+        (8L, "h", "vector vector join")
+      ).toDF("doc_id", "source", "text")
+      docs.coalesce(1).write.parquet(src)
+      assert(runStream(src, None) === batchTop(docs),
+        "crafted-corpus stream != batch BM25")
+    }
   }
 
   test("streamed ranking equals batch at each stage, across a restart") {
-    val dir = Files.createTempDirectory("graft-bm25").toFile
-    dir.deleteOnExit()
-    val src = s"${dir.getAbsolutePath}/docs"
-    val ckpt = s"${dir.getAbsolutePath}/ckpt"
+    withTempDir("graft-bm25") { dir =>
+      val src = s"${dir.getAbsolutePath}/docs"
+      val ckpt = s"${dir.getAbsolutePath}/ckpt"
 
-    // range split keeping every source group in both halves: corpus
-    // stats (N, avgdl, df) must hand off for scores to stay exact
-    val whole = Tables.documents(spark, "/root/testdata/sf0.001")
-      .select("doc_id", "source", "text")
-    val half1 = whole.filter(col("doc_id") < 250)
-    val half2 = whole.filter(col("doc_id") >= 250)
+      // range split keeping every source group in both halves: corpus
+      // stats (N, avgdl, df) must hand off for scores to stay exact
+      val whole = Tables.documents(spark, "/root/testdata/sf0.001")
+        .select("doc_id", "source", "text")
+      val half1 = whole.filter(col("doc_id") < 250)
+      val half2 = whole.filter(col("doc_id") >= 250)
 
-    half1.coalesce(1).write.parquet(src)
-    val stage1 = runStream(src, Some(ckpt))
-    assert(stage1 === batchTop(half1), "stage-1 stream != batch BM25 of half 1")
+      half1.coalesce(1).write.parquet(src)
+      val stage1 = runStream(src, Some(ckpt))
+      assert(stage1 === batchTop(half1), "stage-1 stream != batch BM25 of half 1")
 
-    // a NEW query run recovers corpus state from the checkpoint; the
-    // second half shifts N/avgdl/df, re-scoring every earlier posting
-    half2.coalesce(1).write.mode("append").parquet(src)
-    val stage2 = runStream(src, Some(ckpt))
-    assert(stage2 === batchTop(whole), "restarted stream != batch BM25 of whole")
-    assert(stage2 != stage1, "second half moved no ranking — fixture too weak")
+      // a NEW query run recovers corpus state from the checkpoint; the
+      // second half shifts N/avgdl/df, re-scoring every earlier posting
+      half2.coalesce(1).write.mode("append").parquet(src)
+      val stage2 = runStream(src, Some(ckpt))
+      assert(stage2 === batchTop(whole), "restarted stream != batch BM25 of whole")
+      assert(stage2 != stage1, "second half moved no ranking — fixture too weak")
+    }
   }
 }

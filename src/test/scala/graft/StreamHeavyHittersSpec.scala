@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.streaming.Trigger
 import graft.streaming.Streams
 
@@ -55,37 +54,37 @@ class StreamHeavyHittersSpec extends SparkSpec {
   }
 
   test("guarantees hold across micro-batches and a checkpoint restart") {
-    val dir = Files.createTempDirectory("graft-hh-stream").toFile
-    dir.deleteOnExit()
-    val src = s"${dir.getAbsolutePath}/rows"
-    val ckpt = s"${dir.getAbsolutePath}/ckpt"
+    withTempDir("graft-hh-stream") { dir =>
+      val src = s"${dir.getAbsolutePath}/rows"
+      val ckpt = s"${dir.getAbsolutePath}/ckpt"
 
-    val all = rows
-    val (half1, half2) = all.splitAt(all.length / 2)
-    half1.toDF("g", "key").coalesce(1).write.parquet(src)
-    runOnce(src, ckpt)
-    // restart folds the second half into checkpoint-recovered state
-    half2.toDF("g", "key").coalesce(1).write.mode("append").parquet(src)
-    val sk = runOnce(src, ckpt)
+      val all = rows
+      val (half1, half2) = all.splitAt(all.length / 2)
+      half1.toDF("g", "key").coalesce(1).write.parquet(src)
+      runOnce(src, ckpt)
+      // restart folds the second half into checkpoint-recovered state
+      half2.toDF("g", "key").coalesce(1).write.mode("append").parquet(src)
+      val sk = runOnce(src, ckpt)
 
-    // truth over NON-NULL keys only: gotN === n below therefore pins the
-    // null-exclusion contract (the fixture carries 50+25 null rows)
-    val truth = all.filter(_._2 != null).groupBy(_._1).view.mapValues(
-      _.map(_._2).groupBy(identity).view.mapValues(_.size.toLong).toMap).toMap
-    truth.foreach { case (g, exact) =>
-      val n = exact.values.sum
-      val (gotN, est) = sk(g)
-      assert(gotN === n,
-        s"$g: total must be exact (and null-free) across the restart")
-      assert(est.size <= m)
-      est.foreach { case (k, e) =>
-        assert(e <= exact(k), s"$g/$k overcounted")
-        assert(exact(k) - e <= n / (m + 1), s"$g/$k undercount bound broken")
+      // truth over NON-NULL keys only: gotN === n below therefore pins the
+      // null-exclusion contract (the fixture carries 50+25 null rows)
+      val truth = all.filter(_._2 != null).groupBy(_._1).view.mapValues(
+        _.map(_._2).groupBy(identity).view.mapValues(_.size.toLong).toMap).toMap
+      truth.foreach { case (g, exact) =>
+        val n = exact.values.sum
+        val (gotN, est) = sk(g)
+        assert(gotN === n,
+          s"$g: total must be exact (and null-free) across the restart")
+        assert(est.size <= m)
+        est.foreach { case (k, e) =>
+          assert(e <= exact(k), s"$g/$k overcounted")
+          assert(exact(k) - e <= n / (m + 1), s"$g/$k undercount bound broken")
+        }
+        val heavies = exact.filter { case (_, c) => c > n / (m + 1) }.keySet
+        assert(heavies.nonEmpty, s"$g fixture must have heavies")
+        assert(heavies.subsetOf(est.keySet),
+          s"$g lost a heavy key across batching: $heavies vs ${est.keySet}")
       }
-      val heavies = exact.filter { case (_, c) => c > n / (m + 1) }.keySet
-      assert(heavies.nonEmpty, s"$g fixture must have heavies")
-      assert(heavies.subsetOf(est.keySet),
-        s"$g lost a heavy key across batching: $heavies vs ${est.keySet}")
     }
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.queries.AnalyticsQueries
@@ -22,48 +21,48 @@ class StreamMomentsSpec extends SparkSpec {
       .map { case (g, n, mean, std) => g -> ((n, mean, std)) }.toMap
 
   test("streamed moments equal the batch query at each stage, across a restart") {
-    val dir = Files.createTempDirectory("graft-moments").toFile
-    dir.deleteOnExit()
-    val src = s"${dir.getAbsolutePath}/events"
-    val ckpt = s"${dir.getAbsolutePath}/ckpt"
+    withTempDir("graft-moments") { dir =>
+      val src = s"${dir.getAbsolutePath}/events"
+      val ckpt = s"${dir.getAbsolutePath}/ckpt"
 
-    // split by event_id range: every event_type appears in both halves,
-    // so every group's state must carry across the restart
-    val whole = Tables.events(spark, "/root/testdata/sf0.001")
-      .select("event_id", "event_type", "value")
-    val half1 = whole.filter(col("event_id") % 2 === 0)
-    val half2 = whole.filter(col("event_id") % 2 === 1)
+      // split by event_id range: every event_type appears in both halves,
+      // so every group's state must carry across the restart
+      val whole = Tables.events(spark, "/root/testdata/sf0.001")
+        .select("event_id", "event_type", "value")
+      val half1 = whole.filter(col("event_id") % 2 === 0)
+      val half2 = whole.filter(col("event_id") % 2 === 1)
 
-    def runOnce(): Map[String, (Long, Double, Double)] = {
-      val got = scala.collection.mutable.Map[String, (Long, Double, Double)]()
-      val schema = spark.read.parquet(src).schema
-      val stream = spark.readStream.schema(schema).parquet(src)
-      val q = Streams.momentsStream(stream, "event_type", "value")
-        .toDF("event_type", "n", "mean_value", "std_value")
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          batch.as[(String, Long, Double, Double)].collect()
-            .foreach { case (g, n, m, s) =>
-              got.synchronized { got(g) = (n, m, s) } }
-        }
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      assert(q.awaitTermination(120000), "stream did not finish in 120 s")
-      got.toMap
-    }
+      def runOnce(): Map[String, (Long, Double, Double)] = {
+        val got = scala.collection.mutable.Map[String, (Long, Double, Double)]()
+        val schema = spark.read.parquet(src).schema
+        val stream = spark.readStream.schema(schema).parquet(src)
+        val q = Streams.momentsStream(stream, "event_type", "value")
+          .toDF("event_type", "n", "mean_value", "std_value")
+          .writeStream
+          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+            batch.as[(String, Long, Double, Double)].collect()
+              .foreach { case (g, n, m, s) =>
+                got.synchronized { got(g) = (n, m, s) } }
+          }
+          .outputMode("update")
+          .option("checkpointLocation", ckpt)
+          .trigger(Trigger.AvailableNow())
+          .start()
+        assert(q.awaitTermination(120000), "stream did not finish in 120 s")
+        got.toMap
+      }
 
-    half1.coalesce(1).write.parquet(src)
-    val stage1 = runOnce()
-    assert(stage1 === batchOf(half1), "stage-1 stream != batch of half 1")
+      half1.coalesce(1).write.parquet(src)
+      val stage1 = runOnce()
+      assert(stage1 === batchOf(half1), "stage-1 stream != batch of half 1")
 
-    half2.coalesce(1).write.mode("append").parquet(src)
-    val stage2 = runOnce() // new query run: state recovered from ckpt
-    assert(stage2 === batchOf(whole), "post-restart stream != batch of all")
-    assert(stage2.keySet === stage1.keySet)
-    stage2.foreach { case (g, (n2, _, _)) =>
-      assert(n2 > stage1(g)._1, s"group $g count did not grow")
+      half2.coalesce(1).write.mode("append").parquet(src)
+      val stage2 = runOnce() // new query run: state recovered from ckpt
+      assert(stage2 === batchOf(whole), "post-restart stream != batch of all")
+      assert(stage2.keySet === stage1.keySet)
+      stage2.foreach { case (g, (n2, _, _)) =>
+        assert(n2 > stage1(g)._1, s"group $g count did not grow")
+      }
     }
   }
 }

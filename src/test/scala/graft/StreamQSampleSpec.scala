@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.ops.Sketch
@@ -32,51 +31,51 @@ class StreamQSampleSpec extends SparkSpec {
   }
 
   test("streamed sample quantiles equal the batch sketch at each stage, across a restart") {
-    val dir = Files.createTempDirectory("graft-qsample").toFile
-    dir.deleteOnExit()
-    val src = s"${dir.getAbsolutePath}/events"
-    val ckpt = s"${dir.getAbsolutePath}/ckpt"
+    withTempDir("graft-qsample") { dir =>
+      val src = s"${dir.getAbsolutePath}/events"
+      val ckpt = s"${dir.getAbsolutePath}/ckpt"
 
-    // split by event_id parity: every event_type appears in both halves,
-    // so every group's sample must fold across the restart — and because
-    // selection is by hash, the SAME final state must emerge as from any
-    // other split
-    val whole = Tables.events(spark, "/root/testdata/sf0.001")
-      .select("event_id", "event_type", "value")
-    val half1 = whole.filter(col("event_id") % 2 === 0)
-    val half2 = whole.filter(col("event_id") % 2 === 1)
+      // split by event_id parity: every event_type appears in both halves,
+      // so every group's sample must fold across the restart — and because
+      // selection is by hash, the SAME final state must emerge as from any
+      // other split
+      val whole = Tables.events(spark, "/root/testdata/sf0.001")
+        .select("event_id", "event_type", "value")
+      val half1 = whole.filter(col("event_id") % 2 === 0)
+      val half2 = whole.filter(col("event_id") % 2 === 1)
 
-    def runOnce(): Map[String, (Long, Long, Double, Double, Double)] = {
-      val got = scala.collection.mutable
-        .Map[String, (Long, Long, Double, Double, Double)]()
-      val schema = spark.read.parquet(src).schema
-      val stream = spark.readStream.schema(schema).parquet(src)
-      val q = Streams.qsampleStream(stream, "event_type", "event_id",
-          "value", k)
-        .toDF("event_type", "n", "m", "p50", "p90", "p99")
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          batch.as[(String, Long, Long, Double, Double, Double)].collect()
-            .foreach { case (g, n, m, a, b, c) =>
-              got.synchronized { got(g) = (n, m, a, b, c) } }
-        }
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      assert(q.awaitTermination(120000), "stream did not finish in 120 s")
-      got.toMap
-    }
+      def runOnce(): Map[String, (Long, Long, Double, Double, Double)] = {
+        val got = scala.collection.mutable
+          .Map[String, (Long, Long, Double, Double, Double)]()
+        val schema = spark.read.parquet(src).schema
+        val stream = spark.readStream.schema(schema).parquet(src)
+        val q = Streams.qsampleStream(stream, "event_type", "event_id",
+            "value", k)
+          .toDF("event_type", "n", "m", "p50", "p90", "p99")
+          .writeStream
+          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+            batch.as[(String, Long, Long, Double, Double, Double)].collect()
+              .foreach { case (g, n, m, a, b, c) =>
+                got.synchronized { got(g) = (n, m, a, b, c) } }
+          }
+          .outputMode("update")
+          .option("checkpointLocation", ckpt)
+          .trigger(Trigger.AvailableNow())
+          .start()
+        assert(q.awaitTermination(120000), "stream did not finish in 120 s")
+        got.toMap
+      }
 
-    half1.coalesce(1).write.parquet(src)
-    val stage1 = runOnce()
-    assert(stage1 === batchOf(half1), "stage-1 stream != batch of half 1")
+      half1.coalesce(1).write.parquet(src)
+      val stage1 = runOnce()
+      assert(stage1 === batchOf(half1), "stage-1 stream != batch of half 1")
 
-    half2.coalesce(1).write.mode("append").parquet(src)
-    val stage2 = runOnce() // new query run: sample state recovered from ckpt
-    assert(stage2 === batchOf(whole), "post-restart stream != batch of all")
-    stage2.foreach { case (g, (n2, _, _, _, _)) =>
-      assert(n2 > stage1(g)._1, s"group $g count did not grow")
+      half2.coalesce(1).write.mode("append").parquet(src)
+      val stage2 = runOnce() // new query run: sample state recovered from ckpt
+      assert(stage2 === batchOf(whole), "post-restart stream != batch of all")
+      stage2.foreach { case (g, (n2, _, _, _, _)) =>
+        assert(n2 > stage1(g)._1, s"group $g count did not grow")
+      }
     }
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.ops.Shingles
@@ -35,53 +34,16 @@ class StreamTopTermsSpec extends SparkSpec {
     // SQL trim strips only U+0020: a text with edge '\t'/'\n' keeps that
     // whitespace, and split('\s+', -1) then emits an edge "" token. The
     // stream must reproduce exactly that (a Java String.trim would not).
-    val dir = Files.createTempDirectory("graft-topterms-ws").toFile
-    dir.deleteOnExit()
-    val src = s"${dir.getAbsolutePath}/docs"
-    val docs = Seq(
-      (1L, "g", "\tAlpha beta\n"), (2L, "g", "  alpha Beta  "),
-      (3L, "g", "beta\tgamma"), (4L, "g", ""),
-      (5L, "g", null.asInstanceOf[String]) // batch explode drops NULL text
-    ).toDF("doc_id", "source", "text")
-    docs.coalesce(1).write.parquet(src)
-    val got = scala.collection.mutable.Map[String, Seq[(Int, String, Long, Long)]]()
-    val stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
-    val q = Streams.topTermsStream(stream, "source", "text", k)
-      .toDF("source", "rk", "tok", "tf", "df")
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        batch.as[(String, Int, String, Long, Long)].collect()
-          .groupBy(_._1).foreach { case (g, rows) =>
-            got.synchronized {
-              got(g) = rows.toSeq.sortBy(_._2)
-                .map { case (_, rk, t, c, d) => (rk, t, c, d) }
-            }
-          }
-      }
-      .outputMode("update")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    assert(q.awaitTermination(120000), "stream did not finish in 120 s")
-    assert(got.toMap === batchTop(docs), "edge-whitespace tokenization diverged")
-  }
-
-  test("streamed top-k equals the batch top-k at each stage, across a restart") {
-    val dir = Files.createTempDirectory("graft-topterms").toFile
-    dir.deleteOnExit()
-    val src = s"${dir.getAbsolutePath}/docs"
-    val ckpt = s"${dir.getAbsolutePath}/ckpt"
-
-    // range split so both halves contain every source group — the term
-    // state must hand off across batches for every group
-    val whole = Tables.documents(spark, "/root/testdata/sf0.001")
-      .select("doc_id", "source", "text")
-    val half1 = whole.filter(col("doc_id") < 250)
-    val half2 = whole.filter(col("doc_id") >= 250)
-
-    def runOnce(): Map[String, Seq[(Int, String, Long, Long)]] = {
+    withTempDir("graft-topterms-ws") { dir =>
+      val src = s"${dir.getAbsolutePath}/docs"
+      val docs = Seq(
+        (1L, "g", "\tAlpha beta\n"), (2L, "g", "  alpha Beta  "),
+        (3L, "g", "beta\tgamma"), (4L, "g", ""),
+        (5L, "g", null.asInstanceOf[String]) // batch explode drops NULL text
+      ).toDF("doc_id", "source", "text")
+      docs.coalesce(1).write.parquet(src)
       val got = scala.collection.mutable.Map[String, Seq[(Int, String, Long, Long)]]()
-      val schema = spark.read.parquet(src).schema
-      val stream = spark.readStream.schema(schema).parquet(src)
+      val stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
       val q = Streams.topTermsStream(stream, "source", "text", k)
         .toDF("source", "rk", "tok", "tf", "df")
         .writeStream
@@ -95,23 +57,60 @@ class StreamTopTermsSpec extends SparkSpec {
             }
         }
         .outputMode("update")
-        .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
         .start()
       assert(q.awaitTermination(120000), "stream did not finish in 120 s")
-      got.toMap
+      assert(got.toMap === batchTop(docs), "edge-whitespace tokenization diverged")
     }
+  }
 
-    half1.coalesce(1).write.parquet(src)
-    val stage1 = runOnce()
-    assert(stage1 === batchTop(half1), "stage-1 stream != batch top-k of half 1")
+  test("streamed top-k equals the batch top-k at each stage, across a restart") {
+    withTempDir("graft-topterms") { dir =>
+      val src = s"${dir.getAbsolutePath}/docs"
+      val ckpt = s"${dir.getAbsolutePath}/ckpt"
 
-    // stage 2: a NEW query run recovers (tf, df) from the checkpointed
-    // state store and folds the second half in
-    half2.coalesce(1).write.mode("append").parquet(src)
-    val stage2 = runOnce()
-    assert(stage2 === batchTop(whole), "restarted stream != batch top-k of whole")
-    // the second half genuinely moved some group's ranking or counts
-    assert(stage2 != stage1)
+      // range split so both halves contain every source group — the term
+      // state must hand off across batches for every group
+      val whole = Tables.documents(spark, "/root/testdata/sf0.001")
+        .select("doc_id", "source", "text")
+      val half1 = whole.filter(col("doc_id") < 250)
+      val half2 = whole.filter(col("doc_id") >= 250)
+
+      def runOnce(): Map[String, Seq[(Int, String, Long, Long)]] = {
+        val got = scala.collection.mutable.Map[String, Seq[(Int, String, Long, Long)]]()
+        val schema = spark.read.parquet(src).schema
+        val stream = spark.readStream.schema(schema).parquet(src)
+        val q = Streams.topTermsStream(stream, "source", "text", k)
+          .toDF("source", "rk", "tok", "tf", "df")
+          .writeStream
+          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+            batch.as[(String, Int, String, Long, Long)].collect()
+              .groupBy(_._1).foreach { case (g, rows) =>
+                got.synchronized {
+                  got(g) = rows.toSeq.sortBy(_._2)
+                    .map { case (_, rk, t, c, d) => (rk, t, c, d) }
+                }
+              }
+          }
+          .outputMode("update")
+          .option("checkpointLocation", ckpt)
+          .trigger(Trigger.AvailableNow())
+          .start()
+        assert(q.awaitTermination(120000), "stream did not finish in 120 s")
+        got.toMap
+      }
+
+      half1.coalesce(1).write.parquet(src)
+      val stage1 = runOnce()
+      assert(stage1 === batchTop(half1), "stage-1 stream != batch top-k of half 1")
+
+      // stage 2: a NEW query run recovers (tf, df) from the checkpointed
+      // state store and folds the second half in
+      half2.coalesce(1).write.mode("append").parquet(src)
+      val stage2 = runOnce()
+      assert(stage2 === batchTop(whole), "restarted stream != batch top-k of whole")
+      // the second half genuinely moved some group's ranking or counts
+      assert(stage2 != stage1)
+    }
   }
 }

@@ -271,9 +271,7 @@ class TarSpec extends SparkSpec {
       ("doc_0.cls", "7"),
       ("doc_1.txt", "accented café — naïve résumé 日本語"),
       ("doc_1.cls", "3"))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_tar_rt_spec").toFile
-    try {
+    withTempDir("graft_tar_rt_spec") { dir =>
       Tar.writeShards(rows.toDF("m_name", "m_text").repartition(2),
         "m_name", "m_text", dir.getAbsolutePath)
       val got = Tar.scanTar(spark.read.format("binaryFile")
@@ -285,9 +283,6 @@ class TarSpec extends SparkSpec {
         assert(got(n).size === t.getBytes("UTF-8").length.toLong,
           "header size must be the UTF-8 octet count")
       }
-    } finally {
-      Option(dir.listFiles()).foreach(_.foreach(_.delete()))
-      dir.delete()
     }
   }
 

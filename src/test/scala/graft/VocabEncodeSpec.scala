@@ -12,21 +12,22 @@ class VocabEncodeSpec extends SparkSpec {
   import spark.implicits._
 
   private def run(docs: Seq[(Long, String)]): Map[Long, (Long, Long, String)] =
-    graft.queries.TextQueries.qVocabEncode
-      .fn(spark, stage(docs)) // fn reads documents.parquet from a dir
-      .collect().map(r => r.getLong(0) ->
-        ((r.getLong(1), r.getLong(2), r.getString(3)))).toMap
+    staged(docs) { dir =>
+      graft.queries.TextQueries.qVocabEncode
+        .fn(spark, dir) // fn reads documents.parquet from a dir
+        .collect().map(r => r.getLong(0) ->
+          ((r.getLong(1), r.getLong(2), r.getString(3)))).toMap
+    }
 
   // stage a documents.parquet the query body can read
-  private def stage(docs: Seq[(Long, String)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-vocab").toFile
-    dir.deleteOnExit()
-    docs.toDF("doc_id", "text")
-      .withColumn("lang", lit("en")).withColumn("source", lit("s"))
-      .withColumn("n_chars", length(col("text")))
-      .write.mode("overwrite").parquet(s"${dir.getAbsolutePath}/documents.parquet")
-    dir.getAbsolutePath
-  }
+  private def staged[T](docs: Seq[(Long, String)])(body: String => T): T =
+    withTempDir("graft-vocab") { dir =>
+      docs.toDF("doc_id", "text")
+        .withColumn("lang", lit("en")).withColumn("source", lit("s"))
+        .withColumn("n_chars", length(col("text")))
+        .write.mode("overwrite").parquet(s"${dir.getAbsolutePath}/documents.parquet")
+      body(dir.getAbsolutePath)
+    }
 
   /** Plain-Scala model of the query: top-24 terms by (freq desc, tok),
     * id = rank; encode in document order, OOV → 0. */

@@ -113,29 +113,29 @@ class XlsxSpec extends SparkSpec {
       "and the typed reader closes the loop") {
     import graft.ops.{Xlsx, XlsxSink}
     import org.apache.spark.sql.functions._
-    val out = java.nio.file.Files.createTempDirectory("graft_xlsx_sink")
-      .toFile.getAbsolutePath
-    val df = spark.range(10).select(
-      concat(lit("client_"), (col("id") % 3).cast("string")).as("client"),
-      (col("id") * 7).as("amount"),
-      concat(lit("note_"), col("id").cast("string")).as("note"))
-    XlsxSink.writeWorkbooks(df.coalesce(1), out)
-    val files = new java.io.File(out).listFiles().filter(_.getName.endsWith(".xlsx"))
-    assert(files.length === 1) // coalesce(1): the reference's one-artifact shape
-    val back = Xlsx.readWorkbooks(
-        spark.read.format("binaryFile").load(files.head.getAbsolutePath))
-      .collect().sortBy(_.row_id)
-    assert(back.length === 10)
-    assert(back.map(r => (r.client, r.amount, r.note)).toSeq ===
-      df.collect().toSeq.map(r => (r.getString(0), r.getLong(1), r.getString(2))))
-    // multi-partition: one file per non-empty partition
-    val out2 = java.nio.file.Files.createTempDirectory("graft_xlsx_sink2")
-      .toFile.getAbsolutePath
-    XlsxSink.writeWorkbooks(df.repartition(4), out2, prefix = "p")
-    val n2 = new java.io.File(out2).listFiles().count(_.getName.endsWith(".xlsx"))
-    assert(n2 >= 2 && n2 <= 4)
-    assert(Xlsx.readWorkbooks(spark.read.format("binaryFile")
-      .load(s"$out2/*.xlsx")).count() === 10)
+    withTempDir("graft_xlsx_sink") { out =>
+      val df = spark.range(10).select(
+        concat(lit("client_"), (col("id") % 3).cast("string")).as("client"),
+        (col("id") * 7).as("amount"),
+        concat(lit("note_"), col("id").cast("string")).as("note"))
+      XlsxSink.writeWorkbooks(df.coalesce(1), out.getAbsolutePath)
+      val files = out.listFiles().filter(_.getName.endsWith(".xlsx"))
+      assert(files.length === 1) // coalesce(1): the reference's one-artifact shape
+      val back = Xlsx.readWorkbooks(
+          spark.read.format("binaryFile").load(files.head.getAbsolutePath))
+        .collect().sortBy(_.row_id)
+      assert(back.length === 10)
+      assert(back.map(r => (r.client, r.amount, r.note)).toSeq ===
+        df.collect().toSeq.map(r => (r.getString(0), r.getLong(1), r.getString(2))))
+      // multi-partition: one file per non-empty partition
+      withTempDir("graft_xlsx_sink2") { out2 =>
+        XlsxSink.writeWorkbooks(df.repartition(4), out2.getAbsolutePath, prefix = "p")
+        val n2 = out2.listFiles().count(_.getName.endsWith(".xlsx"))
+        assert(n2 >= 2 && n2 <= 4)
+        assert(Xlsx.readWorkbooks(spark.read.format("binaryFile")
+          .load(s"$out2/*.xlsx")).count() === 10)
+      }
+    }
   }
 
   test("reader runs distributed over the binaryFile source") {

@@ -9,15 +9,14 @@ import org.apache.spark.sql.functions._
 class ZipfSpec extends SparkSpec {
   import spark.implicits._
 
-  private def stage(docs: Seq[(Long, String)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-zipf").toFile
-    dir.deleteOnExit()
-    docs.toDF("doc_id", "text")
-      .withColumn("lang", lit("en")).withColumn("source", lit("s"))
-      .withColumn("n_chars", length(col("text")))
-      .write.mode("overwrite").parquet(s"${dir.getAbsolutePath}/documents.parquet")
-    dir.getAbsolutePath
-  }
+  private def staged[T](docs: Seq[(Long, String)])(body: String => T): T =
+    withTempDir("graft-zipf") { dir =>
+      docs.toDF("doc_id", "text")
+        .withColumn("lang", lit("en")).withColumn("source", lit("s"))
+        .withColumn("n_chars", length(col("text")))
+        .write.mode("overwrite").parquet(s"${dir.getAbsolutePath}/documents.parquet")
+      body(dir.getAbsolutePath)
+    }
 
   /** The documented arithmetic, independently: freq → (rank, freq) by
     * (c desc, tok) over the top-100 → x=round(ln rk·1e6), y=round(ln c·1e6)
@@ -38,8 +37,9 @@ class ZipfSpec extends SparkSpec {
   test("hand-counted corpus: vocab stats exact, slope matches the replay") {
     // freqs by construction: a:6 b:3 c:1 d:1 → vocab 4, total 11,
     // hapax 2 (c, d), ratio 0.5; ranks a<b<c<d by (freq desc, tok)
-    val dir = stage(Seq(1L -> "a a a a b b c", 2L -> "a a b d"))
-    val r = graft.queries.TextQueries.qZipf.fn(spark, dir).collect()
+    val r = staged(Seq(1L -> "a a a a b b c", 2L -> "a a b d")) { dir =>
+      graft.queries.TextQueries.qZipf.fn(spark, dir).collect()
+    }
     assert(r.length == 1)
     val row = r.head
     assert(row.getLong(0) == 4L, "vocab_size")
