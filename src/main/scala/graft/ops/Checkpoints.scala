@@ -94,7 +94,7 @@ object Checkpoints {
     *    are swept when a build starts;
     *  - within one JVM at most one build per `path` runs at a time.
     * Every build must write the same bytes, so the directory name
-    * carries a version tag (`graft_xlsx_v1`) that MUST be bumped
+    * carries a version tag (`graft_xlsx_v2`) that MUST be bumped
     * whenever the generated bytes change; otherwise a tree built by
     * older code is served as current. */
   private[graft] def buildOnce(path: String)(fill: java.io.File => Unit): String = {

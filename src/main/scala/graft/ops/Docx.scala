@@ -161,7 +161,7 @@ object DocxFixture {
   val count = 24
 
   def path: String = new java.io.File(
-    System.getProperty("java.io.tmpdir"), "graft_docx_v1").getAbsolutePath
+    System.getProperty("java.io.tmpdir"), "graft_docx_v2").getAbsolutePath
 
   def docText(i: Int): String =
     (1 to 3 + i % 4)

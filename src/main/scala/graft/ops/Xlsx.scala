@@ -128,6 +128,13 @@ object Xlsx {
       })
   }
 
+  /** The one modification time every ZIP entry carries, so the packed
+    * bytes are a pure function of the parts, never of the wall clock. It
+    * fits the DOS time field, so no extended-timestamp field is written
+    * (1980-01-01 00:00 itself would add one: java.util.zip reads that
+    * DOS value as its "before 1980" marker). */
+  private[graft] val entryTime = java.time.LocalDateTime.of(2000, 1, 1, 0, 0)
+
   /** Pack named XML parts as an xlsx (ZIP) byte array. `stored = true`
     * writes method-0 entries (uncompressed — what makes the gate
     * fixture's bytes oracle-parsable); the default DEFLATE is what a
@@ -139,6 +146,7 @@ object Xlsx {
     parts.foreach { case (name, xmlStr) =>
       val bytes = xmlStr.getBytes("UTF-8")
       val e = new ZipEntry(name)
+      e.setTimeLocal(entryTime)
       if (stored) {
         e.setMethod(ZipEntry.STORED)
         e.setSize(bytes.length.toLong)
@@ -260,7 +268,7 @@ object XlsxFixture {
   val count = 24
 
   def path: String = new java.io.File(
-    System.getProperty("java.io.tmpdir"), "graft_xlsx_v1").getAbsolutePath
+    System.getProperty("java.io.tmpdir"), "graft_xlsx_v2").getAbsolutePath
 
   private def sheetXml(i: Int): String = {
     val rows = (1 to 3 + i % 3).map { r =>

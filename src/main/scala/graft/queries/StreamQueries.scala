@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.{Q, Tables}
@@ -264,8 +264,17 @@ object StreamQueries {
   }
 
   /** The state width a gate stream runs at: [[streamStateParts]] divided
-    * by the query's store multiplicity (see [[withStateParts]]), at
-    * least 2. */
+    * by the query's store MULTIPLICITY, at least 2. A stream-stream join
+    * commits FOUR stores per partition (keyToNumValues + keyWithIndex on
+    * each side) where an aggregation commits one, so at equal width it
+    * pays 4× the per-batch store-commit floor the volume ladder priced
+    * for one store. Halving the join's width (`storeDivisor = 2`) keeps
+    * its total store-instance count in the ladder's intended band at ANY
+    * ladder rung (it scales the ladder's output, not a constant).
+    * Measured at sf0.1 (width 8 → 4, join only): 3.63 → 3.32 s in r18's
+    * ladder A/B and 3.85 → 2.96 s probe median in r19 — the r18 global
+    * 8→4 was rejected only because single-store queries (neardup's
+    * md5-heavy batches) lost width they need. */
   private[graft] def stateWidth(s: SparkSession, dir: String,
                                 storeDivisor: Int = 1): Int =
     math.max(streamStateParts(s, dir) / storeDivisor, 2)
@@ -285,30 +294,6 @@ object StreamQueries {
       |  SELECT e.* FROM events e, lim
       |  WHERE NOT (e.event_id % 10 = 7 AND e.ts < lim.early_cut)
       |)""".stripMargin
-
-  /** Runs `body` with spark.sql.shuffle.partitions temporarily set to
-    * [[streamStateParts]] (restored after — registry queries run
-    * sequentially, so the session-global conf swap cannot race).
-    *
-    * `storeDivisor` (r19) normalizes the width by the query's state-store
-    * MULTIPLICITY: a stream-stream join commits FOUR stores per
-    * partition (keyToNumValues + keyWithIndex on each side) where an
-    * aggregation commits one, so at equal width it pays 4× the
-    * per-batch store-commit floor the volume ladder priced for one
-    * store. Halving the join's width keeps its total store-instance
-    * count in the ladder's intended band at ANY ladder rung (it scales
-    * the ladder's output, not a constant). Measured at sf0.1
-    * (width 8 → 4, join only): 3.63 → 3.32 s in r18's ladder A/B and
-    * 3.85 → 2.96 s probe median this round — the r18 global 8→4 was
-    * rejected only because single-store queries (neardup's md5-heavy
-    * batches) lost width they need. */
-  private def withStateParts[T](s: SparkSession, dir: String,
-                                storeDivisor: Int = 1)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, stateWidth(s, dir, storeDivisor).toString)
-    try body finally s.conf.set(key, prev)
-  }
 
   /** Scratch root for the gate queries' EPHEMERAL streaming checkpoints,
     * handed to `body` as a fresh per-run checkpointLocation and deleted
@@ -343,13 +328,54 @@ object StreamQueries {
     try body(dir.getAbsolutePath) finally deleteRec(dir)
   }
 
-  /** Start `w` against a [[withScratchCheckpoint]] location and block to
-    * completion — the one way every gate query executes its stream. */
-  private def runScratch(s: SparkSession,
-      w: org.apache.spark.sql.streaming.DataStreamWriter[_]): Unit =
-    withScratchCheckpoint(s) { ckpt =>
-      w.option("checkpointLocation", ckpt).start().awaitTermination()
-    }
+  /** The one way every gate query executes its stream: `stream` runs
+    * into a memory sink named `graft_stream_<tag>_<n>` under
+    * `Trigger.AvailableNow` in output `mode`, against a
+    * [[withScratchCheckpoint]] location, on the caller's session; the
+    * call blocks until the stream ends and returns the sink's contents.
+    *
+    * The stream's shuffle width — and with it its state-partition count —
+    * is `width`. `spark.sql.shuffle.partitions` is set to it only across
+    * `writeStream.start()` and restored in `finally`: the StreamExecution
+    * constructor clones the session inside `start()`, and that clone fixes
+    * the width for the whole run, so the swap a concurrent caller could
+    * see lasts one `start()` call instead of the stream's whole run. A
+    * separate `spark.newSession()` per gate would avoid the swap but was
+    * measured to cost more than it saves: a child session's streams post
+    * no progress events to listeners on the caller's `spark.streams`
+    * (perfbench's stream tracing registers there), and every child
+    * session that starts a stream adds two listeners to the SparkContext
+    * bus for good (5 → 7 → 9 → 11 over three runs).
+    *
+    * The sink's temp view is dropped in `finally`, before returning or
+    * rethrowing, so no run leaves its result registered in the session
+    * (about 20 MB per q_stream_dedup run at sf0.1). The returned frame
+    * stays valid: its analyzed plan already holds the sink's MemoryPlan. */
+  private[graft] def runGate(s: SparkSession, tag: String, width: Int,
+                             mode: String)(stream: Dataset[_]): DataFrame = {
+    import org.apache.spark.sql.streaming.Trigger
+    val sink = s"graft_stream_${tag}_${streamRunId.incrementAndGet()}"
+    try {
+      withScratchCheckpoint(s) { ckpt =>
+        val w = stream.writeStream.format("memory").queryName(sink)
+          .outputMode(mode).trigger(Trigger.AvailableNow())
+          .option("checkpointLocation", ckpt)
+        val key = "spark.sql.shuffle.partitions"
+        val prev = s.conf.get(key)
+        def setWidth(v: String): Unit = s.conf.set(key, v)
+        setWidth(width.toString)
+        val q = try w.start() finally setWidth(prev)
+        try q.awaitTermination() finally q.stop()
+      }
+      s.table(sink)
+    } finally s.catalog.dropTempView(sink)
+  }
+
+  /** readStream over a time-ordered slice dir ([[buildSliceDir]]): one
+    * micro-batch per slice file. */
+  private def sliceStream(s: SparkSession, sliced: String): DataFrame =
+    s.readStream.schema(s.read.parquet(sliced).schema)
+      .option("maxFilesPerTrigger", 1).parquet(sliced)
 
   /** q_stream_moments — the ONE registry entry whose Spark side actually
     * executes `readStream`: [[graft.streaming.Streams.momentsStream]]
@@ -368,17 +394,13 @@ object StreamQueries {
     * driver-checkable: DuckDB computes the batch answer, the Spark side
     * reaches it through an actual streaming execution. */
   val qStreamMoments = Q("q_stream_moments",
-    (s, dir) => withStateParts(s, dir) {
+    (s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      import org.apache.spark.sql.streaming.Trigger
-      val src = eventsStreamSliced(s, dir)
+      val src = sliceStream(s, slicedEventsDir(s, dir))
         .select(col("event_type"), col("value"))
-      val sink = s"graft_stream_moments_${streamRunId.incrementAndGet()}"
-      runScratch(s, graft.streaming.Streams.momentsStream(src, "event_type", "value")
-        .toDF("event_type", "n", "mean_value", "std_value")
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("update").trigger(Trigger.AvailableNow()))
-      s.table(sink)
+      runGate(s, "moments", stateWidth(s, dir), "update")(
+        graft.streaming.Streams.momentsStream(src, "event_type", "value")
+          .toDF("event_type", "n", "mean_value", "std_value"))
         .withColumn("rk", row_number().over(
           Window.partitionBy(col("event_type")).orderBy(col("n").desc)))
         .filter(col("rk") === 1).drop("rk")
@@ -487,15 +509,6 @@ object StreamQueries {
     }
   }
 
-  /** readStream over [[slicedEventsDir]]: one micro-batch per time slice. */
-  private def eventsStreamSliced(s: SparkSession, dir: String,
-                                 parts: Int = 4): DataFrame = {
-    val sliced = slicedEventsDir(s, dir, parts)
-    val schema = s.read.parquet(sliced).schema
-    s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-      .parquet(sliced)
-  }
-
   /** q_stream_sessionize — a SECOND real readStream execution in the
     * gate, exercising the state pattern q_stream_moments does not:
     * `flatMapGroupsWithState` session windows
@@ -516,20 +529,16 @@ object StreamQueries {
     * window-function formulation and the streaming GroupState
     * formulation share nothing but the gap contract. */
   val qStreamSessionize = Q("q_stream_sessionize",
-    (s, dir) => withStateParts(s, dir) {
+    (s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      import org.apache.spark.sql.streaming.Trigger
       import s.implicits._
-      val src = eventsStreamSliced(s, dir, parts = 2)
+      val src = sliceStream(s, slicedEventsDir(s, dir, parts = 2))
         .select(col("user_id").cast("long").as("user_id"),
           unix_micros(col("ts")).as("ts_us"),
           col("event_id").cast("long").as("event_id"))
         .as[graft.ops.Sessionize.Event]
-      val sink = s"graft_stream_sess_${streamRunId.incrementAndGet()}"
-      runScratch(s, graft.streaming.Streams.sessionizeStreamSnapshot(src)
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("update").trigger(Trigger.AvailableNow()))
-      s.table(sink)
+      runGate(s, "sess", stateWidth(s, dir), "update")(
+        graft.streaming.Streams.sessionizeStreamSnapshot(src))
         .withColumn("rk", row_number().over(
           Window.partitionBy(col("user_id"), col("session_id"))
             .orderBy(col("n_events").desc)))
@@ -556,15 +565,9 @@ object StreamQueries {
     * exactly why it is reserved for bounded window×group outputs like
     * this hourly rollup; unbounded-key streams use the Update path. */
   val qStreamHourly = Q("q_stream_hourly",
-    (s, dir) => withStateParts(s, dir) {
-      import org.apache.spark.sql.streaming.Trigger
-      val sink = s"graft_stream_hourly_${streamRunId.incrementAndGet()}"
-      runScratch(s, graft.streaming.Streams.hourlyCounts(
-          eventsStreamSliced(s, dir, parts = 2))
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("complete").trigger(Trigger.AvailableNow()))
-      s.table(sink)
-    },
+    (s, dir) => runGate(s, "hourly", stateWidth(s, dir), "complete")(
+      graft.streaming.Streams.hourlyCounts(
+        sliceStream(s, slicedEventsDir(s, dir, parts = 2)))),
     qHourly.oracle,
     "north star: built-in window() streaming aggregation in the gate " +
       "(Complete mode — final micro-batch emission is the answer)")
@@ -597,18 +600,9 @@ object StreamQueries {
     * everything older, the property this query finally executes rather
     * than asserts. */
   val qStreamAppend = Q("q_stream_append",
-    (s, dir) => withStateParts(s, dir) {
-      import org.apache.spark.sql.streaming.Trigger
-      val sliced = lateSlicedEventsDir(s, dir)
-      val schema = s.read.parquet(sliced).schema
-      val src = s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-        .parquet(sliced)
-      val sink = s"graft_stream_append_${streamRunId.incrementAndGet()}"
-      runScratch(s, graft.streaming.Streams.hourlyCounts(src)
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("append").trigger(Trigger.AvailableNow()))
-      s.table(sink)
-    },
+    (s, dir) => runGate(s, "append", stateWidth(s, dir), "append")(
+      graft.streaming.Streams.hourlyCounts(
+        sliceStream(s, lateSlicedEventsDir(s, dir)))),
     Some("WITH " + lateOntimeSql + """
       |SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
       |  event_type, count(*) AS n,
@@ -652,18 +646,9 @@ object StreamQueries {
     * and a withheld tail — if a Spark upgrade flips the comparison,
     * that spec names the drift and this cutoff flips with it. */
   val qStreamSessWin = Q("q_stream_sess_win",
-    (s, dir) => withStateParts(s, dir) {
-      import org.apache.spark.sql.streaming.Trigger
-      val sliced = lateSlicedEventsDir(s, dir, onParts = 2)
-      val schema = s.read.parquet(sliced).schema
-      val src = s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-        .parquet(sliced)
-      val sink = s"graft_stream_sesswin_${streamRunId.incrementAndGet()}"
-      runScratch(s, graft.streaming.Streams.sessionWindows(src)
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("append").trigger(Trigger.AvailableNow()))
-      s.table(sink)
-    },
+    (s, dir) => runGate(s, "sesswin", stateWidth(s, dir), "append")(
+      graft.streaming.Streams.sessionWindows(
+        sliceStream(s, lateSlicedEventsDir(s, dir, onParts = 2)))),
     Some("WITH " + lateOntimeSql + """, gaps AS (
       |  SELECT user_id, ts, event_id,
       |    CASE WHEN lag(ts) OVER w IS NULL
@@ -715,12 +700,9 @@ object StreamQueries {
     * matches and the 10× fixture 190 — the drop is discriminated by the
     * 10× bit-identity record, the gate by the join itself.) */
   val qStreamJoin = Q("q_stream_join",
-    (s, dir) => withStateParts(s, dir, storeDivisor = 2) {
-      import org.apache.spark.sql.streaming.Trigger
+    (s, dir) => {
       val sliced = lateSlicedEventsDir(s, dir, onParts = 2)
-      val schema = s.read.parquet(sliced).schema
-      def src() = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(sliced)
+      def src() = sliceStream(s, sliced)
       val signups = src().filter(col("event_type") === "signup")
         .withWatermark("ts", "2 hours")
         .select(col("user_id"), col("event_id").as("signup_id"),
@@ -736,10 +718,7 @@ object StreamQueries {
         .select(col("user_id"), col("signup_id"), col("click_id"),
           (unix_micros(col("c_ts")) - unix_micros(col("s_ts")))
             .as("offset_us"))
-      val sink = s"graft_stream_join_${streamRunId.incrementAndGet()}"
-      runScratch(s, joined.writeStream.format("memory").queryName(sink)
-        .outputMode("append").trigger(Trigger.AvailableNow()))
-      s.table(sink)
+      runGate(s, "join", stateWidth(s, dir, storeDivisor = 2), "append")(joined)
     },
     Some("WITH " + lateOntimeSql + """, s AS (
       |  SELECT user_id, event_id AS signup_id, epoch_us(ts) AS s_us
@@ -775,22 +754,13 @@ object StreamQueries {
     * rows emit immediately (Append without finalization wait, like the
     * join). */
   val qStreamDedup = Q("q_stream_dedup",
-    (s, dir) => withStateParts(s, dir) {
-      import org.apache.spark.sql.streaming.Trigger
-      val sliced = lateSlicedEventsDir(s, dir, onParts = 2)
-      val schema = s.read.parquet(sliced).schema
-      val src = s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-        .parquet(sliced)
+    (s, dir) => runGate(s, "dedup", stateWidth(s, dir), "append")(
+      sliceStream(s, lateSlicedEventsDir(s, dir, onParts = 2))
         .withColumn("m", date_trunc("minute", col("ts")))
         .withWatermark("m", "2 hours")
         .dropDuplicates("user_id", "event_type", "m")
         .select(col("user_id"), col("event_type"),
-          date_format(col("m"), "yyyy-MM-dd HH:mm:ss").as("minute"))
-      val sink = s"graft_stream_dedup_${streamRunId.incrementAndGet()}"
-      runScratch(s, src.writeStream.format("memory").queryName(sink)
-        .outputMode("append").trigger(Trigger.AvailableNow()))
-      s.table(sink)
-    },
+          date_format(col("m"), "yyyy-MM-dd HH:mm:ss").as("minute"))),
     Some("WITH " + lateOntimeSql + """
       |SELECT DISTINCT user_id, event_type,
       |  strftime(date_trunc('minute', ts), '%Y-%m-%d %H:%M:%S') AS minute
@@ -897,15 +867,11 @@ object StreamQueries {
     * lag window over (band, sig) — batch SQL and streaming GroupState
     * share nothing but the window contract. */
   val qStreamNearDup = Q("q_stream_neardup",
-    (s, dir) => withStateParts(s, dir) {
-      import org.apache.spark.sql.streaming.Trigger
+    (s, dir) => {
       import s.implicits._
-      val sliced = neardupSliceDir(s, dir)
-      val schema = s.read.parquet(sliced).schema
-      val src = s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-        .parquet(sliced)
+      val src = sliceStream(s, neardupSliceDir(s, dir))
       // each slice is ONE parquet file -> one task; spread the micro-batch
-      // across the session's cores BEFORE the md5-heavy banding projection
+      // across the gate's state width BEFORE the md5-heavy banding projection
       // (the first 100x probe ran the whole batch's hashing on one core).
       // The partition count is EXPLICIT: an un-numbered repartition(col)
       // is fair game for AQE partition coalescing, and this stage's
@@ -913,15 +879,12 @@ object StreamQueries {
       // huge (2 md5s per shingle) — AQE's byte heuristic re-serialized
       // the whole micro-batch onto ~2 tasks at 100x (the FuzzyJoin.edJoin
       // post-join-blowup lesson, in the post-shuffle-CPU domain).
-      val bandWidth = s.sessionState.conf.numShufflePartitions
-      val rows = neardupBandRows(src.repartition(bandWidth, col("doc_id")))
+      val width = stateWidth(s, dir)
+      val rows = neardupBandRows(src.repartition(width, col("doc_id")))
         .withWatermark("ts", "0 seconds")
         .as[graft.streaming.Streams.BandArrival]
-      val sink = s"graft_stream_neardup_${streamRunId.incrementAndGet()}"
-      runScratch(s, graft.streaming.Streams.neardupStream(rows, neardupGapMin)
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("update").trigger(Trigger.AvailableNow()))
-      s.table(sink)
+      runGate(s, "neardup", width, "update")(
+        graft.streaming.Streams.neardupStream(rows, neardupGapMin))
         .groupBy("doc_id")
         .agg(count(lit(1)).as("n_bands"),
           sum(col("dup")).as("n_dup_bands"),
@@ -983,7 +946,6 @@ object StreamQueries {
     * matching the batch query's file set. */
   val qStreamCrawl = Q("q_stream_crawl",
     (s, _) => {
-      import org.apache.spark.sql.streaming.Trigger
       import org.apache.spark.sql.types._
       val fdir = graft.ops.WarcFixture.ensure()
       val binSchema = StructType(Seq(
@@ -996,8 +958,7 @@ object StreamQueries {
         .option("maxFilesPerTrigger", "4")
         .option("pathGlobFilter", "*.warc")
         .load(fdir)
-      val sink = s"graft_stream_crawl_${streamRunId.incrementAndGet()}"
-      runScratch(s, graft.ops.Warc.scanWarc(src).toDF()
+      val digests = graft.ops.Warc.scanWarc(src).toDF()
         .filter(col("warc_type") === "response")
         .groupBy(col("body_md5"))
         .agg(min(struct(col("file_name"), col("rec_idx"),
@@ -1006,9 +967,8 @@ object StreamQueries {
         .select(col("body_md5"), col("first.file_name").as("file_name"),
           col("first.rec_idx").as("rec_idx"),
           col("first.target_uri").as("target_uri"), col("n_captures"))
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("complete").trigger(Trigger.AvailableNow()))
-      s.table(sink).orderBy("body_md5")
+      runGate(s, "crawl", s.sessionState.conf.numShufflePartitions,
+        "complete")(digests).orderBy("body_md5")
     },
     graft.queries.TextQueries.qCrawlDedup.oracle,
     "north star: streaming crawl ingestion in the gate (WARC codec as a " +

@@ -9,7 +9,8 @@ import graft.ops.Checkpoints
   * than [[Checkpoints.staleAfterMs]] goes, a fresh one (a live run) and
   * an old dir of another prefix stay; the once-per-root sweep runs once.
   * [[Checkpoints.buildOnce]] builds a tree once, never shares or leaks a
-  * tmp dir, and is the only tmp-then-rename in the main code. */
+  * tmp dir, and is the only tmp-then-rename in the main code; memory-sink
+  * streams start and session conf is set only in `StreamQueries.runGate`. */
 class ScratchSweepSpec extends AnyFunSuite with TempDirs {
   private val hour = Checkpoints.staleAfterMs
 
@@ -118,18 +119,23 @@ class ScratchSweepSpec extends AnyFunSuite with TempDirs {
     }
   }
 
+  private val main = new File("src/main/scala")
+
+  private def sources(d: File): Seq[File] = d.listFiles().toSeq.flatMap { f =>
+    if (f.isDirectory) sources(f) else Seq(f).filter(_.getName.endsWith(".scala"))
+  }
+
+  private def read(f: File): String =
+    new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+
   test("src/main renames and deletes recursively only in ops/Checkpoints.scala") {
-    val main = new File("src/main/scala")
     assert(main.isDirectory, s"${main.getAbsolutePath} not found")
-    def sources(d: File): Seq[File] = d.listFiles().toSeq.flatMap { f =>
-      if (f.isDirectory) sources(f) else Seq(f).filter(_.getName.endsWith(".scala"))
-    }
     // a def that both lists a directory and deletes is a recursive delete
     val lists = """\blistFiles\b|\bFiles\.(?:walk|list)\b""".r
     val deletes = """\.delete\(|\bFiles\.delete|\bdeleteRecursively\b|\bdeleteDirectory\b""".r
     val offenders = sources(main)
       .filterNot(_.getPath.endsWith("ops/Checkpoints.scala")).flatMap { f =>
-        val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+        val src = read(f)
         val renames = if (src.contains("renameTo(")) Seq(s"$f: renameTo(") else Nil
         renames ++ src.split("""\bdef\s+""").drop(1)
           .filter(b => lists.findFirstIn(b).nonEmpty && deletes.findFirstIn(b).nonEmpty)
@@ -138,5 +144,26 @@ class ScratchSweepSpec extends AnyFunSuite with TempDirs {
     assert(offenders.isEmpty,
       "use Checkpoints.buildOnce / Checkpoints.deleteRec instead:\n" +
         offenders.mkString("\n"))
+  }
+
+  test("src/main starts memory-sink streams and sets session conf only in " +
+      "StreamQueries.runGate") {
+    assert(main.isDirectory, s"${main.getAbsolutePath} not found")
+    val gateFile = new File(main, "graft/queries/StreamQueries.scala")
+    val gateSrc = read(gateFile)
+    val gateStart = gateSrc.indexOf("def runGate(")
+    assert(gateStart >= 0, s"no runGate in $gateFile")
+    val gateEnd = gateSrc.indexOf("\n  }\n", gateStart)
+    for (p <- Seq("format(\"memory\")", "Trigger.AvailableNow()", "conf.set(")) {
+      val hits = sources(main).flatMap { f =>
+        val src = read(f)
+        Iterator.iterate(src.indexOf(p))(i => src.indexOf(p, i + 1))
+          .takeWhile(_ >= 0).map(i => (f, i)).toSeq
+      }
+      assert(hits.size === 1, s"$p: ${hits.map(_._1).mkString(", ")}")
+      val (f, i) = hits.head
+      assert(f.getPath == gateFile.getPath && i > gateStart && i < gateEnd,
+        s"$p outside StreamQueries.runGate: $f")
+    }
   }
 }

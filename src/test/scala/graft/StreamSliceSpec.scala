@@ -121,26 +121,75 @@ class StreamSliceSpec extends SparkSpec {
     assert(queries.StreamQueries.stateWidth(wide, dir, storeDivisor = 2) === 4)
   }
 
+  private def tempViews(s: org.apache.spark.sql.SparkSession): Seq[String] =
+    s.catalog.listTables().collect().filter(_.isTemporary).map(_.name).sorted.toSeq
+
+  // On a wide session (width 16) the same streams run at their state
+  // width (8 and 4) while the session itself keeps reading 16, and no
+  // gate run leaves its sink view behind.
   test("single-store and join streams run their state at width 2") {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.shuffle.partitions", "2")
-    val widths = java.util.concurrent.ConcurrentHashMap.newKeySet[(String, Long)]()
-    s.streams.addListener(new StreamingQueryListener {
-      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-      override def onQueryProgress(e: QueryProgressEvent): Unit =
-        e.progress.stateOperators.foreach(o =>
-          widths.add((e.progress.name, o.numShufflePartitions)))
-    })
-    for (q <- Seq("q_stream_dedup", "q_stream_join")) {
-      assert(Registry.byName(q).fn(s, dir).count() > 0)
-    }
-    org.apache.spark.GraftTestBus.drain(s.sparkContext)
     import scala.jdk.CollectionConverters._
-    val seen = widths.asScala.toSet
-    assert(seen.exists(_._1.startsWith("graft_stream_dedup_")), seen)
-    assert(seen.exists(_._1.startsWith("graft_stream_join_")), seen)
-    assert(seen.forall(_._2 == 2L), seen)
-    assert(s.conf.get("spark.sql.shuffle.partitions") === "2")
+    /** (stream name, state partitions) per progress event, and the
+      * session width each progress event saw. */
+    def run(width: Int): (Set[(String, Long)], Set[String]) = {
+      val s = spark.newSession()
+      s.conf.set("spark.sql.shuffle.partitions", width.toString)
+      val widths = java.util.concurrent.ConcurrentHashMap.newKeySet[(String, Long)]()
+      val confs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+      val listener = new StreamingQueryListener {
+        override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+        override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+        override def onQueryProgress(e: QueryProgressEvent): Unit = {
+          confs.add(s.conf.get("spark.sql.shuffle.partitions"))
+          e.progress.stateOperators.foreach(o =>
+            widths.add((e.progress.name, o.numShufflePartitions)))
+        }
+      }
+      s.streams.addListener(listener)
+      val views = tempViews(s)
+      for (q <- Seq("q_stream_dedup", "q_stream_join")) {
+        assert(Registry.byName(q).fn(s, dir).count() > 0)
+      }
+      org.apache.spark.GraftTestBus.drain(s.sparkContext)
+      s.streams.removeListener(listener)
+      val seen = widths.asScala.toSet
+      assert(seen.exists(_._1.startsWith("graft_stream_dedup_")), seen)
+      assert(seen.exists(_._1.startsWith("graft_stream_join_")), seen)
+      assert(s.conf.get("spark.sql.shuffle.partitions") === width.toString)
+      assert(tempViews(s) === views)
+      (seen, confs.asScala.toSet)
+    }
+    val (narrow, _) = run(2)
+    assert(narrow.forall(_._2 == 2L), narrow)
+    val (wide, wideConfs) = run(16)
+    def parts(prefix: String) = wide.filter(_._1.startsWith(prefix)).map(_._2)
+    assert(parts("graft_stream_dedup_") === Set(8L), wide)
+    assert(parts("graft_stream_join_") === Set(4L), wide)
+    assert(wideConfs === Set("16"))
+  }
+
+  test("runGate: a failing stream's error reaches the caller, and neither " +
+      "its sink view, its checkpoint nor a width swap outlives it") {
+    withTempDir("graft-gate") { scratch =>
+      val s = spark.newSession()
+      s.conf.set("spark.graft.stream.scratchDir", scratch.getAbsolutePath)
+      s.conf.set("spark.sql.shuffle.partitions", "5")
+      val boom = udf { (id: Long) =>
+        if (id % 10 == 7) throw new IllegalStateException(s"boom at $id")
+        id
+      }
+      val src = s.readStream.schema(s.read.parquet(sliced).schema)
+        .option("maxFilesPerTrigger", 1).parquet(sliced)
+        .select(boom(col("event_id").cast("long")).as("id"))
+      val views = tempViews(s)
+      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        queries.StreamQueries.runGate(s, "boom", 3, "append")(src)
+      }
+      val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      assert(causes.exists(c => Option(c.getMessage).exists(_.contains("boom at"))), e)
+      assert(tempViews(s) === views)
+      assert(scratch.list().toSeq === Nil)
+      assert(s.conf.get("spark.sql.shuffle.partitions") === "5")
+    }
   }
 }

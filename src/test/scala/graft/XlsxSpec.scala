@@ -34,6 +34,19 @@ class XlsxSpec extends SparkSpec {
       // and DEFLATE actually compressed (the variant isn't a no-op)
       assert(XlsxFixture.workbookBytes(i, stored = false).length <
         XlsxFixture.workbookBytes(i, stored = true).length)
+      // every entry of both packings carries the one fixed time and no
+      // extended-timestamp field, so the bytes never depend on the clock
+      for (stored <- Seq(true, false)) {
+        val zin = new java.util.zip.ZipInputStream(
+          new java.io.ByteArrayInputStream(XlsxFixture.workbookBytes(i, stored)))
+        var e = zin.getNextEntry
+        while (e != null) {
+          assert(e.getTimeLocal === Xlsx.entryTime, e.getName)
+          assert(e.getExtra === null, e.getName)
+          e = zin.getNextEntry
+        }
+        zin.close()
+      }
     }
   }
 
