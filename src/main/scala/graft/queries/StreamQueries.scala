@@ -421,20 +421,24 @@ object StreamQueries {
     * StatefulStreamSpec's two-file split). */
   private[graft] def slicedEventsDir(s: SparkSession, dir: String,
                               parts: Int = 4): String =
-    buildSliceDir(s, dir, s"q$parts", {
-      val ev = Tables.events(s, dir)
-      val qs = (1 until parts).map(_.toDouble / parts)
-      val cuts = ev.select(percentile_approx(unix_micros(col("ts")),
-          typedLit(qs), lit(10000)).as("c"))
-        .head().getSeq[Long](0)
-      val us = unix_micros(col("ts"))
-      (0 until parts).map { k =>
-        val lo = if (k == 0) None else Some(cuts(k - 1))
-        val hi = if (k == parts - 1) None else Some(cuts(k))
-        ev.filter(lo.map(us >= _).getOrElse(lit(true)) &&
-          hi.map(us < _).getOrElse(lit(true)))
-      }
-    })
+    buildSliceDir(s, dir, s"q$parts",
+      timeBands(Tables.events(s, dir), parts))
+
+  /** `ev` cut into `parts` bands of `ts` at its approximate quantiles (one
+    * percentile_approx job): strict-`<` upper and `>=` lower bounds, so
+    * every row lands in exactly one band. */
+  private def timeBands(ev: DataFrame, parts: Int): Seq[DataFrame] = {
+    val us = unix_micros(col("ts"))
+    val qs = (1 until parts).map(_.toDouble / parts)
+    val cuts = ev.select(percentile_approx(us, typedLit(qs), lit(10000)).as("c"))
+      .head().getSeq[Long](0)
+    (0 until parts).map { k =>
+      val lo = if (k == 0) None else Some(cuts(k - 1))
+      val hi = if (k == parts - 1) None else Some(cuts(k))
+      ev.filter(lo.map(us >= _).getOrElse(lit(true)) &&
+        hi.map(us < _).getOrElse(lit(true)))
+    }
+  }
 
   /** The slice layout for the APPEND-mode gate query: three time-ordered
     * on-time slices (exact `ts` terciles of the on-time set) followed by
@@ -453,17 +457,7 @@ object StreamQueries {
       val us = unix_micros(col("ts"))
       val t0 = ev.agg(min(us).as("t0")).head().getLong(0)
       val isLate = (col("event_id") % 10 === 7) && (us < t0 + 86400000000L)
-      val ontime = ev.filter(!isLate)
-      val qs = (1 until onParts).map(_.toDouble / onParts)
-      val cuts = ontime.select(percentile_approx(us,
-          typedLit(qs), lit(10000)).as("c"))
-        .head().getSeq[Long](0)
-      (0 until onParts).map { k =>
-        val lo = if (k == 0) None else Some(cuts(k - 1))
-        val hi = if (k == onParts - 1) None else Some(cuts(k))
-        ontime.filter(lo.map(us >= _).getOrElse(lit(true)) &&
-          hi.map(us < _).getOrElse(lit(true)))
-      } :+ ev.filter(isLate)
+      timeBands(ev.filter(!isLate), onParts) :+ ev.filter(isLate)
     })
 
   /** Writes `slices` (call-by-name: only evaluated on a cache miss) as
@@ -840,9 +834,8 @@ object StreamQueries {
   private[graft] def neardupSliceDir(s: SparkSession, dir: String): String =
     buildSliceDir(s, dir, "nd3", {
       val c = SimilarityQueries.docCorpus(s, dir)
-        .withColumn("ts", expr("timestampadd(MINUTE, " +
-          "cast((doc_id % 1000000) * 10 + (doc_id div 1000000) * 7 as int), " +
-          "timestamp'2025-01-01 00:00:00')"))
+        .withColumn("ts", timestamp_add("MINUTE", neardupTsm.cast("int"),
+          lit("2025-01-01 00:00:00").cast("timestamp")))
       val maxDoc = c.agg(max(col("doc_id") % 1000000)).head().getLong(0)
       def cut(k: Int): Long = {
         val d = maxDoc * k / 3

@@ -1,8 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.DecimalType
+import graft.ops.Sessionize.{Event, Session}
 
 /** Structured-Streaming transformations for the events table. Each is a
   * plain DataFrame→DataFrame function usable under BOTH `spark.read`
@@ -24,6 +26,34 @@ object Streams {
   final case class OpenSession(session_id: Long, n_events: Long,
                                start_us: Long, last_us: Long)
 
+  /** The one session rule of the three streaming sessionizers: applies a
+    * user's event times (sorted here, in place) to the open session. An
+    * event at most `gapMinutes` after the open session's last event extends
+    * it; a later one closes it and opens the next id. `n_events = 0` is
+    * [[sessionizeStreamWithTimeout]]'s counter-only sentinel: nothing is
+    * open and the next id is its `session_id`. Returns the open session
+    * after the last event and the sessions closed on the way, in order.
+    * The batch reference [[graft.ops.Sessionize.sessions]] keeps its own
+    * copy of the rule on purpose: the specs compare the two. */
+  private def sessionSteps(uid: Long, open: Option[OpenSession],
+                           times: Array[Long], gapMinutes: Int)
+      : (Option[OpenSession], Seq[Session]) = {
+    val gapUs = gapMinutes.toLong * 60L * 1000000L
+    java.util.Arrays.sort(times)
+    val closed = Vector.newBuilder[Session]
+    var cur = open
+    for (t <- times) cur = Some(cur match {
+      case Some(o) if o.n_events == 0L => OpenSession(o.session_id, 1L, t, t)
+      case Some(o) if t - o.last_us <= gapUs =>
+        o.copy(n_events = o.n_events + 1, last_us = t)
+      case Some(o) =>
+        closed += Session(uid, o.session_id, o.n_events, o.start_us)
+        OpenSession(o.session_id + 1, 1L, t, t)
+      case None => OpenSession(1L, 1L, t, t)
+    })
+    (cur, closed.result())
+  }
+
   /** Stateful streaming sessionization: `flatMapGroupsWithState` holding
     * exactly one open session per user. A session closes (and is emitted)
     * when a later event arrives more than `gapMinutes` after the
@@ -39,35 +69,17 @@ object Streams {
     * idle sessions once the watermark passes last-event + gap and drops
     * their state.
     *
-    * Within a batch the group iterator is not time-ordered; events are
-    * sorted in memory (bounded by that user's per-batch volume). */
-  def sessionizeStream(events: org.apache.spark.sql.Dataset[graft.ops.Sessionize.Event],
-                       gapMinutes: Int = 30)
-      : org.apache.spark.sql.Dataset[graft.ops.Sessionize.Session] = {
+    * Within a batch the group iterator is not time-ordered; event times
+    * are sorted in memory (bounded by that user's per-batch volume). */
+  def sessionizeStream(events: Dataset[Event], gapMinutes: Int = 30)
+      : Dataset[Session] = {
     import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    import graft.ops.Sessionize.{Event, Session}
-    val gapUs = gapMinutes.toLong * 60L * 1000000L
     events.groupByKey(_.user_id)
       .flatMapGroupsWithState[OpenSession, Session](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (uid: Long, it: Iterator[Event], state: GroupState[OpenSession]) =>
-          val evs = it.toArray
-          java.util.Arrays.sort(evs,
-            Ordering.by((e: Event) => (e.ts_us, e.event_id)))
-          val closed = scala.collection.mutable.ArrayBuffer.empty[Session]
-          var open = state.getOption
-          for (e <- evs) {
-            open match {
-              case Some(o) if e.ts_us - o.last_us <= gapUs =>
-                open = Some(o.copy(n_events = o.n_events + 1, last_us = e.ts_us))
-              case Some(o) =>
-                closed += Session(uid, o.session_id, o.n_events, o.start_us)
-                open = Some(OpenSession(o.session_id + 1, 1L, e.ts_us, e.ts_us))
-              case None =>
-                open = Some(OpenSession(1L, 1L, e.ts_us, e.ts_us))
-            }
-          }
+          val (open, closed) = sessionSteps(uid, state.getOption,
+            it.map(_.ts_us).toArray, gapMinutes)
           open.foreach(state.update)
           closed.iterator
       }
@@ -87,40 +99,20 @@ object Streams {
     * unchanged session are bit-identical rows, so the argmax is
     * well-defined. State is one OpenSession per user, exactly as the
     * Append variant. */
-  def sessionizeStreamSnapshot(
-      events: org.apache.spark.sql.Dataset[graft.ops.Sessionize.Event],
-      gapMinutes: Int = 30)
-      : org.apache.spark.sql.Dataset[graft.ops.Sessionize.Session] = {
+  def sessionizeStreamSnapshot(events: Dataset[Event], gapMinutes: Int = 30)
+      : Dataset[Session] = {
     import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    import graft.ops.Sessionize.{Event, Session}
-    val gapUs = gapMinutes.toLong * 60L * 1000000L
     events.groupByKey(_.user_id)
       .flatMapGroupsWithState[OpenSession, Session](
         OutputMode.Update, GroupStateTimeout.NoTimeout) {
         (uid: Long, it: Iterator[Event], state: GroupState[OpenSession]) =>
-          val evs = it.toArray
-          java.util.Arrays.sort(evs,
-            Ordering.by((e: Event) => (e.ts_us, e.event_id)))
-          val out = scala.collection.mutable.ArrayBuffer.empty[Session]
-          var open = state.getOption
-          for (e <- evs) {
-            open match {
-              case Some(o) if e.ts_us - o.last_us <= gapUs =>
-                open = Some(o.copy(n_events = o.n_events + 1, last_us = e.ts_us))
-              case Some(o) =>
-                out += Session(uid, o.session_id, o.n_events, o.start_us)
-                open = Some(OpenSession(o.session_id + 1, 1L, e.ts_us, e.ts_us))
-              case None =>
-                open = Some(OpenSession(1L, 1L, e.ts_us, e.ts_us))
-            }
-          }
-          open.foreach { o =>
-            state.update(o)
-            if (evs.nonEmpty)
-              out += Session(uid, o.session_id, o.n_events, o.start_us)
-          }
-          out.iterator
+          val times = it.map(_.ts_us).toArray
+          val (open, closed) =
+            sessionSteps(uid, state.getOption, times, gapMinutes)
+          open.foreach(state.update)
+          val snapshot = if (times.isEmpty) None
+            else open.map(o => Session(uid, o.session_id, o.n_events, o.start_us))
+          (closed ++ snapshot).iterator
       }
   }
 
@@ -146,12 +138,9 @@ object Streams {
     * Tradeoff: state is one tiny record per user ever seen (vs truly
     * bounded-by-active with `remove()`, which re-issued ids). */
   def sessionizeStreamWithTimeout(
-      events: org.apache.spark.sql.Dataset[TimedEvent], gapMinutes: Int = 30)
-      : org.apache.spark.sql.Dataset[graft.ops.Sessionize.Session] = {
+      events: Dataset[TimedEvent], gapMinutes: Int = 30)
+      : Dataset[Session] = {
     import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    import graft.ops.Sessionize.Session
-    val gapUs = gapMinutes.toLong * 60L * 1000000L
     events.groupByKey(_.user_id)
       .flatMapGroupsWithState[OpenSession, Session](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
@@ -163,25 +152,8 @@ object Streams {
             state.update(OpenSession(o.session_id + 1, 0L, 0L, 0L))
             Iterator.single(Session(uid, o.session_id, o.n_events, o.start_us))
           } else {
-            val evs = it.toArray
-            java.util.Arrays.sort(evs,
-              Ordering.by((e: TimedEvent) => (micros(e.ts), e.event_id)))
-            val closed = scala.collection.mutable.ArrayBuffer.empty[Session]
-            var open = state.getOption
-            for (e <- evs) {
-              val tUs = micros(e.ts)
-              open match {
-                case Some(o) if o.n_events == 0L => // counter-only sentinel
-                  open = Some(OpenSession(o.session_id, 1L, tUs, tUs))
-                case Some(o) if tUs - o.last_us <= gapUs =>
-                  open = Some(o.copy(n_events = o.n_events + 1, last_us = tUs))
-                case Some(o) =>
-                  closed += Session(uid, o.session_id, o.n_events, o.start_us)
-                  open = Some(OpenSession(o.session_id + 1, 1L, tUs, tUs))
-                case None =>
-                  open = Some(OpenSession(1L, 1L, tUs, tUs))
-              }
-            }
+            val (open, closed) = sessionSteps(uid, state.getOption,
+              it.map(e => micros(e.ts)).toArray, gapMinutes)
             open.foreach { o =>
               state.update(o)
               state.setTimeoutTimestamp(o.last_us / 1000L + gapMinutes * 60000L)
@@ -219,7 +191,6 @@ object Streams {
                     gapMinutes: Int)
       : org.apache.spark.sql.Dataset[BandVerdict] = {
     import rows.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val gapUs = gapMinutes.toLong * 60L * 1000000L
     rows.groupByKey(_.bkey)
       .flatMapGroupsWithState[Long, BandVerdict](
@@ -264,6 +235,30 @@ object Streams {
   final case class AsOfMatch(user_id: Long, purchase_id: Long,
                              click_id: Option[Long], gap_us: Option[Long])
 
+  /** The one watermark buffer of the event-time streams ([[asOfStream]],
+    * [[funnelStream]]): merges the state's `pend` buffer with the batch's
+    * `events`, keeps those `keep` admits, and hands every event the
+    * watermark has passed to `flush` in the batch plans' (ts, side, id)
+    * order. Returns the events still ahead of the watermark that `keep`
+    * admits after the flush; when there are any, the group's timeout is
+    * set to watermark + 1 ms, so an advance of the watermark alone
+    * flushes them. */
+  private def flushToWatermark(state: GroupState[_], pend: Seq[PendEvent],
+                               events: Iterator[SideEvent],
+                               keep: PendEvent => Boolean)(
+                               flush: PendEvent => Unit): Seq[PendEvent] = {
+    val wUs = state.getCurrentWatermarkMs() * 1000L
+    val (ready, ahead) = (pend ++ events.map(e =>
+        PendEvent(micros(e.ts), e.side, e.event_id)))
+      .filter(keep)
+      .sortBy(p => (p.ts_us, p.side, p.event_id))
+      .partition(_.ts_us <= wUs)
+    ready.foreach(flush)
+    val kept = ahead.filter(keep)
+    if (kept.nonEmpty) state.setTimeoutTimestamp(wUs / 1000L + 1L)
+    kept
+  }
+
   /** Stream-stream AS-OF join: each purchase matched to the same user's
     * latest prior-or-simultaneous click — the streaming form of
     * [[graft.ops.AsOf.joinAsOf]]'s union+window formulation. The window
@@ -282,32 +277,24 @@ object Streams {
     * on-time purchase is eventually emitted. Input must carry a
     * watermark on `ts`; events later than the watermark get merged at
     * their flush-time position (the standard on-time-data contract). */
-  def asOfStream(events: org.apache.spark.sql.Dataset[SideEvent])
-      : org.apache.spark.sql.Dataset[AsOfMatch] = {
+  def asOfStream(events: Dataset[SideEvent]): Dataset[AsOfMatch] = {
     import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     events.groupByKey(_.user_id)
       .flatMapGroupsWithState[AsOfState, AsOfMatch](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
         (uid: Long, it: Iterator[SideEvent], state: GroupState[AsOfState]) =>
-          val wUs = state.getCurrentWatermarkMs() * 1000L
           val prev = state.getOption.getOrElse(AsOfState(Nil, false, 0L, 0L))
-          val merged = (prev.pend ++ it.map(e =>
-              PendEvent(micros(e.ts), e.side, e.event_id)))
-            .sortBy(p => (p.ts_us, p.side, p.event_id))
-          val (ready, pend) = merged.partition(_.ts_us <= wUs)
           var hasR = prev.hasRight
           var rId = prev.rightId
           var rUs = prev.rightUs
           val out = Seq.newBuilder[AsOfMatch]
-          for (p <- ready) {
+          val pend = flushToWatermark(state, prev.pend, it, _ => true) { p =>
             if (p.side == 0) { hasR = true; rId = p.event_id; rUs = p.ts_us }
             else out += AsOfMatch(uid, p.event_id,
               if (hasR) Some(rId) else None,
               if (hasR) Some(p.ts_us - rUs) else None)
           }
           state.update(AsOfState(pend, hasR, rId, rUs))
-          if (pend.nonEmpty) state.setTimeoutTimestamp(wUs / 1000L + 1L)
           out.result().iterator
       }
   }
@@ -339,28 +326,22 @@ object Streams {
     * shrinks further in flight: events for an already-completed stage are
     * dropped at merge time, and a fully-converted user buffers nothing
     * ever again. */
-  def funnelStream(events: org.apache.spark.sql.Dataset[SideEvent],
-                   nStages: Int): org.apache.spark.sql.Dataset[FunnelHit] = {
+  def funnelStream(events: Dataset[SideEvent], nStages: Int)
+      : Dataset[FunnelHit] = {
     import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     events.groupByKey(_.user_id)
       .flatMapGroupsWithState[FunnelState, FunnelHit](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
         (uid: Long, it: Iterator[SideEvent], state: GroupState[FunnelState]) =>
-          val wUs = state.getCurrentWatermarkMs() * 1000L
           val prev = state.getOption
             .getOrElse(FunnelState(Nil, Seq.fill(nStages)(-1L)))
           val reached = prev.reached.toArray
+          val out = Seq.newBuilder[FunnelHit]
           // a stage already completed can never advance again — its
           // events need no buffer space (completion times are monotone:
           // set once, never unset)
-          val merged = (prev.pend ++ it.map(e =>
-              PendEvent(micros(e.ts), e.side, e.event_id)))
-            .filter(p => p.side >= 0 && p.side < nStages && reached(p.side) < 0)
-            .sortBy(p => (p.ts_us, p.side, p.event_id))
-          val (ready, pend) = merged.partition(_.ts_us <= wUs)
-          val out = Seq.newBuilder[FunnelHit]
-          for (p <- ready) {
+          val pend = flushToWatermark(state, prev.pend, it,
+              p => p.side >= 0 && p.side < nStages && reached(p.side) < 0) { p =>
             val i = p.side
             if (reached(i) < 0 &&
                 (i == 0 || (reached(i - 1) >= 0 && p.ts_us > reached(i - 1)))) {
@@ -368,9 +349,7 @@ object Streams {
               out += FunnelHit(uid, i + 1, p.ts_us)
             }
           }
-          val pendKept = pend.filter(p => reached(p.side) < 0)
-          state.update(FunnelState(pendKept, reached.toSeq))
-          if (pendKept.nonEmpty) state.setTimeoutTimestamp(wUs / 1000L + 1L)
+          state.update(FunnelState(pend, reached.toSeq))
           out.result().iterator
       }
   }
@@ -429,6 +408,27 @@ object Streams {
     .select(date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
       col("event_type"), col("n"))
 
+  /** The one Update-mode per-group fold the sketch streams run on:
+    * `rows` are keyed by their first field; each micro-batch folds a
+    * group's values into its state (`zero` for a new group) and emits
+    * the group's whole current answer from the folded state. Update
+    * semantics: the last emission per group is current — a sink keyed by
+    * group keeps only the latest emission. */
+  private def foldGroups[I, S: Encoder, O: Encoder](
+      rows: Dataset[(String, I)], zero: => S)(
+      fold: (S, Iterator[I]) => S)(
+      emit: (String, S) => Iterator[O]): Dataset[O] = {
+    import rows.sparkSession.implicits._
+    rows.groupByKey(_._1)
+      .flatMapGroupsWithState[S, O](
+        OutputMode.Update, GroupStateTimeout.NoTimeout) {
+        (g: String, it: Iterator[(String, I)], state: GroupState[S]) =>
+          val cur = fold(state.getOption.getOrElse(zero), it.map(_._2))
+          state.update(cur)
+          emit(g, cur)
+      }
+  }
+
   /** The exact-parity tokenizer every stateful text stream shares with
     * the batch plans: SQL space-only trim (U+0020, NOT Java trim) →
     * Locale.ROOT lowercase (Spark's locale-independent `lower`) →
@@ -448,8 +448,8 @@ object Streams {
     * side ([[graft.queries.TextQueries]] q_top_terms) under `readStream`.
     * Each micro-batch folds its documents into the per-group (tf, df)
     * state and emits the group's refreshed top-k by (tf desc, term asc)
-    * as (group, rank, term, tf, df) rows (Update semantics: the last
-    * emission per group is current).
+    * as (group, rank, term, tf, df) rows (Update semantics, see
+    * [[foldGroups]]).
     *
     * df without doc-id state: each input row is one document, and a
     * document increments a term's df at most once — so as long as every
@@ -471,32 +471,28 @@ object Streams {
     * + bounded heap (approximate), the same exact-vs-sketch trade
     * [[kmvDistinctStream]] documents for cardinality. */
   def topTermsStream(docs: DataFrame, groupCol: String, textCol: String,
-                     k: Int): org.apache.spark.sql.Dataset[(String, Int, String, Long, Long)] = {
+                     k: Int): Dataset[(String, Int, String, Long, Long)] = {
     import docs.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    docs.select(col(groupCol).cast("string"), col(textCol).cast("string"))
-      .as[(String, String)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[TermCounts, (String, Int, String, Long, Long)](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (g: String, it: Iterator[(String, String)], state: GroupState[TermCounts]) =>
-          val prev = state.getOption.getOrElse(TermCounts(Map.empty, Map.empty))
-          val tf = scala.collection.mutable.Map.empty[String, Long] ++ prev.tf
-          val df = scala.collection.mutable.Map.empty[String, Long] ++ prev.df
-          it.foreach { case (_, text) =>
-            // NULL text matches batch explode-of-null (the row vanishes)
-            if (text != null) {
-              val toks = exactTokens(text)
-              toks.foreach(t => tf.update(t, tf.getOrElse(t, 0L) + 1L))
-              toks.distinct.foreach(t => df.update(t, df.getOrElse(t, 0L) + 1L))
-            }
-          }
-          state.update(TermCounts(tf.toMap, df.toMap))
-          tf.toSeq.sortBy { case (t, c) => (-c, t) }.take(k)
-            .iterator.zipWithIndex.map { case ((t, c), i) =>
-              (g, i + 1, t, c, df(t))
-            }
+    foldGroups(docs.select(col(groupCol).cast("string"),
+        col(textCol).cast("string")).as[(String, String)],
+        TermCounts(Map.empty, Map.empty)) { (prev, texts) =>
+      val tf = scala.collection.mutable.Map.empty[String, Long] ++ prev.tf
+      val df = scala.collection.mutable.Map.empty[String, Long] ++ prev.df
+      texts.foreach { text =>
+        // NULL text matches batch explode-of-null (the row vanishes)
+        if (text != null) {
+          val toks = exactTokens(text)
+          toks.foreach(t => tf.update(t, tf.getOrElse(t, 0L) + 1L))
+          toks.distinct.foreach(t => df.update(t, df.getOrElse(t, 0L) + 1L))
+        }
       }
+      TermCounts(tf.toMap, df.toMap)
+    } { (g, cur) =>
+      cur.tf.toSeq.sortBy { case (t, c) => (-c, t) }.take(k)
+        .iterator.zipWithIndex.map { case ((t, c), i) =>
+          (g, i + 1, t, c, cur.df(t))
+        }
+    }
   }
 
   /** Per-group KMV state: the k smallest distinct hashes seen so far —
@@ -508,45 +504,37 @@ object Streams {
   /** Streaming distinct-count: [[graft.ops.Sketch]]'s KMV sketch carried
     * in GroupState. Each micro-batch folds the batch's hashes into the
     * k-minima (the sketch merge — order statistics compose, SketchSpec)
-    * and emits the group's refreshed estimate (Update semantics: the
-    * last row per group is current). The estimate arithmetic replicates
+    * and emits the group's refreshed estimate (Update semantics, see
+    * [[foldGroups]]). The estimate arithmetic replicates
     * the batch finisher digit-for-digit — one double division, then
     * HALF_UP rounding to 3 decimals, the same op chain Spark's
     * `round(…, 3)` performs — so StreamSketchSpec can assert exact
     * equality with [[graft.ops.Sketch.kmvDistinct]] over the same
     * data. */
   def kmvDistinctStream(df: DataFrame, groupCol: String, valueCol: String,
-                        k: Int): org.apache.spark.sql.Dataset[(String, Double)] = {
+                        k: Int): Dataset[(String, Double)] = {
     import df.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val two60 = 1152921504606846976L // 2^60, exact as a double
     def estimate(minima: Array[Long]): Double = {
       val raw = if (minima.length < k) minima.length.toDouble
         else (k - 1).toDouble * two60.toDouble / minima.last.toDouble
       BigDecimal(raw).setScale(3, BigDecimal.RoundingMode.HALF_UP).toDouble
     }
-    df.select(col(groupCol).cast("string"),
-        graft.ops.Sketch.hash60(col(valueCol)))
-      .as[(String, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[KmvState, (String, Double)](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (g: String, it: Iterator[(String, Long)], state: GroupState[KmvState]) =>
-          val prev = state.getOption.map(_.minima).getOrElse(Array.empty[Long])
-          // fold the batch into a k-capped ordered set so the transient
-          // working set is O(k), not O(batch rows per group) — only the k
-          // smallest distinct hashes can survive, so dropping a hash the
-          // moment it exceeds the current k-th minimum changes nothing
-          val acc = scala.collection.mutable.TreeSet.empty[Long]
-          prev.foreach(acc.add) // ≤ k by construction
-          it.map(_._2).foreach { h =>
-            if (acc.size < k) acc.add(h)
-            else if (h < acc.last && acc.add(h)) acc.remove(acc.last)
-          }
-          val merged = acc.toArray // ascending, ≤ k elements
-          state.update(KmvState(merged))
-          Iterator.single((g, estimate(merged)))
+    foldGroups(df.select(col(groupCol).cast("string"),
+        graft.ops.Sketch.hash60(col(valueCol))).as[(String, Long)],
+        KmvState(Array.empty[Long])) { (prev, hashes) =>
+      // fold the batch into a k-capped ordered set so the transient
+      // working set is O(k), not O(batch rows per group) — only the k
+      // smallest distinct hashes can survive, so dropping a hash the
+      // moment it exceeds the current k-th minimum changes nothing
+      val acc = scala.collection.mutable.TreeSet.empty[Long]
+      prev.minima.foreach(acc.add) // ≤ k by construction
+      hashes.foreach { h =>
+        if (acc.size < k) acc.add(h)
+        else if (h < acc.last && acc.add(h)) acc.remove(acc.last)
       }
+      KmvState(acc.toArray) // ascending, ≤ k elements
+    } { (g, cur) => Iterator.single((g, estimate(cur.minima))) }
   }
 
   /** Per-group exact moments state: three longs — the whole point. A
@@ -567,11 +555,13 @@ object Streams {
     * rounding — the same sequence Spark's `round(…, 6)` performs), so
     * StreamMomentsSpec asserts EXACT equality with the batch query at
     * every stage and across a restart. Exactness holds while
-    * n·cents² < 2^53 per group (documented in valueMoments). */
+    * n·cents² < 2^53 per group (documented in valueMoments). A NULL
+    * value counts toward n but not toward Σv or Σv², like the batch
+    * query's `count(*)` next to its null-skipping sums. Update
+    * semantics, see [[foldGroups]]. */
   def momentsStream(df: DataFrame, groupCol: String, valueCol: String)
-      : org.apache.spark.sql.Dataset[(String, Long, Double, Double)] = {
+      : Dataset[(String, Long, Double, Double)] = {
     import df.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     def fin(st: MomState): (Double, Double) = {
       val m = st.s.toDouble / st.n
       val mean = BigDecimal(m / 100.0)
@@ -581,21 +571,16 @@ object Streams {
         .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
       (mean, std)
     }
-    df.select(col(groupCol).cast("string"),
+    foldGroups(df.select(col(groupCol).cast("string"),
         (col(valueCol).cast(DecimalType(18, 2)) * 100).cast("long"))
-      .as[(String, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[MomState, (String, Long, Double, Double)](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (g: String, it: Iterator[(String, Long)], state: GroupState[MomState]) =>
-          val prev = state.getOption.getOrElse(MomState(0L, 0L, 0L))
-          var n = prev.n; var s = prev.s; var s2 = prev.s2
-          it.foreach { case (_, v) => n += 1; s += v; s2 += v * v }
-          val st = MomState(n, s, s2)
-          state.update(st)
-          val (mean, std) = fin(st)
-          Iterator.single((g, n, mean, std))
-      }
+        .as[(String, Option[Long])], MomState(0L, 0L, 0L)) { (prev, cents) =>
+      var n = prev.n; var s = prev.s; var s2 = prev.s2
+      cents.foreach { c => n += 1; c.foreach { v => s += v; s2 += v * v } }
+      MomState(n, s, s2)
+    } { (g, cur) =>
+      val (mean, std) = fin(cur)
+      Iterator.single((g, cur.n, mean, std))
+    }
   }
 
   /** Per-group histogram state: integer bin counts keyed by
@@ -610,45 +595,41 @@ object Streams {
     * (n, p50, p90, p99) estimates computed with the identical op chain
     * (ceil(q·n) threshold scan over ordered bins, bin·width double
     * multiply), so StreamHistSpec asserts EXACT equality with the batch
-    * query at every stage and across a checkpoint restart. */
+    * query at every stage and across a checkpoint restart. Update
+    * semantics, see [[foldGroups]]. */
   def histQuantileStream(df: DataFrame, groupCol: String, valueCol: String,
                          width: Double)
-      : org.apache.spark.sql.Dataset[(String, Long, Double, Double, Double)] = {
+      : Dataset[(String, Long, Double, Double, Double)] = {
     import df.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    df.select(col(groupCol).cast("string"),
-        floor(col(valueCol) / width).cast("long"))
-      .as[(String, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[HistState, (String, Long, Double, Double, Double)](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (g: String, it: Iterator[(String, Long)], state: GroupState[HistState]) =>
-          val bins = scala.collection.mutable.Map.empty[Long, Long] ++
-            state.getOption.map(_.bins).getOrElse(Map.empty)
-          it.foreach { case (_, b) => bins.update(b, bins.getOrElse(b, 0L) + 1L) }
-          state.update(HistState(bins.toMap))
-          val n = bins.valuesIterator.sum
-          val sorted = bins.toSeq.sortBy(_._1)
-          // batch-identical interpolation op chain (Sketch.histQuantiles):
-          // double ceil, exact integer-valued subtractions, one division,
-          // multiply-adds in the same order
-          def est(q: Double): Double = {
-            val need = math.ceil(q * n)
-            var cum = 0L
-            var ans = 0L
-            var cnt = 0L
-            var found = false
-            sorted.foreach { case (b, c) =>
-              if (!found) {
-                cum += c
-                if (cum >= need) { ans = b; cnt = c; found = true }
-              }
-            }
-            val before = (cum - cnt).toDouble
-            ans.toDouble * width + (need - before) / cnt.toDouble * width
+    foldGroups(df.select(col(groupCol).cast("string"),
+        floor(col(valueCol) / width).cast("long")).as[(String, Long)],
+        HistState(Map.empty)) { (prev, bs) =>
+      val bins = scala.collection.mutable.Map.empty[Long, Long] ++ prev.bins
+      bs.foreach(b => bins.update(b, bins.getOrElse(b, 0L) + 1L))
+      HistState(bins.toMap)
+    } { (g, cur) =>
+      val n = cur.bins.valuesIterator.sum
+      val sorted = cur.bins.toSeq.sortBy(_._1)
+      // batch-identical interpolation op chain (Sketch.histQuantiles):
+      // double ceil, exact integer-valued subtractions, one division,
+      // multiply-adds in the same order
+      def est(q: Double): Double = {
+        val need = math.ceil(q * n)
+        var cum = 0L
+        var ans = 0L
+        var cnt = 0L
+        var found = false
+        sorted.foreach { case (b, c) =>
+          if (!found) {
+            cum += c
+            if (cum >= need) { ans = b; cnt = c; found = true }
           }
-          Iterator.single((g, n, est(0.5), est(0.9), est(0.99)))
+        }
+        val before = (cum - cnt).toDouble
+        ans.toDouble * width + (need - before) / cnt.toDouble * width
       }
+      Iterator.single((g, n, est(0.5), est(0.9), est(0.99)))
+    }
   }
 
   /** Built-in session windows (30-minute gap) per user with a 2-hour
@@ -684,36 +665,27 @@ object Streams {
     * convention — see [[graft.ops.Sketch.qsampleQuantiles]] for why
     * that double chain IS the spec on all three sides). StreamQSampleSpec
     * asserts EXACT equality with the batch sketch across micro-batch
-    * splits. */
+    * splits. Update semantics, see [[foldGroups]]. */
   def qsampleStream(df: DataFrame, groupCol: String, idCol: String,
                     valueCol: String, k: Int)
-      : org.apache.spark.sql.Dataset[
-          (String, Long, Long, Double, Double, Double)] = {
+      : Dataset[(String, Long, Long, Double, Double, Double)] = {
     import df.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    df.select(col(groupCol).cast("string"),
-        col(idCol).cast("string"), col(valueCol).cast("double"))
-      .as[(String, String, Double)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[QSampleState,
-          (String, Long, Long, Double, Double, Double)](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (g: String, it: Iterator[(String, String, Double)],
-         state: GroupState[QSampleState]) =>
-          val st = state.getOption.getOrElse(QSampleState(0L, Nil))
-          var n = st.n
-          val batch = it.map { case (_, id, v) =>
-            n += 1
-            (graft.ops.Sketch.hash60Local(id), v)
-          }.toList
-          // (h, v) ascending — the TopK ordering of the batch sketch
-          val keep = (st.keep ++ batch).sorted.take(k)
-          state.update(QSampleState(n, keep))
-          val vs = keep.map(_._2).sorted.toIndexedSeq
-          val m = vs.length.toLong
-          def est(q: Double): Double = vs(math.ceil(q * m).toInt - 1)
-          Iterator.single((g, n, m, est(0.5), est(0.9), est(0.99)))
-      }
+    foldGroups(df.select(col(groupCol).cast("string"),
+        struct(col(idCol).cast("string"), col(valueCol).cast("double")))
+        .as[(String, (String, Double))], QSampleState(0L, Nil)) { (st, rows) =>
+      var n = st.n
+      val batch = rows.map { case (id, v) =>
+        n += 1
+        (graft.ops.Sketch.hash60Local(id), v)
+      }.toList
+      // (h, v) ascending — the TopK ordering of the batch sketch
+      QSampleState(n, (st.keep ++ batch).sorted.take(k))
+    } { (g, cur) =>
+      val vs = cur.keep.map(_._2).sorted.toIndexedSeq
+      val m = vs.length.toLong
+      def est(q: Double): Double = vs(math.ceil(q * m).toInt - 1)
+      Iterator.single((g, cur.n, m, est(0.5), est(0.9), est(0.99)))
+    }
   }
 
   /** One indexed document in [[Bm25State]]: its length and its term
@@ -732,8 +704,7 @@ object Streams {
     * `readStream` — each micro-batch folds its documents into the
     * per-group corpus state ([[Bm25State]]) and emits the group's
     * refreshed top-k (group, rank, doc_id, score) by BM25 over the fixed
-    * query-term set (Update semantics: the last emission per group is
-    * current). Every earlier posting is re-scored each batch because new
+    * query-term set (Update semantics, see [[foldGroups]]). Every earlier posting is re-scored each batch because new
     * documents shift N, avgdl and df — BM25 scores are corpus-relative,
     * so a "refreshed top-k" inherently re-ranks; that re-scoring is
     * O(postings), the same bound as the state.
@@ -757,66 +728,59 @@ object Streams {
     * the stream and a re-run batch alike. */
   def bm25Stream(docs: DataFrame, groupCol: String, idCol: String,
                  textCol: String, terms: Seq[String],
-                 k: Int): org.apache.spark.sql.Dataset[(String, Int, Long, Double)] = {
+                 k: Int): Dataset[(String, Int, Long, Double)] = {
     import docs.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val k1 = graft.queries.RetrievalQueries.k1
     val b = graft.queries.RetrievalQueries.b
     val termSet = terms.toSet
-    docs.select(col(groupCol).cast("string"), col(idCol).cast("long"),
-        col(textCol).cast("string"))
-      .as[(String, Long, String)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[Bm25State, (String, Int, Long, Double)](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (g: String, it: Iterator[(String, Long, String)],
-         state: GroupState[Bm25State]) =>
-          val prev = state.getOption.getOrElse(
-            Bm25State(0L, 0L, Map.empty, Vector.empty))
-          var n = prev.n
-          var sdl = prev.sdl
-          val df = scala.collection.mutable.Map.empty[String, Long] ++ prev.df
-          val posts = Vector.newBuilder[Bm25Post]
-          posts ++= prev.posts
-          it.foreach { case (_, docId, text) =>
-            n += 1L // count(*) counts null-text rows too
-            if (text != null) {
-              val toks = exactTokens(text)
-              sdl += toks.length.toLong
-              val tf = scala.collection.mutable.Map.empty[String, Long]
-              toks.foreach(t =>
-                if (termSet(t)) tf.update(t, tf.getOrElse(t, 0L) + 1L))
-              if (tf.nonEmpty) {
-                tf.keysIterator.foreach(t =>
-                  df.update(t, df.getOrElse(t, 0L) + 1L))
-                posts += Bm25Post(docId, toks.length.toLong, tf.toMap)
-              }
-            }
+    foldGroups(docs.select(col(groupCol).cast("string"),
+        struct(col(idCol).cast("long"), col(textCol).cast("string")))
+        .as[(String, (Long, String))],
+        Bm25State(0L, 0L, Map.empty, Vector.empty)) { (prev, rows) =>
+      var n = prev.n
+      var sdl = prev.sdl
+      val df = scala.collection.mutable.Map.empty[String, Long] ++ prev.df
+      val posts = Vector.newBuilder[Bm25Post]
+      posts ++= prev.posts
+      rows.foreach { case (docId, text) =>
+        n += 1L // count(*) counts null-text rows too
+        if (text != null) {
+          val toks = exactTokens(text)
+          sdl += toks.length.toLong
+          val tf = scala.collection.mutable.Map.empty[String, Long]
+          toks.foreach(t =>
+            if (termSet(t)) tf.update(t, tf.getOrElse(t, 0L) + 1L))
+          if (tf.nonEmpty) {
+            tf.keysIterator.foreach(t =>
+              df.update(t, df.getOrElse(t, 0L) + 1L))
+            posts += Bm25Post(docId, toks.length.toLong, tf.toMap)
           }
-          val cur = Bm25State(n, sdl, df.toMap, posts.result())
-          state.update(cur)
-          // batch-identical arithmetic: see scaladoc contract
-          val nD = cur.n.toDouble
-          val sdlD = cur.sdl.toDouble
-          def score(p: Bm25Post): Double = {
-            var acc = 0L
-            p.tf.foreach { case (t, tfl) =>
-              val tfD = tfl.toDouble
-              val dfD = cur.df(t).toDouble
-              val idf = math.log(1.0 + (nD - dfD + 0.5) / (dfD + 0.5))
-              val denom = tfD +
-                k1 * ((1 - b) + b * p.dl.toDouble / (sdlD / nD))
-              acc += BigDecimal(idf * tfD * (k1 + 1) / denom * 1e9)
-                .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
-            }
-            BigDecimal(acc.toDouble / 1e9)
-              .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-          }
-          cur.posts.map(p => (p.docId, score(p)))
-            .sortBy { case (id, s) => (-s, id) }.take(k)
-            .iterator.zipWithIndex
-            .map { case ((id, s), i) => (g, i + 1, id, s) }
+        }
       }
+      Bm25State(n, sdl, df.toMap, posts.result())
+    } { (g, cur) =>
+      // batch-identical arithmetic: see scaladoc contract
+      val nD = cur.n.toDouble
+      val sdlD = cur.sdl.toDouble
+      def score(p: Bm25Post): Double = {
+        var acc = 0L
+        p.tf.foreach { case (t, tfl) =>
+          val tfD = tfl.toDouble
+          val dfD = cur.df(t).toDouble
+          val idf = math.log(1.0 + (nD - dfD + 0.5) / (dfD + 0.5))
+          val denom = tfD +
+            k1 * ((1 - b) + b * p.dl.toDouble / (sdlD / nD))
+          acc += BigDecimal(idf * tfD * (k1 + 1) / denom * 1e9)
+            .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
+        }
+        BigDecimal(acc.toDouble / 1e9)
+          .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+      }
+      cur.posts.map(p => (p.docId, score(p)))
+        .sortBy { case (id, s) => (-s, id) }.take(k)
+        .iterator.zipWithIndex
+        .map { case ((id, s), i) => (g, i + 1, id, s) }
+    }
   }
 
   /** Streaming Misra–Gries heavy-hitter candidates: the m-counter sketch
@@ -824,7 +788,8 @@ object Streams {
     * O(m) state per group for the stream's lifetime, the frequent-ITEMS
     * counterpart of [[kmvDistinctStream]]'s distinct-count sketch. Each
     * micro-batch folds its keys into the group's sketch and emits the
-    * refreshed entries as (group, key, est, n) rows (Update semantics);
+    * refreshed entries as (group, key, est, n) rows (Update semantics,
+    * see [[foldGroups]]);
     * a periodic batch job can verify the emitted candidates exactly, the
     * same sketch-then-verify split as the batch
     * [[graft.ops.HeavyHitters.heavyHitters]] two-pass.
@@ -843,29 +808,21 @@ object Streams {
     * previously emitted row — per-(group, key) rows would leave a sink
     * keyed that way holding evicted candidates forever. One row per
     * group makes "the last row per group is current" exactly true, the
-    * same contract kmvDistinctStream documents; ≤ m entries per row by
+    * contract [[foldGroups]] states; ≤ m entries per row by
     * construction. */
   def heavyHittersStream(df: DataFrame, groupCol: String, keyCol: String,
-                         m: Int): org.apache.spark.sql.Dataset[(String, Long, Seq[(String, Long)])] = {
+                         m: Int): Dataset[(String, Long, Seq[(String, Long)])] = {
     import df.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    import graft.ops.HeavyHitters
-    import graft.ops.HeavyHitters.MgBuf
-    val agg = HeavyHitters.mgSketch(m)
-    df.select(col(groupCol).cast("string"), col(keyCol).cast("string"))
-      .as[(String, String)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[MgBuf, (String, Long, Seq[(String, Long)])](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (g: String, it: Iterator[(String, String)], state: GroupState[MgBuf]) =>
-          val cur = it.foldLeft(state.getOption.getOrElse(agg.zero)) {
-            case (buf, (_, key)) =>
-              if (key == null) buf else agg.reduce(buf, key)
-          }
-          state.update(cur)
-          Iterator.single((g, cur.n,
-            cur.counts.toSeq.sortBy { case (k, c) => (-c, k) }))
+    val agg = graft.ops.HeavyHitters.mgSketch(m)
+    foldGroups(df.select(col(groupCol).cast("string"),
+        col(keyCol).cast("string")).as[(String, String)], agg.zero) {
+      (buf, keys) => keys.foldLeft(buf) { (b, key) =>
+        if (key == null) b else agg.reduce(b, key)
       }
+    } { (g, cur) =>
+      Iterator.single((g, cur.n,
+        cur.counts.toSeq.sortBy { case (k, c) => (-c, k) }))
+    }
   }
 
   /** Per-group Count-Min state: flat row-major depth×width counters. */
@@ -873,11 +830,12 @@ object Streams {
 
   /** Streaming Count-Min sketch: [[graft.ops.Sketch]]'s CMS counters
     * carried in GroupState, probed at a fixed O(1) key set each
-    * micro-batch (Update semantics: the last (group, key) row is
-    * current). Counter addition is commutative and associative, so —
-    * like the KMV stream and unlike Misra–Gries — the streaming state is
-    * EXACTLY the batch sketch under ANY micro-batching; StreamSketchSpec
-    * asserts bit-equality of every probe estimate against
+    * micro-batch (Update semantics, see [[foldGroups]]: the last
+    * (group, key) row is current). Counter addition is commutative and
+    * associative, so — like the KMV stream and unlike Misra–Gries — the
+    * streaming state is EXACTLY the batch sketch under ANY
+    * micro-batching; StreamSketchSpec asserts bit-equality of every
+    * probe estimate against
     * [[graft.ops.Sketch.cmsEstimate]] over the same rows, via the
     * [[graft.ops.Sketch.cmsBucketLocal]] hash twin. State is
     * O(depth·width) longs per group (16 KiB at 4×512) for the stream's
@@ -885,37 +843,33 @@ object Streams {
     * uncounted, the batch operator's contract. */
   def cmsStream(df: DataFrame, groupCol: String, keyCol: String,
                 depth: Int, width: Int, probeKeys: Seq[String])
-      : org.apache.spark.sql.Dataset[(String, String, Long)] = {
+      : Dataset[(String, String, Long)] = {
     import df.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     import graft.ops.Sketch
-    df.select(col(groupCol).cast("string"), col(keyCol).cast("string"))
-      .as[(String, String)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[CmsState, (String, String, Long)](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (g: String, it: Iterator[(String, String)], state: GroupState[CmsState]) =>
-          val c = state.getOption.map(_.counters)
-            .getOrElse(new Array[Long](depth * width))
-          it.foreach { case (_, key) =>
-            if (key != null) {
-              val bs = Sketch.cmsBucketsLocal(key, depth, width)
-              var j = 0
-              while (j < depth) { c(j * width + bs(j)) += 1L; j += 1 }
-            }
-          }
-          state.update(CmsState(c))
-          probeKeys.iterator.map { k =>
-            val bs = Sketch.cmsBucketsLocal(k, depth, width)
-            var est = Long.MaxValue
-            var j = 0
-            while (j < depth) {
-              val v = c(j * width + bs(j))
-              if (v < est) est = v
-              j += 1
-            }
-            (g, k, est)
-          }
+    foldGroups(df.select(col(groupCol).cast("string"),
+        col(keyCol).cast("string")).as[(String, String)],
+        CmsState(new Array[Long](depth * width))) { (st, keys) =>
+      val c = st.counters
+      keys.foreach { key =>
+        if (key != null) {
+          val bs = Sketch.cmsBucketsLocal(key, depth, width)
+          var j = 0
+          while (j < depth) { c(j * width + bs(j)) += 1L; j += 1 }
+        }
       }
+      st
+    } { (g, cur) =>
+      probeKeys.iterator.map { k =>
+        val bs = Sketch.cmsBucketsLocal(k, depth, width)
+        var est = Long.MaxValue
+        var j = 0
+        while (j < depth) {
+          val v = cur.counters(j * width + bs(j))
+          if (v < est) est = v
+          j += 1
+        }
+        (g, k, est)
+      }
+    }
   }
 }

@@ -10,7 +10,9 @@ import graft.ops.Checkpoints
   * an old dir of another prefix stay; the once-per-root sweep runs once.
   * [[Checkpoints.buildOnce]] builds a tree once, never shares or leaks a
   * tmp dir, and is the only tmp-then-rename in the main code; memory-sink
-  * streams start and session conf is set only in `StreamQueries.runGate`. */
+  * streams start and session conf is set only in `StreamQueries.runGate`;
+  * stateful stream bodies are written only in `streaming/Streams.scala`,
+  * on its shared kernels. */
 class ScratchSweepSpec extends AnyFunSuite with TempDirs {
   private val hour = Checkpoints.staleAfterMs
 
@@ -128,6 +130,13 @@ class ScratchSweepSpec extends AnyFunSuite with TempDirs {
   private def read(f: File): String =
     new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
 
+  /** Every (file, offset) of `p` under src/main. */
+  private def hits(p: String): Seq[(File, Int)] = sources(main).flatMap { f =>
+    val src = read(f)
+    Iterator.iterate(src.indexOf(p))(i => src.indexOf(p, i + 1))
+      .takeWhile(_ >= 0).map(i => (f, i)).toSeq
+  }
+
   test("src/main renames and deletes recursively only in ops/Checkpoints.scala") {
     assert(main.isDirectory, s"${main.getAbsolutePath} not found")
     // a def that both lists a directory and deletes is a recursive delete
@@ -155,15 +164,28 @@ class ScratchSweepSpec extends AnyFunSuite with TempDirs {
     assert(gateStart >= 0, s"no runGate in $gateFile")
     val gateEnd = gateSrc.indexOf("\n  }\n", gateStart)
     for (p <- Seq("format(\"memory\")", "Trigger.AvailableNow()", "conf.set(")) {
-      val hits = sources(main).flatMap { f =>
-        val src = read(f)
-        Iterator.iterate(src.indexOf(p))(i => src.indexOf(p, i + 1))
-          .takeWhile(_ >= 0).map(i => (f, i)).toSeq
-      }
-      assert(hits.size === 1, s"$p: ${hits.map(_._1).mkString(", ")}")
-      val (f, i) = hits.head
+      val at = hits(p)
+      assert(at.size === 1, s"$p: ${at.map(_._1).mkString(", ")}")
+      val (f, i) = at.head
       assert(f.getPath == gateFile.getPath && i > gateStart && i < gateEnd,
         s"$p outside StreamQueries.runGate: $f")
     }
+  }
+
+  test("src/main calls flatMapGroupsWithState 7 times, all in " +
+      "streaming/Streams.scala; Update mode without timeout only in " +
+      "foldGroups and sessionizeStreamSnapshot") {
+    assert(main.isDirectory, s"${main.getAbsolutePath} not found")
+    val streams = new File(main, "graft/streaming/Streams.scala").getPath
+    val calls = hits("flatMapGroupsWithState[")
+    assert(calls.size === 7 && calls.forall(_._1.getPath == streams),
+      calls.map(_._1).mkString(", "))
+    val src = read(new File(streams))
+    val enclosing = hits("OutputMode.Update, GroupStateTimeout.NoTimeout").map {
+      case (f, i) =>
+        assert(f.getPath == streams, s"Update/NoTimeout outside Streams: $f")
+        """\bdef\s+(\w+)""".r.findAllMatchIn(src.substring(0, i)).toSeq.last.group(1)
+    }
+    assert(enclosing === Seq("sessionizeStreamSnapshot", "foldGroups"))
   }
 }

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import graft.queries.RetrievalQueries
 import graft.streaming.Streams
 
@@ -32,31 +31,12 @@ class StreamBm25Spec extends SparkSpec {
     }.toMap
 
   private def runStream(src: String, ckpt: Option[String])
-      : Map[String, Seq[(Int, Long, Double)]] = {
-    val got = scala.collection.mutable.Map[String, Seq[(Int, Long, Double)]]()
-    val schema = spark.read.parquet(src).schema
-    val stream = spark.readStream.schema(schema).parquet(src)
-    var w = Streams.bm25Stream(stream, "source", "doc_id", "text", terms, k)
-      .toDF("source", "rk", "doc_id", "score")
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        batch.as[(String, Int, Long, Double)].collect()
-          .groupBy(_._1).foreach { case (g, rows) =>
-            got.synchronized {
-              got(g) = rows.toSeq.sortBy(_._2)
-                .map { case (_, rk, id, s) => (rk, id, s) }
-            }
-          }
-      }
-      .outputMode("update")
-      .trigger(Trigger.AvailableNow())
-    ckpt.foreach(c => w = w.option("checkpointLocation", c))
-    val q = w.start()
-    // a discarded false here would surface as a confusing partial-data
-    // mismatch (and leak a running query into the shared session)
-    assert(q.awaitTermination(120000), "stream did not finish in 120 s")
-    got.toMap
-  }
+      : Map[String, Seq[(Int, Long, Double)]] =
+    lastPerKey(src, ckpt)(
+      Streams.bm25Stream(_, "source", "doc_id", "text", terms, k))(
+      _.groupBy(_._1).map { case (g, rows) =>
+        g -> rows.toSeq.sortBy(_._2).map { case (_, rk, id, s) => (rk, id, s) }
+      })
 
   test("crafted corpus parity: null text, empty text, edge whitespace") {
     // null text counts toward N (shifting every score) but posts

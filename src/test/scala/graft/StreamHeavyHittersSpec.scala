@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.streaming.Trigger
 import graft.streaming.Streams
 
 /** Streaming Misra–Gries: unlike KMV (exact order statistics), MG counter
@@ -29,29 +28,12 @@ class StreamHeavyHittersSpec extends SparkSpec {
     mix("ga", a) ++ mix("gb", b)
   }
 
+  // one row per group per batch: "last row per group is current" is
+  // the emission contract under test, so the fold keeps the last
   private def runOnce(src: String, ckpt: String)
-      : Map[String, (Long, Map[String, Long])] = {
-    val got = scala.collection.mutable.Map[String, (Long, Map[String, Long])]()
-    val schema = spark.read.parquet(src).schema
-    val stream = spark.readStream.schema(schema).parquet(src)
-    // one row per group per batch: "last row per group is current" is
-    // the emission contract under test, so the fold keeps the last
-    val q = Streams.heavyHittersStream(stream, "g", "key", m)
-      .toDF("g", "n", "candidates")
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        batch.as[(String, Long, Seq[(String, Long)])].collect()
-          .foreach { case (g, n, cands) =>
-            got.synchronized { got(g) = (n, cands.toMap) }
-          }
-      }
-      .outputMode("update")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    assert(q.awaitTermination(120000), "stream did not finish in 120 s")
-    got.toMap
-  }
+      : Map[String, (Long, Map[String, Long])] =
+    lastPerKey(src, Some(ckpt))(Streams.heavyHittersStream(_, "g", "key", m))(
+      _.map { case (g, n, cands) => g -> ((n, cands.toMap)) })
 
   test("guarantees hold across micro-batches and a checkpoint restart") {
     withTempDir("graft-hh-stream") { dir =>

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import graft.queries.AnalyticsQueries
 import graft.streaming.Streams
 
@@ -26,31 +25,20 @@ class StreamMomentsSpec extends SparkSpec {
       val ckpt = s"${dir.getAbsolutePath}/ckpt"
 
       // split by event_id range: every event_type appears in both halves,
-      // so every group's state must carry across the restart
+      // so every group's state must carry across the restart. One NULL
+      // value lands in the second half: it counts toward n but not toward
+      // the sums, as in the batch query's count(*) next to sum(vc)
       val whole = Tables.events(spark, "/root/testdata/sf0.001")
         .select("event_id", "event_type", "value")
+        .union(Seq((1000001L, "click", Option.empty[Double]))
+          .toDF("event_id", "event_type", "value"))
       val half1 = whole.filter(col("event_id") % 2 === 0)
       val half2 = whole.filter(col("event_id") % 2 === 1)
 
-      def runOnce(): Map[String, (Long, Double, Double)] = {
-        val got = scala.collection.mutable.Map[String, (Long, Double, Double)]()
-        val schema = spark.read.parquet(src).schema
-        val stream = spark.readStream.schema(schema).parquet(src)
-        val q = Streams.momentsStream(stream, "event_type", "value")
-          .toDF("event_type", "n", "mean_value", "std_value")
-          .writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-            batch.as[(String, Long, Double, Double)].collect()
-              .foreach { case (g, n, m, s) =>
-                got.synchronized { got(g) = (n, m, s) } }
-          }
-          .outputMode("update")
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        assert(q.awaitTermination(120000), "stream did not finish in 120 s")
-        got.toMap
-      }
+      def runOnce(): Map[String, (Long, Double, Double)] =
+        lastPerKey(src, Some(ckpt))(
+          Streams.momentsStream(_, "event_type", "value"))(
+          _.map { case (g, n, m, s) => g -> ((n, m, s)) })
 
       half1.coalesce(1).write.parquet(src)
       val stage1 = runOnce()

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import graft.ops.Sketch
 import graft.streaming.Streams
 
@@ -44,27 +43,10 @@ class StreamQSampleSpec extends SparkSpec {
       val half1 = whole.filter(col("event_id") % 2 === 0)
       val half2 = whole.filter(col("event_id") % 2 === 1)
 
-      def runOnce(): Map[String, (Long, Long, Double, Double, Double)] = {
-        val got = scala.collection.mutable
-          .Map[String, (Long, Long, Double, Double, Double)]()
-        val schema = spark.read.parquet(src).schema
-        val stream = spark.readStream.schema(schema).parquet(src)
-        val q = Streams.qsampleStream(stream, "event_type", "event_id",
-            "value", k)
-          .toDF("event_type", "n", "m", "p50", "p90", "p99")
-          .writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-            batch.as[(String, Long, Long, Double, Double, Double)].collect()
-              .foreach { case (g, n, m, a, b, c) =>
-                got.synchronized { got(g) = (n, m, a, b, c) } }
-          }
-          .outputMode("update")
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        assert(q.awaitTermination(120000), "stream did not finish in 120 s")
-        got.toMap
-      }
+      def runOnce(): Map[String, (Long, Long, Double, Double, Double)] =
+        lastPerKey(src, Some(ckpt))(
+          Streams.qsampleStream(_, "event_type", "event_id", "value", k))(
+          _.map { case (g, n, m, a, b, c) => g -> ((n, m, a, b, c)) })
 
       half1.coalesce(1).write.parquet(src)
       val stage1 = runOnce()

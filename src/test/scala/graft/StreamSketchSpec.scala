@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import graft.ops.Sketch
 import graft.streaming.Streams
 
@@ -27,26 +26,9 @@ class StreamSketchSpec extends SparkSpec {
       val half1 = whole.filter(col("doc_id") < 250).select("source", "text")
       val half2 = whole.filter(col("doc_id") >= 250).select("source", "text")
 
-      // foreachBatch (unlike the memory sink) supports checkpoint
-      // recovery, which stage 2 depends on
-      def runOnce(): Map[String, Double] = {
-        val got = scala.collection.mutable.Map[String, Double]()
-        val schema = spark.read.parquet(src).schema
-        val stream = spark.readStream.schema(schema).parquet(src)
-        val q = Streams.kmvDistinctStream(stream, "source", "text", k)
-          .toDF("source", "kmv_est")
-          .writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-            batch.as[(String, Double)].collect()
-              .foreach { case (g, e) => got.synchronized { got(g) = e } }
-          }
-          .outputMode("update")
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        assert(q.awaitTermination(120000), "stream did not finish in 120 s")
-        got.toMap
-      }
+      def runOnce(): Map[String, Double] =
+        lastPerKey(src, Some(ckpt))(
+          Streams.kmvDistinctStream(_, "source", "text", k))(_.toSeq)
 
       // stage 1: only the first half exists → estimates of half 1
       half1.coalesce(1).write.parquet(src)
@@ -83,24 +65,10 @@ class StreamSketchSpec extends SparkSpec {
       val half1 = whole.filter(col("doc_id") < 250).select("source", "lang")
       val half2 = whole.filter(col("doc_id") >= 250).select("source", "lang")
 
-      def runOnce(): Map[(String, String), Long] = {
-        val got = scala.collection.mutable.Map[(String, String), Long]()
-        val schema = spark.read.parquet(src).schema
-        val stream = spark.readStream.schema(schema).parquet(src)
-        val q = Streams.cmsStream(stream, "source", "lang", depth, width, probes)
-          .toDF("source", "key", "cms_est")
-          .writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-            batch.as[(String, String, Long)].collect()
-              .foreach { case (g, k, e) => got.synchronized { got((g, k)) = e } }
-          }
-          .outputMode("update")
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        assert(q.awaitTermination(120000), "stream did not finish in 120 s")
-        got.toMap
-      }
+      def runOnce(): Map[(String, String), Long] =
+        lastPerKey(src, Some(ckpt))(
+          Streams.cmsStream(_, "source", "lang", depth, width, probes))(
+          _.map { case (g, k, e) => (g, k) -> e })
 
       // batch reference: the same sketch per group over `rows`
       def batchRef(rows: org.apache.spark.sql.DataFrame): Map[(String, String), Long] =

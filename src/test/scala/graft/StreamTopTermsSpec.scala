@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import graft.ops.Shingles
 import graft.streaming.Streams
 
@@ -13,6 +12,13 @@ class StreamTopTermsSpec extends SparkSpec {
   import spark.implicits._
 
   private val k = 10
+
+  /** The stream's current top-k per group, from the rows of one batch. */
+  private def byGroup(rows: Array[(String, Int, String, Long, Long)])
+      : Map[String, Seq[(Int, String, Long, Long)]] =
+    rows.groupBy(_._1).map { case (g, rs) =>
+      g -> rs.toSeq.sortBy(_._2).map { case (_, rk, t, c, d) => (rk, t, c, d) }
+    }
 
   /** Batch analog: group-level q_top_terms core over the same tokenizer. */
   private def batchTop(docs: org.apache.spark.sql.DataFrame)
@@ -42,24 +48,7 @@ class StreamTopTermsSpec extends SparkSpec {
         (5L, "g", null.asInstanceOf[String]) // batch explode drops NULL text
       ).toDF("doc_id", "source", "text")
       docs.coalesce(1).write.parquet(src)
-      val got = scala.collection.mutable.Map[String, Seq[(Int, String, Long, Long)]]()
-      val stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
-      val q = Streams.topTermsStream(stream, "source", "text", k)
-        .toDF("source", "rk", "tok", "tf", "df")
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          batch.as[(String, Int, String, Long, Long)].collect()
-            .groupBy(_._1).foreach { case (g, rows) =>
-              got.synchronized {
-                got(g) = rows.toSeq.sortBy(_._2)
-                  .map { case (_, rk, t, c, d) => (rk, t, c, d) }
-              }
-            }
-        }
-        .outputMode("update")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      assert(q.awaitTermination(120000), "stream did not finish in 120 s")
+      val got = lastPerKey(src)(Streams.topTermsStream(_, "source", "text", k))(byGroup)
       assert(got.toMap === batchTop(docs), "edge-whitespace tokenization diverged")
     }
   }
@@ -76,29 +65,9 @@ class StreamTopTermsSpec extends SparkSpec {
       val half1 = whole.filter(col("doc_id") < 250)
       val half2 = whole.filter(col("doc_id") >= 250)
 
-      def runOnce(): Map[String, Seq[(Int, String, Long, Long)]] = {
-        val got = scala.collection.mutable.Map[String, Seq[(Int, String, Long, Long)]]()
-        val schema = spark.read.parquet(src).schema
-        val stream = spark.readStream.schema(schema).parquet(src)
-        val q = Streams.topTermsStream(stream, "source", "text", k)
-          .toDF("source", "rk", "tok", "tf", "df")
-          .writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-            batch.as[(String, Int, String, Long, Long)].collect()
-              .groupBy(_._1).foreach { case (g, rows) =>
-                got.synchronized {
-                  got(g) = rows.toSeq.sortBy(_._2)
-                    .map { case (_, rk, t, c, d) => (rk, t, c, d) }
-                }
-              }
-          }
-          .outputMode("update")
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        assert(q.awaitTermination(120000), "stream did not finish in 120 s")
-        got.toMap
-      }
+      def runOnce(): Map[String, Seq[(Int, String, Long, Long)]] =
+        lastPerKey(src, Some(ckpt))(
+          Streams.topTermsStream(_, "source", "text", k))(byGroup)
 
       half1.coalesce(1).write.parquet(src)
       val stage1 = runOnce()
