@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType}
   * The first formulation built `array_min`/`array_sort` over an array of
   * per-cell `(d2, id)` structs, with one [[FixedPointDot]] per cell: fine
   * at the 8-cell demo knob, but the √n-cells production shape
-  * (hundreds of cells — [[graft.queries.SimilarityQueries.scaledIvfParams]])
+  * (hundreds of cells: cells ≈ √n of the corpus)
   * made the expression tree too large for whole-stage codegen and
   * allocation-bound in the interpreter (measured 55 s for a 20k×141-cell
   * assignment pass). This expression is the same argmin as ONE generated

@@ -87,10 +87,9 @@ object TextHashes {
     UTF8String.fromBytes(b)
   }
 
-  /** 8-slice one-permutation MinHash over word 3-gram shingles — the
-    * per-document value of [[graft.ops.Shingles.minhashSliced]] over
-    * [[graft.ops.Shingles.shingles3All]]: two seeded md5s per shingle,
-    * each split into four 8-hex slices, minimum per slice. Null when the
+  /** 8-slice one-permutation MinHash over word 3-gram shingles — per
+    * document, two seeded md5s per shingle, each split into four 8-hex
+    * slices, minimum per slice. Null when the
     * document has fewer than 3 tokens (no shingles — mirrors the
     * aggregation path, where such docs produce no signature row).
     *
@@ -220,8 +219,7 @@ object TextHashes {
     new GenericInternalRow(Array[Any](c(0), c(1), c(2)))
   }
 
-  /** 64-bit SimHash over tokens as four 16-bit chunks — the per-document
-    * value of [[graft.ops.Shingles.simhashChunks64]]: per token, the
+  /** 64-bit SimHash over tokens as four 16-bit chunks — per token, the
     * md5's first 16 hex digits parse to 64 bits; each bit votes ±1; a
     * chunk packs its 16 bit-signs MSB-first. */
   def simhash64(words: ArrayData): GenericArrayData = {

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, MapType, StringType}
+import org.apache.spark.sql.types.StringType
 import graft.RfpSynth
 
 /** Cleaning stage of the reference's E2 dataflow, Spark-first.
@@ -44,17 +44,6 @@ object Clean {
     try_to_date(c, "y-M-d"),
     try_to_date(c, "d-M-y"))
 
-  /** P7 — required-column validation, failing with the available columns
-    * as suggestions (ref :188-196,211-219). Runs driver-side against the
-    * schema — a zero-cost pre-stage, not a data pass. */
-  def requireColumns(df: DataFrame, required: Seq[String]): Unit = {
-    val have = df.columns.map(_.toLowerCase).toSet
-    val missing = required.filterNot(c => have(c.toLowerCase))
-    require(missing.isEmpty,
-      s"missing required column(s): ${missing.mkString(", ")}; " +
-        s"available: ${df.columns.mkString(", ")}")
-  }
-
   /** P5 + P6 — drop null dates, keep a 36-month recency horizon relative
     * to a *parameter* asOf (ref :202,206-208; divergence note 3). */
   def recencyFilter(df: DataFrame, dateCol: String, asOf: String): DataFrame =
@@ -66,17 +55,6 @@ object Clean {
   def dropNullLiterals(df: DataFrame, cols: Seq[String]): DataFrame =
     cols.foldLeft(df)((d, c) =>
       d.filter(col(c).isNotNull && !lower(col(c)).isin("none", "nan")))
-
-  /** P9 — polymorphic length (ref get_length :159-167): strings/binary →
-    * length, arrays/maps → element count, scalars → 1, null → null. The
-    * reference dispatches on Python runtime types; Spark types are static
-    * per column, so dispatch happens at plan-build time on the schema. */
-  def polyLength(c: Column, dt: DataType): Column = dt match {
-    case StringType | BinaryType => length(c)
-    case _: ArrayType | _: MapType =>
-      when(c.isNull, lit(null).cast("int")).otherwise(size(c))
-    case _ => when(c.isNull, lit(null).cast("int")).otherwise(lit(1))
-  }
 
   /** P10 — drop empty responses (ref :230-231). */
   def dropEmpty(df: DataFrame, c: String): DataFrame =

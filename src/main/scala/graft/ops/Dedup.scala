@@ -12,8 +12,7 @@ import org.apache.spark.sql.functions._
   * Design notes for scale:
   *  - Every dedup is a single hash-partitioned window or aggregation on the
   *    group key — one shuffle, partial aggregation map-side where possible,
-  *    no collect. At 100 TB a skewed `question` key would salt the window
-  *    key; AQE skew handling covers the aggregate paths.
+  *    no collect. AQE skew handling covers the aggregate paths.
   *  - pandas `drop_duplicates`/`idxmax` keep the *first* row in frame
   *    order; Spark has no stable order, so every operator takes an explicit
   *    deterministic tiebreaker (SURVEY divergence note 2).
@@ -74,71 +73,6 @@ object Dedup {
   def duplicateKeys(df: DataFrame, key: String): DataFrame =
     df.groupBy(col(key)).agg(count(lit(1)).as("cnt")).filter(col("cnt") > 1)
 
-  /** Skew-hardened variant of [[dedupExact]] — the salting escape hatch for
-    * a dominant dedup key. Two phases: (1) pick the per-(key, salt-bucket)
-    * winner, so a hot key's rows spread over `buckets` partitions instead
-    * of serializing in one; (2) pick the final winner among the ≤`buckets`
-    * survivors per key. First-wins semantics and the deterministic
-    * tiebreak are preserved because min-by-order is associative — the
-    * result is row-identical to [[dedupExact]] (DedupSpec asserts it).
-    * Salt is a hash of the order columns: deterministic, and rows of the
-    * same group land in different buckets whenever their tiebreaks differ. */
-  def dedupExactSalted(df: DataFrame, keys: Seq[String],
-                       orderCols: Seq[String], buckets: Int = 16): DataFrame = {
-    val salted = df.withColumn("__salt",
-      pmod(xxhash64(orderCols.map(col): _*), lit(buckets.toLong)))
-    val w1 = Window.partitionBy((keys :+ "__salt").map(col): _*)
-      .orderBy(orderCols.map(col): _*)
-    val survivors = salted.withColumn("__rn", row_number().over(w1))
-      .filter(col("__rn") === 1).drop("__rn")
-    val w2 = Window.partitionBy(keys.map(col): _*)
-      .orderBy(orderCols.map(col): _*)
-    survivors.withColumn("__rn", row_number().over(w2))
-      .filter(col("__rn") === 1)
-      .drop("__rn", "__salt")
-  }
-
-  /** Skew-hardened [[latestPerGroup]] — two-phase max, same salting escape
-    * hatch as [[dedupExactSalted]]: phase 1 keeps only rows at their
-    * (key, salt-bucket) max date, spreading a hot key over `buckets`
-    * window partitions; phase 2 takes the true per-key max over the
-    * survivors. Row-identical because max is associative and a row at the
-    * global max is necessarily at its own bucket's max (DedupSpec asserts
-    * identity). Salt is a deterministic hash of the whole row. */
-  def latestPerGroupSalted(df: DataFrame, key: String, dateCol: String,
-                           buckets: Int = 16): DataFrame = {
-    require(buckets > 1, s"salting needs >1 bucket, got $buckets")
-    val salted = df.withColumn("__salt",
-      pmod(xxhash64(df.columns.map(col).toIndexedSeq: _*), lit(buckets.toLong)))
-    val w1 = Window.partitionBy(col(key), col("__salt"))
-    val survivors = salted.withColumn("__mx1", max(col(dateCol)).over(w1))
-      .filter(col(dateCol) === col("__mx1"))
-    val w2 = Window.partitionBy(col(key))
-    survivors.withColumn("__mx", max(col(dateCol)).over(w2))
-      .filter(col(dateCol) === col("__mx"))
-      .drop("__mx1", "__mx", "__salt")
-  }
-
-  /** Skew-hardened [[longestPerGroup]] — per-bucket argmax then global
-    * argmax over the ≤`buckets` survivors per key. The (length desc,
-    * tiebreak) order is total (tiebreak is unique), so argmax-by-order is
-    * associative and the result is row-identical to the plain path. */
-  def longestPerGroupSalted(df: DataFrame, key: String, lenOf: String,
-                            tiebreak: String, buckets: Int = 16): DataFrame = {
-    require(buckets > 1, s"salting needs >1 bucket, got $buckets")
-    val salted = df.withColumn("__salt",
-      pmod(xxhash64(col(tiebreak)), lit(buckets.toLong)))
-    val w1 = Window.partitionBy(col(key), col("__salt"))
-      .orderBy(length(col(lenOf)).desc, col(tiebreak))
-    val survivors = salted.withColumn("__rn", row_number().over(w1))
-      .filter(col("__rn") === 1).drop("__rn")
-    val w2 = Window.partitionBy(col(key))
-      .orderBy(length(col(lenOf)).desc, col(tiebreak))
-    survivors.withColumn("__rn", row_number().over(w2))
-      .filter(col("__rn") === 1)
-      .drop("__rn", "__salt")
-  }
-
   /** Incremental (delta) dedup, exact: rows of `batch` whose `keyCol` is
     * NOT present in `corpus` — the snapshot-over-snapshot ingestion
     * pattern (dedupe today's crawl against everything already kept).
@@ -147,48 +81,4 @@ object Dedup {
   def deltaDedup(batch: DataFrame, corpus: DataFrame,
                  keyCol: String): DataFrame =
     batch.join(corpus.select(keyCol).distinct(), Seq(keyCol), "left_anti")
-
-  /** Bloom-filter scale path for [[deltaDedup]]: fold the corpus keys
-    * into a bloom filter (partial filters built per partition and OR-
-    * merged up the aggregation tree — only `bits/8` bytes ever reach the
-    * driver, never keys) and keep only batch rows the filter cannot
-    * contain. False positives drop at most `fpp`·|batch| genuinely-new
-    * rows (never admits a duplicate); DedupSpec pins result ⊆ exact and
-    * bounds the loss. At 100 TB this replaces re-shuffling the full
-    * corpus per ingested batch with one corpus scan + a filter literal —
-    * the standard trade when the corpus dwarfs every batch and fpp-rare
-    * over-dropping of new content is acceptable.
-    *
-    * Built on Spark's own runtime-filter kernels (`BloomFilterAggregate`
-    * / `BloomFilterMightContain` over xxhash64 of the key — the exact
-    * machinery injected by `spark.sql.optimizer.runtimeFilter.*`), so
-    * the probe side is a codegen'd long-hash check, not a UDF. Null keys
-    * hash to the seed like every Spark hash expression — a null batch
-    * key matches a null corpus key, which is the dedup-correct reading. */
-  def deltaDedupBloom(batch: DataFrame, corpus: DataFrame, keyCol: String,
-                      expectedItems: Long, fpp: Double = 0.01): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
-    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-    import org.apache.spark.sql.{GraftSqlBridge => B}
-    require(expectedItems > 0 && fpp > 0 && fpp < 1,
-      s"need expectedItems>0 and fpp in (0,1), got $expectedItems / $fpp")
-    // optimal sizing: bits = -n·ln(p)/ln(2)², the standard bloom formula
-    val numBits = math.max(64L,
-      (-expectedItems * math.log(fpp) / (math.log(2) * math.log(2))).toLong)
-    // the merged filter lands on the driver and ships back as a literal:
-    // cap it like AsOf caps its broadcast build (8 GiBit = 1 GiB). A
-    // bigger corpus wants a coarser fpp or the exact [[deltaDedup]].
-    require(numBits <= 8L * 1024 * 1024 * 1024,
-      s"bloom filter would need $numBits bits (> 1 GiB on the driver); " +
-        "raise fpp or use the exact deltaDedup anti-join")
-    val agg = new BloomFilterAggregate(
-      B.expression(xxhash64(col(keyCol))),
-      B.expression(lit(expectedItems)), B.expression(lit(numBits)))
-    val bytes = corpus
-      .select(B.column(agg.toAggregateExpression()).as("bf"))
-      .head().getAs[Array[Byte]](0)
-    if (bytes == null) batch // empty corpus: nothing can be a duplicate
-    else batch.filter(!B.column(BloomFilterMightContain(
-      B.expression(lit(bytes)), B.expression(xxhash64(col(keyCol))))))
-  }
 }

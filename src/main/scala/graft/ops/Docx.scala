@@ -127,9 +127,10 @@ object Docx {
 
   /** S10 at full honesty: one REAL .docx per row (name column, text
     * column; text's '\n' lines become paragraphs), written
-    * executor-parallel — the [[RenderSink.writeDocs]] contract with the
-    * text codec swapped for this one. `outDir` must be reachable from
-    * every executor (shared/object store at cluster scale). */
+    * executor-parallel: each task writes its partition's rows straight
+    * to `outDir`, no collect. Names must be relative and flat, and a
+    * rerun overwrites by name. `outDir` must be reachable from every
+    * executor (shared/object store at cluster scale). */
   def writeDocx(df: DataFrame, nameCol: String, textCol: String,
                 outDir: String, stored: Boolean = false): Unit = {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))

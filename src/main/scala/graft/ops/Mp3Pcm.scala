@@ -674,15 +674,4 @@ object Mp3Pcm {
       .as[(String, Array[Byte])]
       .mapPartitions(_.flatMap { case (n, bytes) => sideRows(n, bytes) })
   }
-
-  /** Decode a binaryFile frame of .mp3 files into one sample-summary row
-    * per file — mapPartitions decode, columnar downstream (the
-    * [[Mp3.censusOf]] slot, now with real sample columns). */
-  def decodeOf(df: DataFrame): Dataset[Mp3PcmRow] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(element_at(split(col("path"), "/"), -1).as("f"), col("content"))
-      .as[(String, Array[Byte])]
-      .mapPartitions(_.map { case (n, bytes) => decodeFile(n, bytes)._1 })
-  }
 }

@@ -3,9 +3,9 @@ package graft.ops
 /** Deterministic MPEG-1 Layer III DECODE corpus — the encoder side of
   * the sample-exactness differential (see [[Mp3Pcm]]'s Scaladoc). Every
   * file is a real mono no-CRC frame stream PACKED bit by bit from a
-  * per-(file, frame, granule) content script; [[expectedQ16]] predicts
-  * the decoder's exact Q16 PCM by running the shared synthesis stages
-  * on the script's logical spectral content, so any disagreement in the
+  * per-(file, frame, granule) content script; Mp3PcmSpec predicts the
+  * decoder's exact Q16 PCM by running the shared synthesis stages on
+  * the script's logical spectral content, so any disagreement in the
   * bitstream layer (side-info layout, scalefactor packing + scfsi
   * reuse, Huffman codes and sign bits, reservoir offsets, region
   * partitioning, the short-block reorder) breaks exact equality.
@@ -236,39 +236,6 @@ object Mp3PcmFixture {
       out.write(global, areaStart(f), caps(f))
     }
     out.toByteArray
-  }
-
-  /** The decoder's expected exact Q16 PCM for file i, computed from the
-    * LOGICAL spectral content (no bitstream involved): requantize each
-    * scripted line through the shared exponent arithmetic and mapping,
-    * alias-reduce, and run the shared synthesis state frame by frame. */
-  def expectedQ16(i: Int): Array[Long] = {
-    val srIdx = srIdxOf(i)
-    val state = new Mp3SynthState
-    val out = scala.collection.mutable.ArrayBuffer.empty[Long]
-    for (f <- 0 until framesOf(i); sc <- frameScripts(i, f)) {
-      val xr = new Array[Long](576)
-      val total = sc.bigEnd + 4 * sc.nq
-      for (l <- 0 until total) {
-        val v = sc.values(l)
-        if (v != 0) {
-          if (sc.bt == 2) {
-            val (sfb, wn, logical) = Mp3Bands.shortMap(srIdx, l)
-            val q4 = sc.gg - 210 - 8 * sc.sbg(wn) -
-              2 * (sc.ss + 1) * sc.sfShort(wn)(sfb)
-            xr(logical) = Mp3Fixed.requantQ16(v, q4)
-          } else {
-            val sfb = Mp3Bands.longZone(srIdx, l)
-            val q4 = sc.gg - 210 -
-              2 * (sc.ss + 1) * (sc.sfLong(sfb) + sc.pre * Mp3Bands.pretab(sfb))
-            xr(l) = Mp3Fixed.requantQ16(v, q4)
-          }
-        }
-      }
-      if (sc.bt != 2) Mp3Pcm.aliasReduce(xr)
-      out ++= state.granule(xr, sc.bt)
-    }
-    out.toArray
   }
 
   def path: String = new java.io.File(

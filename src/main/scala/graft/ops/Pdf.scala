@@ -984,8 +984,6 @@ object PdfFixture {
       words((i * 7 + w * 5 + 3) % words.length)).mkString(" "),
     s" [end $i-0 r2]")
 
-  def textV2Of(i: Int): String = litsV2Of(i).mkString
-
   /** Page 0's REPLACEMENT content stream, re-issued by the update. */
   def contentV2Of(i: Int): String = {
     val ls = litsV2Of(i)

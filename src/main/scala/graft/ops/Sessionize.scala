@@ -12,11 +12,10 @@ import org.apache.spark.sql.functions._
   *
   * Scale: one shuffle on user_id; each group is sorted in executor memory,
   * so per-user memory is bounded by that user's event count — fine for
-  * bounded-cardinality users, and the documented skew escape for a single
-  * hot user is the salted two-phase pre-aggregation (see Dedup's salting
-  * pattern). A streaming deployment replaces flatMapGroups with
-  * flatMapGroupsWithState + event-time timeout; state per key is one open
-  * session, dropped on timeout.
+  * bounded-cardinality users; the skew escape for a single hot user is a
+  * salted two-phase pre-aggregation. The streaming form is
+  * [[graft.streaming.Streams.sessionizeStreamSnapshot]]
+  * (flatMapGroupsWithState, one open session per user).
   */
 object Sessionize {
   final case class Event(user_id: Long, ts_us: Long, event_id: Long)

@@ -29,10 +29,10 @@ object Sketch {
     conv(substring(md5(c), 1, 15), 16, 10).cast("long")
 
   /** The raw sketch state: the (up to) k smallest distinct hashes per
-    * group → (groupCol, h). This is what makes KMV mergeable — the union
-    * of two groups'/days' minima, re-capped to the k smallest, IS the
-    * sketch of the union (order statistics compose; SketchSpec proves it
-    * executable). The k minima ride the custom [[TopK]] operator:
+    * group → (groupCol, h). This is what makes KMV mergeable — the
+    * distinct union of two groups'/days' minima, re-capped to the k
+    * smallest, IS the sketch of the union (order statistics compose;
+    * SketchSpec checks it). The k minima ride the custom [[TopK]] operator:
     * map-side bounded heaps, so after the distinct only ≤ k·|groups|
     * hash rows shuffle. */
   def kmvMinima(df: DataFrame, groupCol: String, valueCol: String,
@@ -40,16 +40,6 @@ object Sketch {
     val hashed = df.select(col(groupCol), hash60(col(valueCol)).as("h"))
       .distinct()
     TopK.perGroup(hashed, Seq(hashed(groupCol)), Seq(hashed("h") -> false), k)
-      .select(col(groupCol), col("h"))
-  }
-
-  /** Merge two minima frames (same group/h schema): k smallest of the
-    * union. `distinct` first — the same value observed in both inputs
-    * must count once. */
-  def kmvMerge(a: DataFrame, b: DataFrame, groupCol: String,
-               k: Int): DataFrame = {
-    val u = a.unionAll(b).distinct()
-    TopK.perGroup(u, Seq(u(groupCol)), Seq(u("h") -> false), k)
       .select(col(groupCol), col("h"))
   }
 
@@ -79,7 +69,7 @@ object Sketch {
   // path where exact per-key counts would shuffle the full key stream:
   // counters aggregate map-side, so at most depth·width rows reach the
   // shuffle per partition regardless of row count or key cardinality, and
-  // two sketches MERGE by adding counters (spec'd exactly). Same
+  // two sketches MERGE by adding counters (SketchSpec checks it). Same
   // determinism contract as [[hash60]]: md5-derived row hashes an ANSI
   // oracle replicates bit-for-bit, never engine-internal hashing.
   // --------------------------------------------------------------------
@@ -101,58 +91,6 @@ object Sketch {
   private def cmsBucketFromHex(h: Column, row: Int, width: Int): Column =
     conv(substring(h, row * 7 + 1, 7), 16, 10).cast("long") % width
 
-  private val md5Local =
-    new ThreadLocal[java.security.MessageDigest] {
-      override def initialValue(): java.security.MessageDigest =
-        java.security.MessageDigest.getInstance("MD5")
-    }
-
-  /** JVM twin of [[hash60]] for stateful streaming code: the first 15 hex
-    * digits of md5 are the top 60 bits of the first 8 digest bytes, so no
-    * hex-string round trip is needed. */
-  def hash60Local(s: String): Long = {
-    val d = md5Local.get()
-      .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    var v = 0L
-    var i = 0
-    while (i < 8) { v = (v << 8) | (d(i) & 0xffL); i += 1 }
-    v >>> 4
-  }
-
-  /** JVM twin of [[cmsBucket]] — the streaming CMS built on this equals
-    * the batch sketch bit-for-bit (spec-pinned). Slices bits 28j..28j+27
-    * of the digest, exactly the 7-hex-char substring the SQL side
-    * parses. */
-  def cmsBucketLocal(row: Int, key: String, width: Int): Int =
-    sliceBucket(md5Local.get()
-      .digest(key.getBytes(java.nio.charset.StandardCharsets.UTF_8)),
-      row, width)
-
-  /** All `depth` row buckets of a key from ONE digest — the streaming
-    * fold's per-row fast path (the batch build likewise pays one md5 per
-    * row). */
-  def cmsBucketsLocal(key: String, depth: Int, width: Int): Array[Int] = {
-    require(depth <= 4, s"depth $depth > 4: one md5 carries four 28-bit slices")
-    val d = md5Local.get()
-      .digest(key.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    Array.tabulate(depth)(sliceBucket(d, _, width))
-  }
-
-  /** Hex chars row·7 .. row·7+6 of the digest as a 28-bit big-endian
-    * value, mod width — NOT byte-aligned for odd rows, so it walks hex
-    * nibbles exactly like the SQL `substr(md5, 1+7·row, 7)` does. */
-  private def sliceBucket(d: Array[Byte], row: Int, width: Int): Int = {
-    var v = 0L
-    var i = row * 7
-    while (i < row * 7 + 7) {
-      val b = d(i / 2) & 0xff
-      val nibble = if (i % 2 == 0) b >>> 4 else b & 0xf
-      v = (v << 4) | nibble
-      i += 1
-    }
-    (v % width).toInt
-  }
-
   /** Build the counter table → (j, b, cnt), ≤ depth·width rows. The
     * explode multiplies rows ×depth BEFORE the partial aggregate, so the
     * map-side combine still bounds what shuffles at depth·width per
@@ -168,12 +106,6 @@ object Sketch {
       .groupBy(col("jb.j").as("j"), col("jb.b").as("b"))
       .agg(count(lit(1)).as("cnt"))
   }
-
-  /** Merge counter tables: counters add coordinate-wise — the sketch of a
-    * union of streams IS the sum of their sketches (SketchSpec proves the
-    * equality executable). */
-  def cmsMerge(a: DataFrame, b: DataFrame): DataFrame =
-    a.unionAll(b).groupBy("j", "b").agg(sum("cnt").as("cnt"))
 
   /** Point-frequency estimates for the keys in `keys(keyCol)` →
     * (keyCol, cms_est): min over rows of the key's bucket counter. The
@@ -210,7 +142,8 @@ object Sketch {
   // with that property is the BOTTOM-K HASH SAMPLE: keep the k rows with
   // the smallest md5-derived id hash (a uniform without-replacement
   // sample selected by hash, not by arrival), estimate quantiles as
-  // order statistics of the kept values. Merge = k-smallest-of-union —
+  // order statistics of the kept values. Merge = k-smallest-of-union of
+  // states built over disjoint rows —
   // associative, commutative, and EQUAL to the sketch of the whole, by
   // the same argument as KMV. The price of canonicity is accuracy:
   // rank error O(√(q(1-q)/k)) per query (sampling), versus KLL's
@@ -236,17 +169,6 @@ object Sketch {
       .select(col(groupCol), col("h"), col("v"))
   }
 
-  /** Merge two state frames built over DISJOINT row sets (the
-    * union-of-streams contract, as [[cmsMerge]]): k smallest of the
-    * union — SketchSpec proves merge-of-halves == sketch-of-whole as an
-    * exact frame equality, the property vanilla KLL cannot offer. */
-  def qsampleMerge(a: DataFrame, b: DataFrame, groupCol: String,
-                   k: Int): DataFrame = {
-    val u = a.unionAll(b)
-    TopK.perGroup(u, Seq(u(groupCol)), Seq(u("h") -> false, u("v") -> false), k)
-      .select(col(groupCol), col("h"), col("v"))
-  }
-
   /** Finisher: quantile estimates from a state frame → (group, m,
     * <name per q>), est(q) = the ceil(q·m)-th smallest kept value (the
     * sample's order statistic; exact when the group held ≤ k rows —
@@ -259,12 +181,11 @@ object Sketch {
     * m=10 gives 0.9*10 = 9.000000000000002 in binary floating point, so
     * the kept rank is 10 (the max), not the mathematical ceil(9)=9 —
     * i.e. at lattice points the estimator reads one order statistic
-    * high. This convention is deliberate: all three implementations
-    * (this Spark finisher, the DuckDB oracle's identical `ceil(q*m)`
-    * chain, and the streaming JVM `est()` twin) share the double
+    * high. This convention is deliberate: this Spark finisher and the
+    * DuckDB oracle's identical `ceil(q*m)` chain share the double
     * product bit-for-bit, so the gate can never diverge on it, whereas
     * exact integer rank arithmetic would have to be hand-replicated in
-    * three dialects to buy a distinction without statistical content
+    * both dialects to buy a distinction without statistical content
     * (both ranks are within the sample's O(√(q(1−q)/k)) error band). */
   def qsampleQuantiles(state: DataFrame, groupCol: String,
                        qs: Seq[(String, Double)]): DataFrame = {
@@ -309,9 +230,7 @@ object Sketch {
     * finisher is a fixed IEEE op chain — double ceil, two exact
     * integer-valued subtractions, one division, multiply-adds in a
     * pinned order — mirrored token-for-token by the DuckDB oracle
-    * (arg_min FILTER) and by the streaming twin
-    * [[graft.streaming.Streams.histQuantileStream]] (StreamHistSpec
-    * asserts exact equality). Output:
+    * (arg_min FILTER). Output:
     * (group, n, <one column per requested quantile>). */
   def histQuantiles(df: DataFrame, groupCol: String, valueCol: String,
                     width: Double, qs: Seq[(String, Double)]): DataFrame = {

@@ -318,7 +318,7 @@ object Tar {
   /** The WebDataset shard SINK: write each non-empty partition of
     * (nameCol, textCol) as ONE .tar under `dir`, members in partition
     * order — executor-parallel via foreachPartition, one shard per task
-    * exactly like a training-data export job (the XlsxSink/RenderSink
+    * exactly like a training-data export job (the [[Docx.writeDocx]]
     * loop). Shard files are named part_<partitionId>.tar. */
   def writeShards(df: DataFrame, nameCol: String, textCol: String,
                   dir: String): Unit = {

@@ -35,13 +35,6 @@ object Vectors {
       GraftSqlBridge.expression(a.cast("array<double>")),
       GraftSqlBridge.expression(b.cast("array<double>"))))
 
-  /** The HOF formulation of [[dotScaled]] — semantically identical
-    * (VectorsSpec asserts bit-equality); kept as the reference
-    * implementation and codegen cross-check. */
-  def dotScaledHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => round(x * y * lit(1e15)).cast("long")),
-      lit(0L), (acc, z) => acc + z)
-
   /** Exact (order-independent) dot product of two double arrays. */
   def dotExact(a: Column, b: Column): Column =
     dotScaled(a, b).cast("double") / lit(1e15)
@@ -53,13 +46,6 @@ object Vectors {
     GraftSqlBridge.column(graft.expressions.IntDot(
       GraftSqlBridge.expression(a.cast("array<int>")),
       GraftSqlBridge.expression(b.cast("array<int>"))))
-
-  /** The HOF formulation of [[intDot]] — semantically identical
-    * (VectorsSpec asserts bit-equality); kept as the reference
-    * implementation and codegen cross-check. */
-  def intDotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("long") * y),
-      lit(0L), (acc, z) => acc + z)
 
   def toDoubleArr(a: Column): Column = transform(a, _.cast("double"))
 

@@ -378,16 +378,13 @@ object WarcFixture {
     "quality", "dedup", "filter", "sample", "shard", "spark")
 
   /** The deterministic HTML body for page (i, r); "" for the empty-body
-    * case, a short not-found page for 404s. `mul` scales the paragraph
-    * count ([[graft.IngestScale]]'s knob); mul=1 is the gate fixture. */
-  def bodyOf(i: Int, r: Int): String = bodyOf(i, r, 1)
-
-  def bodyOf(i: Int, r: Int, mul: Int): String =
+    * case, a short not-found page for 404s. */
+  def bodyOf(i: Int, r: Int): String =
     if ((i + r) % 11 == 0) ""
     else if ((i + r) % 7 == 0)
       s"<html><body>Not Found $i-$r</body></html>"
     else {
-      val ps = (0 until (2 + (i + r) % 3) * mul).map { p =>
+      val ps = (0 until 2 + (i + r) % 3).map { p =>
         val ws = (0 until (5 + (i * 3 + r * 5 + p) % 9))
           .map(w => words((i + r * 7 + p * 11 + w * 13) % words.length))
         s"<p>${ws.mkString(" ")}</p>"
@@ -414,31 +411,25 @@ object WarcFixture {
   }
 
   /** File i's records as (already-framed) strings — shared by the plain
-    * writer and WarcSpec's per-record-gzip re-framing. The (pages, mul)
-    * overload is the scaled-corpus generator ([[graft.IngestScale]]);
-    * `recordsOf(i)` = the gate fixture's shape exactly. */
-  def recordsOf(i: Int): Seq[String] = recordsOf(i, pagesOf(i), 1)
-
-  def recordsOf(i: Int, pages: Int, mul: Int): Seq[String] =
-    segmentRecords(i, pages, mul, chunked = false)
+    * writer and WarcSpec's per-record-gzip re-framing. */
+  def recordsOf(i: Int): Seq[String] = segmentRecords(i, chunked = false)
 
   /** ONE generator for both response framings — the "same origin
     * bodies, different raw octets" contract the chunked differential
     * proves is structural here, not maintained-by-parallel-code
     * (review r16): `chunked` only swaps the response's body framing
     * and the record-id family. */
-  private def segmentRecords(i: Int, pages: Int, mul: Int,
-                             chunked: Boolean): Seq[String] = {
+  private def segmentRecords(i: Int, chunked: Boolean): Seq[String] = {
     val info = record("warcinfo", None, "application/warc-fields",
       f"00000000-0000-0000-0000-$i%012d",
       "software: graftbot/1.0\r\nformat: WARC file version 1.0\r\n")
-    val pageRecs = (0 until pages).flatMap { r =>
+    val pageRecs = (0 until pagesOf(i)).flatMap { r =>
       val uri = s"http://site$i.example/page/$r"
       val req = record("request", Some(uri), "application/http;msgtype=request",
         f"00000000-0000-0000-1111-${i * 1000 + r}%012d",
         s"GET /page/$r HTTP/1.1\r\nHost: site$i.example\r\n" +
           "User-Agent: graftbot/1.0\r\n\r\n")
-      val body = bodyOf(i, r, mul)
+      val body = bodyOf(i, r)
       val statusLine = s"HTTP/1.1 ${statusOf(i, r)} " +
         (if (statusOf(i, r) == 404) "Not Found" else "OK") + "\r\n" +
         "Content-Type: text/html; charset=UTF-8\r\n"
@@ -484,13 +475,8 @@ object WarcFixture {
   /** File i's records with every response framed Transfer-Encoding:
     * chunked — same URIs, same ORIGIN bodies (so body_len/body_md5/body
     * must equal the Content-Length twin's, the WarcSpec differential),
-    * different raw HTTP octets. The (pages, mul) overload is the
-    * scaled-corpus generator ([[graft.IngestScale]]'s chunked row). */
-  def recordsChunkedOf(i: Int): Seq[String] =
-    recordsChunkedOf(i, pagesOf(i), 1)
-
-  def recordsChunkedOf(i: Int, pages: Int, mul: Int): Seq[String] =
-    segmentRecords(i, pages, mul, chunked = true)
+    * different raw HTTP octets. */
+  def recordsChunkedOf(i: Int): Seq[String] = segmentRecords(i, chunked = true)
 
   def warcChunkedBytes(i: Int): Array[Byte] =
     recordsChunkedOf(i).mkString

@@ -67,9 +67,9 @@ object Xlsx {
 
   /** The untyped cell-level parse: (row_id, column letters, string-or-long
     * value), shared strings resolved and XML entities unescaped. The
-    * schema-free half of the reader — [[parseWorkbook]] types it, and the
-    * sink round-trip ([[XlsxSink]]) asserts against it for arbitrary
-    * schemas. */
+    * schema-free half of the reader — [[parseWorkbook]] types it, and
+    * XlsxSpec's write round-trip asserts against it for arbitrary
+    * cells. */
   private[graft] def parseCells(name: String, bytes: Array[Byte])
       : Seq[(Long, String, Either[String, Long])] = {
     val parts = entries(bytes)
@@ -159,100 +159,6 @@ object Xlsx {
     }
     zout.close()
     buf.toByteArray
-  }
-}
-
-/** S4 executed — the .xlsx SINK. The reference's
-  * `upload_result_to_blob_container` (commercial_rfp_data_ingestion_utils
-  * .py:11-21) renders the final frame to one workbook blob and overwrites
-  * it; until round 11 this engine covered S4 only by the parquet-overwrite
-  * analog (`Verify`'s write path). [[writeWorkbooks]] writes REAL .xlsx
-  * bytes: string columns as shared-string cells (per-workbook
-  * insertion-ordered distinct table — the layout the reader's sst path
-  * parses), integral columns as numeric cells, XML entities escaped.
-  *
-  * Spark-first shape: `foreachPartition`, one workbook per non-empty
-  * partition (`<prefix>-<partition>.xlsx`) — the executor-parallel sink
-  * discipline of [[RenderSink]]; `df.coalesce(1)` upstream reproduces the
-  * reference's single-artifact contract exactly. Proof is round-trip, not
-  * oracle (file sinks have no SQL oracle — the S10 precedent): XlsxSpec
-  * re-reads sink output through [[Xlsx.parseCells]] and asserts cell-level
-  * equality, specials and negatives included. */
-object XlsxSink {
-
-  private def colLetter(j: Int): String = {
-    var n = j + 1; val sb = new StringBuilder
-    while (n > 0) { val r = (n - 1) % 26; sb.insert(0, ('A' + r).toChar); n = (n - 1) / 26 }
-    sb.toString
-  }
-
-  /** One partition's rows as workbook bytes. Cells: Left = string (shared
-    * string), Right = long (numeric); None cells are omitted (xlsx's
-    * native representation of a missing value). */
-  private[graft] def workbookBytes(
-      rows: Seq[Seq[Option[Either[String, Long]]]],
-      stored: Boolean = false): Array[Byte] = {
-    val sstIdx = scala.collection.mutable.LinkedHashMap.empty[String, Int]
-    def sid(s: String): Int = sstIdx.getOrElseUpdate(s, sstIdx.size)
-    val body = rows.zipWithIndex.map { case (cells, i) =>
-      val r = i + 1
-      cells.zipWithIndex.flatMap {
-        case (None, _) => Nil
-        case (Some(Left(s)), j) =>
-          Seq(s"""<c r="${colLetter(j)}$r" t="s"><v>${sid(s)}</v></c>""")
-        case (Some(Right(v)), j) =>
-          Seq(s"""<c r="${colLetter(j)}$r"><v>$v</v></c>""")
-      }.mkString(s"""<row r="$r">""", "", "</row>")
-    }.mkString
-    val sis = sstIdx.keysIterator
-      .map(s => s"<si><t>${Xlsx.xmlEscape(s)}</t></si>").mkString
-    Xlsx.zipBytes(Seq(
-      "[Content_Types].xml" ->
-        """<?xml version="1.0"?><Types xmlns="http://schemas.openxmlformats.org/package/2006/content-types"/>""",
-      "xl/workbook.xml" ->
-        """<?xml version="1.0"?><workbook><sheets><sheet name="Sheet1" sheetId="1"/></sheets></workbook>""",
-      "xl/sharedStrings.xml" ->
-        s"""<?xml version="1.0"?><sst count="${sstIdx.size}" uniqueCount="${sstIdx.size}">$sis</sst>""",
-      "xl/worksheets/sheet1.xml" ->
-        s"""<?xml version="1.0"?><worksheet><sheetData>$body</sheetData></worksheet>"""),
-      stored)
-  }
-
-  /** Writes `df` (string and integral columns only) as .xlsx files under
-    * `outDir`, one per non-empty partition. Returns nothing the driver
-    * must collect — the write IS the result, as with [[RenderSink]]. */
-  def writeWorkbooks(df: DataFrame, outDir: String,
-                     prefix: String = "result"): Unit = {
-    import org.apache.spark.sql.types._
-    val schema = df.schema
-    val kinds: Seq[Int] = schema.fields.toSeq.map(_.dataType match {
-      case StringType => 0
-      case LongType | IntegerType | ShortType | ByteType => 1
-      case dt => throw new IllegalArgumentException(
-        s"xlsx sink supports string/integral columns, got $dt")
-    })
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    df.foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
-      if (it.hasNext) {
-        val pid = org.apache.spark.TaskContext.getPartitionId()
-        val rows = it.map { r =>
-          kinds.zipWithIndex.map { case (k, j) =>
-            if (r.isNullAt(j)) None
-            else if (k == 0) Some(Left(r.getString(j)))
-            else Some(Right(r.get(j) match {
-              case l: Long => l
-              case i: Int => i.toLong
-              case s: Short => s.toLong
-              case b: Byte => b.toLong
-            }))
-          }
-        }.toSeq
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(outDir, f"$prefix-$pid%05d.xlsx"),
-          workbookBytes(rows))
-        ()
-      }
-    }
   }
 }
 

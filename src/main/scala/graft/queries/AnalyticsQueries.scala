@@ -234,10 +234,9 @@ object AnalyticsQueries {
     "§2.8 capability: cohort retention (first-seen day × day-offset distinct users)")
 
   /** Per-user funnel completion times: frame i holds (user_id, t_i) — the
-    * earliest stage-i event strictly after the user's t_(i-1). The
-    * sequential min-join chain shared by [[funnelStages]] and
-    * StreamFunnelSpec's exact per-user equivalence check against
-    * [[graft.streaming.Streams.funnelStream]]. */
+    * earliest stage-i event strictly after the user's t_(i-1), so a
+    * same-timestamp event never advances a stage. The sequential
+    * min-join chain behind [[funnelStages]]. */
   def funnelUserTimes(events: DataFrame, stages: Seq[String]): Seq[DataFrame] = {
     require(stages.nonEmpty, "funnel needs at least one stage")
     val ev = events.select("user_id", "event_type", "ts")
@@ -295,8 +294,8 @@ object AnalyticsQueries {
     * of a join column with each key's share of total rows — the check an
     * engineer runs BEFORE shuffling a 100 TB join on that key (a key
     * holding >1/shuffle-partitions of the rows serializes its partition;
-    * AQE skew-split and salting are the mitigations, SkewJoinSpec /
-    * Dedup.dedupExactSalted the engine's levers). One map-side-combined
+    * AQE skew-split and salting are the mitigations, SkewJoinSpec pins
+    * the first). One map-side-combined
     * count per key, a broadcast single-row total, TakeOrdered top-10.
     * Shares are one double division rounded to 6, mirrored verbatim. */
   val qSkewAudit = Q("q_skew_audit",
@@ -375,8 +374,8 @@ object AnalyticsQueries {
     * 100 TB frequency path when the key space dwarfs memory: the
     * depth×width counter table aggregates map-side (≤ 4·512 rows ever
     * shuffle, vs ~37k keys at sf0.1 for the exact plan), merges by
-    * coordinate-wise addition ([[graft.ops.Sketch.cmsMerge]], equality
-    * spec'd), and the exact side prunes to the O(1) probe keys BEFORE
+    * coordinate-wise addition (SketchSpec checks sum of halves == sketch
+    * of the whole), and the exact side prunes to the O(1) probe keys BEFORE
     * its shuffle. Hashing is the md5-derived [[graft.ops.Sketch.hash60]]
     * family seeded per row, so the oracle replicates every counter
     * bit-for-bit. */
@@ -492,9 +491,9 @@ object AnalyticsQueries {
     * exact integer sums, finishers restricted to IEEE-exact ops in a
     * fixed order. Exactness contract: sums stay exact while
     * n·cents² < 2^53 per group (here ≤ ~2e15; a group outgrowing that
-    * shards its key). Shared by [[qValueMoments]] and (op-chain
-    * identical) [[graft.streaming.Streams.momentsStream]], whose
-    * StreamMomentsSpec asserts batch ≡ stream equality. */
+    * shards its key). Backs [[qValueMoments]]; the streaming
+    * [[graft.streaming.Streams.momentsStream]] replicates its op chain,
+    * and StreamMomentsSpec asserts batch ≡ stream equality. */
   def valueMoments(events: DataFrame): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     val vc = (col("value").cast(DecimalType(18, 2)) * 100).cast("long")
@@ -538,9 +537,8 @@ object AnalyticsQueries {
     * must sort each group's full value set with no map-side
     * pre-aggregation — unworkable when one group spans TBs — while the
     * histogram pre-aggregates to O(range/width) integer bin counts that
-    * merge across partitions, days, and streams
-    * ([[graft.streaming.Streams.histQuantileStream]] carries the same
-    * state under readStream; StreamHistSpec asserts exact equality).
+    * merge across partitions, days, and streams by plain addition
+    * (SketchSpec checks sum of halves == bins of the whole).
     * Since r9 estimates are linearly INTERPOLATED within the selected
     * bin (uniform-within-bin assumption; |est − exact| < width
     * two-sided) — the oracle mirrors the selection with

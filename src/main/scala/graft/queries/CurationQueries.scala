@@ -156,10 +156,7 @@ object CurationQueries {
     * a batch doc survives iff its normalized content hash is unseen in
     * the corpus, first-wins within the batch. One anti-join shuffle on
     * the hash ([[graft.ops.Dedup.deltaDedup]]); the corpus side moves
-    * only distinct hashes. [[graft.ops.Dedup.deltaDedupBloom]] is the
-    * 100 TB variant (corpus → driver-merged bloom filter, no corpus
-    * shuffle per batch) — approximate, so spec-validated against this
-    * exact query (DedupSpec) rather than oracle-checked. */
+    * only distinct hashes. */
   val qDeltaDedup = Q("q_delta_dedup",
     (s, dir) => {
       val h = Tables.documents(s, dir).select(col("doc_id"),

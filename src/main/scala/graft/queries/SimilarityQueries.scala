@@ -1338,53 +1338,9 @@ object SimilarityQueries {
     * end-to-end as [[qAnnIvfSq]] — the composition is the flagship
     * retrieval shape, so it gets its own driver-verified entry rather
     * than inheriting trust from its two halves. */
-  def annIvfSq(s: SparkSession, dir: String, nprobe: Int): DataFrame =
-    annIvfSqCells(Tables.embeddings(s, dir), nprobe, ivfCells, 1000)
-
-  /** Pinned-cells [[annIvfSq]] over any frame ([[graft.IvfScale]]). */
-  def annIvfSqOn(emb: DataFrame, nprobe: Int): DataFrame =
-    annIvfSqCells(emb, nprobe, ivfCells, 1000)
-
-  /** The √n-cells production shape of [[annIvfSq]]: cells grow with the
-    * corpus (`max(ivfCells, round(√n))`) so per-query candidate volume —
-    * ~`nprobe·n/cells ≈ nprobe·√n` — grows SUBLINEARLY while the pinned
-    * demo knob's `nprobe·n/8` grows linearly. Training runs on a
-    * deterministic md5-bucketed sample capped at ~200 vectors per cell
-    * (the train-on-a-sample posture [[graft.ops.KMeans.train]]
-    * documents), so the Lloyd passes stay bounded as the corpus grows.
-    * Measured (graft.IvfScale, README "IVF cells at scale"): this rung's
-    * slope vs the pinned one on the 10×/100× fixtures is the
-    * √n-cells-claim evidence the r8 verdict asked for. */
-  def annIvfSqScaled(s: SparkSession, dir: String, nprobe: Int): DataFrame =
-    annIvfSqScaledOn(Tables.embeddings(s, dir), nprobe)
-
-  /** [[annIvfSqScaled]] over any (vec_id, embedding) frame — the
-    * clustered-fixture measurement path of [[graft.IvfScale]]. */
-  def annIvfSqScaledOn(emb: DataFrame, nprobe: Int): DataFrame = {
-    val n = emb.count()
-    val (cells, nprobeEff, permille) = scaledIvfParams(n, nprobe)
-    annIvfSqCells(emb, nprobeEff, cells, permille)
-  }
-
-  /** The √n production knobs for a corpus of `n` vectors:
-    * cells = max(ivfCells, √n); nprobe grows ~√(cells/ivfCells) (the
-    * standard recall-holding rule as the cell count outgrows the data's
-    * cluster granularity), so probed candidates ≈ nprobe·n/√cells ~ n^¾
-    * — sublinear while the pinned knob's nprobe·n/8 is linear; training
-    * samples ~200 vectors per cell (md5-bucketed, deterministic). */
-  def scaledIvfParams(n: Long, nprobe: Int): (Int, Int, Int) = {
-    val cells = math.max(ivfCells, math.round(math.sqrt(n.toDouble)).toInt)
-    val nprobeEff = math.min(cells, math.ceil(
-      nprobe * math.sqrt(cells.toDouble / ivfCells)).toInt)
-    // ~200 training vectors per cell is plenty for a coarse quantizer;
-    // keep full data below that threshold (small corpora train exactly)
-    val permille = math.min(1000L, math.max(1L, 200L * cells * 1000L / n)).toInt
-    (cells, nprobeEff, permille)
-  }
-
-  private def annIvfSqCells(emb: DataFrame, nprobe: Int,
-                            cells: Int, trainPermille: Int): DataFrame = {
-    val (codebook, index) = ivfSqIndexOn(emb, cells, trainPermille)
+  def annIvfSq(s: SparkSession, dir: String, nprobe: Int): DataFrame = {
+    val emb = Tables.embeddings(s, dir)
+    val (codebook, index) = ivfSqIndexOn(emb)
     ivfSqQueryOn(emb, codebook, index, nprobe)
   }
 
@@ -1393,13 +1349,10 @@ object SimilarityQueries {
     * returns (codebook, index(vec_id, q8, qxx, cell)). At 100 TB this is
     * the one-time indexing job (O(n·cells·dims) assignment, the same
     * build cost every IVF implementation pays); [[ivfSqQueryOn]] is the
-    * recurring read path the √n-cells claim is about. Exposed so
-    * [[graft.IvfScale]] can time the two phases separately. */
-  def ivfSqIndexOn(emb: DataFrame, cells: Int,
-                   trainPermille: Int): (Seq[(Int, Seq[Double])], DataFrame) = {
+    * recurring read path. */
+  private def ivfSqIndexOn(emb: DataFrame): (Seq[(Int, Seq[Double])], DataFrame) = {
     val base = withNorm(emb)
-    val codebook = KMeans.train(base.select("vec_id", "v"), cells, ivfIters,
-      trainPermille)
+    val codebook = KMeans.train(base.select("vec_id", "v"), ivfCells, ivfIters)
     val assigned = base
       .withColumn("cell", KMeans.assignCell(col("v"), codebook))
       .select(col("vec_id"), col("cell"))
@@ -1409,10 +1362,9 @@ object SimilarityQueries {
   /** The QUERY half of the composed IVF+SQ rung over a prebuilt index:
     * probe the query's `nprobe` nearest cells, bucket-equi-join the
     * candidates, score with exact integer dot products, rank top-3.
-    * Candidate volume per query ≈ nprobe·n/cells — the term the √n-cells
-    * production shape shrinks. */
-  def ivfSqQueryOn(emb: DataFrame, codebook: Seq[(Int, Seq[Double])],
-                   index: DataFrame, nprobe: Int): DataFrame = {
+    * Candidate volume per query ≈ nprobe·n/cells. */
+  private def ivfSqQueryOn(emb: DataFrame, codebook: Seq[(Int, Seq[Double])],
+                           index: DataFrame, nprobe: Int): DataFrame = {
     val qs = withNorm(emb.filter(isQuery))
       .select(col("vec_id").as("query_id"),
         explode(KMeans.probeCells(col("v"), codebook, nprobe)).as("qcell"))
@@ -1522,27 +1474,9 @@ object SimilarityQueries {
       |  FROM sqscored) t WHERE rk <= 3""".stripMargin),
     "north star: IVF + int8 SQ composed retrieval (the 100 TB read shape; ref bar commercial_rfp_indexer.py:96-111)")
 
-  /** Candidate-pair volume of the IVF read path — the quantity the
-    * √n-cells shape shrinks ([[graft.IvfScale]] reports it next to the
-    * wall-clock medians so sublinearity is visible past per-job floors). */
-  def ivfCandidateCount(emb: DataFrame, codebook: Seq[(Int, Seq[Double])],
-                        index: DataFrame, nprobe: Int): Long = {
-    val qs = withNorm(emb.filter(isQuery))
-      .select(col("vec_id").as("query_id"),
-        explode(KMeans.probeCells(col("v"), codebook, nprobe)).as("qcell"))
-    index.withColumnRenamed("vec_id", "nbr_id")
-      .join(broadcast(qs), col("cell") === col("qcell") &&
-        col("nbr_id") =!= col("query_id"))
-      .count()
-  }
-
   /** Recall@3 of an ANN result (query_id, nbr_id rows) against exact kNN
-    * over the same dir's embeddings — [[graft.IvfScale]]'s measurement
-    * hook, the same hits/(3·|queries|) arithmetic as q_ann_recall. */
-  def recallVsExact(s: SparkSession, dir: String, ann: DataFrame): Double =
-    recallVsExactOn(Tables.embeddings(s, dir), ann)
-
-  /** [[recallVsExact]] over any (vec_id, embedding) frame. */
+    * over any (vec_id, embedding) frame — the same hits/(3·|queries|)
+    * arithmetic as q_ann_recall. */
   def recallVsExactOn(emb: DataFrame, ann: DataFrame): Double = {
     val base = withNorm(emb)
     val qs = base.filter(isQuery)
@@ -2144,8 +2078,8 @@ object SimilarityQueries {
        |  GROUP BY e.vec_id
        |)""".stripMargin
 
-  /** The clustered fixture frame, exposed for [[graft.IvfScale]] — the
-    * data shape where ANN theory applies (see [[ctrCount]]'s scaladoc). */
+  /** The clustered fixture frame, exposed for AnnSpec — the data shape
+    * where ANN theory applies (see [[ctrCount]]'s scaladoc). */
   def clusteredFrame(s: SparkSession, dir: String): DataFrame =
     clusteredEmb(s, dir)
 
@@ -2253,8 +2187,8 @@ object SimilarityQueries {
     * Scale shape: NEVER all-pairs — the representative comparison is
     * exactly the linear-verification discipline q_near_dup_rep
     * established (n−1 comparisons per cell, not C(n,2)); cells ~√n at
-    * corpus scale ([[scaledIvfParams]]) with the codebook trained on a
-    * sample and shipped as literals into one codegen'd
+    * corpus scale (so a cell holds ~√n members) with the codebook
+    * trained on a sample and shipped as literals into one codegen'd
     * [[graft.expressions.NearestCells]] assignment pass; the per-cell
     * rep aggregate, the rep equi-join and the one [[Vectors.dotExact]]
     * call per member are all keyed shuffles. Emits the full audit (cell,

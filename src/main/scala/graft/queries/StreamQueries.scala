@@ -730,8 +730,8 @@ object StreamQueries {
 
   /** q_stream_dedup — the SEVENTH streaming discipline in the gate:
     * watermark-bounded `dropDuplicates` (the exactly-once input stage
-    * every production ingest runs; [[graft.streaming.Streams.dedupByKey]]
-    * is the redelivery-suppression variant this generalizes). Dedup key
+    * every production ingest runs: a redelivered row is dropped, not
+    * re-emitted). Dedup key
     * = (user_id, event_type, minute bucket), with the BUCKET as the
     * watermarked event-time column and part of the key — the condition
     * under which Spark evicts dedup state (keys older than the

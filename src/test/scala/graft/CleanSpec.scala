@@ -66,25 +66,4 @@ class CleanSpec extends SparkSpec {
       .select("question").as[String].collect()
     assert(kept === Array("q1"))
   }
-
-  test("P9 polyLength dispatches on schema type") {
-    val df = Seq(("abcd", Seq(1, 2, 3), 7.5, Option.empty[Double]))
-      .toDF("s", "arr", "num", "nul")
-    val out = df.select(
-      Clean.polyLength(col("s"), df.schema("s").dataType).as("a"),
-      Clean.polyLength(col("arr"), df.schema("arr").dataType).as("b"),
-      Clean.polyLength(col("num"), df.schema("num").dataType).as("c"),
-      Clean.polyLength(col("nul"), df.schema("nul").dataType).as("d"))
-      .as[(Int, Int, Int, Option[Int])].head()
-    assert(out === ((4, 3, 1, None)))
-  }
-
-  test("P7 requireColumns passes when present, fails with suggestions") {
-    val df = Seq((1, "x")).toDF("date", "question")
-    Clean.requireColumns(df, Seq("date", "question"))
-    val e = intercept[IllegalArgumentException] {
-      Clean.requireColumns(df, Seq("response"))
-    }
-    assert(e.getMessage.contains("response") && e.getMessage.contains("question"))
-  }
 }

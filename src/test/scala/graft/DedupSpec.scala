@@ -1,10 +1,9 @@
 package graft
 
-import org.apache.spark.sql.functions.{col, concat, lit}
 import graft.ops.Dedup
 
-/** Dedup family (SURVEY §2.4): deterministic tiebreaks, idempotence, and
-  * the salted skew variant's equivalence to the plain path. */
+/** Dedup family (SURVEY §2.4): deterministic tiebreaks, idempotence and
+  * the exact delta dedup. */
 class DedupSpec extends SparkSpec {
   import spark.implicits._
 
@@ -62,59 +61,6 @@ class DedupSpec extends SparkSpec {
     assert(out === Array(("q1", "r", 3L)))
   }
 
-  test("salted dedup is row-identical to the plain path") {
-    val plain = Dedup.dedupExact(frame, Seq("question", "response"),
-      Seq("date", "doc_id"))
-    val salted = Dedup.dedupExactSalted(frame, Seq("question", "response"),
-      Seq("date", "doc_id"), buckets = 4)
-    assert(plain.except(salted).isEmpty && salted.except(plain).isEmpty)
-  }
-
-  test("salted latest/longest are row-identical to the plain paths") {
-    val pl = Dedup.latestPerGroup(frame, "question", "date")
-    val sl = Dedup.latestPerGroupSalted(frame, "question", "date", buckets = 4)
-    assert(pl.except(sl).isEmpty && sl.except(pl).isEmpty)
-    val pg = Dedup.longestPerGroup(frame, "question", "response", "doc_id")
-    val sg = Dedup.longestPerGroupSalted(frame, "question", "response",
-      "doc_id", buckets = 4)
-    assert(pg.except(sg).isEmpty && sg.except(pg).isEmpty)
-  }
-
-  test("property: salted latest/longest == plain on skewed random frames") {
-    import org.scalacheck.{Gen, Prop}
-    val gen = Gen.listOfN(60, Gen.zip(
-      Gen.oneOf("hot", "hot", "hot", "k1", "k2"), // dominant key
-      Gen.choose(1, 9), Gen.choose(0, 8), Gen.choose(1L, 1000L)))
-    checkProp(Prop.forAllNoShrink(gen) { rows =>
-      val df = rows.zipWithIndex.map { case ((k, d, rl, _), i) =>
-        (k, "r" * rl, f"2024-01-0$d".take(10), i.toLong)
-      }.toDF("question", "response", "date", "doc_id")
-      val pl = Dedup.latestPerGroup(df, "question", "date")
-      val sl = Dedup.latestPerGroupSalted(df, "question", "date", buckets = 3)
-      val pg = Dedup.longestPerGroup(df, "question", "response", "doc_id")
-      val sg = Dedup.longestPerGroupSalted(df, "question", "response",
-        "doc_id", buckets = 3)
-      pl.except(sl).isEmpty && sl.except(pl).isEmpty &&
-        pg.except(sg).isEmpty && sg.except(pg).isEmpty
-    }, minTests = 10)
-  }
-
-  test("property: salted == plain on random frames incl. a dominant key") {
-    import org.scalacheck.{Gen, Prop}
-    val gen = Gen.listOfN(60, Gen.zip(
-      Gen.oneOf("hot", "k1", "k2", "k3"), // skewed toward few keys
-      Gen.choose(1, 5), Gen.choose(1L, 1000L)))
-    checkProp(Prop.forAllNoShrink(gen) { rows =>
-      val df = rows.map { case (k, d, id) => (k, f"2024-01-0$d", id) }
-        .toDF("question", "response", "doc_id")
-        .withColumn("date", col("response"))
-      val plain = Dedup.dedupExact(df, Seq("question"), Seq("date", "doc_id"))
-      val salted = Dedup.dedupExactSalted(df, Seq("question"),
-        Seq("date", "doc_id"), buckets = 3)
-      plain.except(salted).isEmpty && salted.except(plain).isEmpty
-    }, minTests = 10)
-  }
-
   test("deltaDedup drops exactly the batch keys present in the corpus") {
     val batch = Seq(("a", 1L), ("b", 2L), ("b", 3L), ("c", 4L))
       .toDF("k", "id")
@@ -122,25 +68,5 @@ class DedupSpec extends SparkSpec {
     val got = Dedup.deltaDedup(batch, corpus, "k")
       .as[(String, Long)].collect().toSet
     assert(got === Set(("a", 1L), ("c", 4L)))
-  }
-
-  test("deltaDedupBloom never admits a duplicate, rarely drops new keys") {
-    // 500 corpus keys, batch = 200 seen + 200 unseen. The bloom path
-    // must be a SUBSET of the exact anti-join result (no duplicate ever
-    // sneaks through — bloom has no false negatives), and at fpp=0.01
-    // the expected false-positive loss on 200 new keys is ~2; assert a
-    // generous ceiling so the test is deterministic-in-practice.
-    val corpus = spark.range(500).select(concat(lit("k"), col("id")).as("k"))
-    val batch = spark.range(300, 700)
-      .select(concat(lit("k"), col("id")).as("k"))
-    val exact = Dedup.deltaDedup(batch, corpus, "k")
-      .as[String].collect().toSet
-    val bloom = Dedup.deltaDedupBloom(batch, corpus, "k",
-        expectedItems = 500, fpp = 0.01)
-      .as[String].collect().toSet
-    assert(bloom.subsetOf(exact), "bloom admitted a known duplicate")
-    assert(exact.size === 200)
-    assert((exact -- bloom).size <= 20,
-      s"bloom over-dropped ${(exact -- bloom).size} of ${exact.size} new keys")
   }
 }

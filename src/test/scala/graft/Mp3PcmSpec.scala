@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.functions.{col, element_at, split}
 import graft.ops._
 
 /** The MP3 sample-decode differential (see [[graft.ops.Mp3Pcm]]): the
@@ -15,7 +17,7 @@ class Mp3PcmSpec extends SparkSpec {
       val name = f"pcm_$i%03d.mp3"
       val bytes = Mp3PcmFixture.mp3Bytes(i)
       val (row, got) = Mp3Pcm.decodeFile(name, bytes)
-      val want = Mp3PcmFixture.expectedQ16(i)
+      val want = Mp3PcmSpec.expectedQ16(i)
       assert(row.n_frames === Mp3PcmFixture.framesOf(i).toLong)
       assert(row.n_samples === Mp3PcmFixture.framesOf(i) * 1152L)
       assert(got.length === want.length)
@@ -134,7 +136,7 @@ class Mp3PcmSpec extends SparkSpec {
   test("decodeOf reads the on-disk corpus through binaryFile and matches " +
       "the per-file expectation rows") {
     val dir = Mp3PcmFixture.ensure()
-    val rows = Mp3Pcm.decodeOf(
+    val rows = Mp3PcmSpec.decodeOf(
         spark.read.format("binaryFile").load(dir + "/*.mp3"))
       .collect().map(r => r.file_name -> r).toMap
     assert(rows.size === Mp3PcmFixture.count)
@@ -143,5 +145,51 @@ class Mp3PcmSpec extends SparkSpec {
       val (want, _) = Mp3Pcm.decodeFile(name, Mp3PcmFixture.mp3Bytes(i))
       assert(rows(name) === want)
     }
+  }
+}
+
+object Mp3PcmSpec {
+  /** The decoder's expected exact Q16 PCM for file i, computed from the
+    * LOGICAL spectral content (no bitstream involved): requantize each
+    * scripted line through the shared exponent arithmetic and mapping,
+    * alias-reduce, and run the shared synthesis state frame by frame. */
+  def expectedQ16(i: Int): Array[Long] = {
+    import Mp3PcmFixture._
+    val srIdx = srIdxOf(i)
+    val state = new Mp3SynthState
+    val out = scala.collection.mutable.ArrayBuffer.empty[Long]
+    for (f <- 0 until framesOf(i); sc <- frameScripts(i, f)) {
+      val xr = new Array[Long](576)
+      val total = sc.bigEnd + 4 * sc.nq
+      for (l <- 0 until total) {
+        val v = sc.values(l)
+        if (v != 0) {
+          if (sc.bt == 2) {
+            val (sfb, wn, logical) = Mp3Bands.shortMap(srIdx, l)
+            val q4 = sc.gg - 210 - 8 * sc.sbg(wn) -
+              2 * (sc.ss + 1) * sc.sfShort(wn)(sfb)
+            xr(logical) = Mp3Fixed.requantQ16(v, q4)
+          } else {
+            val sfb = Mp3Bands.longZone(srIdx, l)
+            val q4 = sc.gg - 210 -
+              2 * (sc.ss + 1) * (sc.sfLong(sfb) + sc.pre * Mp3Bands.pretab(sfb))
+            xr(l) = Mp3Fixed.requantQ16(v, q4)
+          }
+        }
+      }
+      if (sc.bt != 2) Mp3Pcm.aliasReduce(xr)
+      out ++= state.granule(xr, sc.bt)
+    }
+    out.toArray
+  }
+
+  /** Decode a binaryFile frame of .mp3 files into one sample-summary row
+    * per file (mapPartitions over [[Mp3Pcm.decodeFile]]). */
+  def decodeOf(df: DataFrame): Dataset[Mp3PcmRow] = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    df.select(element_at(split(col("path"), "/"), -1).as("f"), col("content"))
+      .as[(String, Array[Byte])]
+      .mapPartitions(_.map { case (n, bytes) => Mp3Pcm.decodeFile(n, bytes)._1 })
   }
 }

@@ -150,7 +150,7 @@ class PdfSpec extends SparkSpec {
       assert(upd.length === base.length)
       // page 1 is REPLACED by the update — reading the base section's
       // entry (or merging the chain in the wrong order) fails here
-      assert(upd.head.text === PdfFixture.textV2Of(i))
+      assert(upd.head.text === PdfFixture.litsV2Of(i).mkString)
       assert(upd.head.n_lits === 3)
       assert(upd.head.stream_bytes ===
         PdfFixture.contentV2Of(i).length.toLong)
@@ -268,7 +268,7 @@ class PdfSpec extends SparkSpec {
         got(f"doc_$i%03d.pdf").map(r => (r.page, r.text)).toSet)
       // the docp framing's update replaced page 1's text
       val byPage = got(f"docp_$i%03d.pdf").map(r => r.page -> r.text).toMap
-      assert(byPage(1) === PdfFixture.textV2Of(i))
+      assert(byPage(1) === PdfFixture.litsV2Of(i).mkString)
       (2 to PdfFixture.pagesOf(i)).foreach(p =>
         assert(byPage(p) === PdfFixture.textOf(i, p - 1)))
     }

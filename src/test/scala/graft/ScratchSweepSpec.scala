@@ -11,8 +11,8 @@ import graft.ops.Checkpoints
   * [[Checkpoints.buildOnce]] builds a tree once, never shares or leaks a
   * tmp dir, and is the only tmp-then-rename in the main code; memory-sink
   * streams start and session conf is set only in `StreamQueries.runGate`;
-  * stateful stream bodies are written only in `streaming/Streams.scala`,
-  * on its shared kernels. */
+  * stateful stream bodies are written only in `streaming/Streams.scala`;
+  * and every public def of the engine packages has a main-code caller. */
 class ScratchSweepSpec extends AnyFunSuite with TempDirs {
   private val hour = Checkpoints.staleAfterMs
 
@@ -172,13 +172,13 @@ class ScratchSweepSpec extends AnyFunSuite with TempDirs {
     }
   }
 
-  test("src/main calls flatMapGroupsWithState 7 times, all in " +
+  test("src/main calls flatMapGroupsWithState 3 times, all in " +
       "streaming/Streams.scala; Update mode without timeout only in " +
-      "foldGroups and sessionizeStreamSnapshot") {
+      "sessionizeStreamSnapshot and momentsStream") {
     assert(main.isDirectory, s"${main.getAbsolutePath} not found")
     val streams = new File(main, "graft/streaming/Streams.scala").getPath
     val calls = hits("flatMapGroupsWithState[")
-    assert(calls.size === 7 && calls.forall(_._1.getPath == streams),
+    assert(calls.size === 3 && calls.forall(_._1.getPath == streams),
       calls.map(_._1).mkString(", "))
     val src = read(new File(streams))
     val enclosing = hits("OutputMode.Update, GroupStateTimeout.NoTimeout").map {
@@ -186,6 +186,80 @@ class ScratchSweepSpec extends AnyFunSuite with TempDirs {
         assert(f.getPath == streams, s"Update/NoTimeout outside Streams: $f")
         """\bdef\s+(\w+)""".r.findAllMatchIn(src.substring(0, i)).toSeq.last.group(1)
     }
-    assert(enclosing === Seq("sessionizeStreamSnapshot", "foldGroups"))
+    assert(enclosing === Seq("sessionizeStreamSnapshot", "momentsStream"))
+  }
+
+  private val charLit = """'(?:\\.|[^\\'\n])'""".r
+
+  /** `src` with its comments removed; every newline stays, so line
+    * numbers hold. String and char literals are copied as they are, so
+    * a comment opener inside one starts no comment. Block comments
+    * nest, as in Scala. */
+  private def stripComments(src: String): String = {
+    val out = new StringBuilder
+    val n = src.length
+    var i = 0
+    while (i < n) {
+      if (src.startsWith("\"\"\"", i)) {
+        val end = src.indexOf("\"\"\"", i + 3)
+        var j = if (end < 0) n else end + 3
+        while (j < n && src(j) == '"') j += 1
+        out ++= src.substring(i, j); i = j
+      } else if (src(i) == '"') {
+        var j = i + 1
+        while (j < n && src(j) != '"' && src(j) != '\n')
+          j += (if (src(j) == '\\') 2 else 1)
+        j = math.min(j + 1, n)
+        out ++= src.substring(i, j); i = j
+      } else if (src(i) == '\'') {
+        val lit = charLit.findPrefixOf(src.substring(i, math.min(i + 4, n)))
+          .getOrElse("'")
+        out.append(lit); i += lit.length
+      } else if (src.startsWith("//", i)) {
+        val end = src.indexOf('\n', i)
+        i = if (end < 0) n else end
+      } else if (src.startsWith("/*", i)) {
+        var depth = 0
+        do {
+          if (src.startsWith("/*", i)) { depth += 1; i += 2 }
+          else if (src.startsWith("*/", i)) { depth -= 1; i += 2 }
+          else { if (src(i) == '\n') out.append('\n'); i += 1 }
+        } while (i < n && depth > 0)
+      } else { out.append(src(i)); i += 1 }
+    }
+    out.toString
+  }
+
+  /** Public defs that no main code calls, each kept for a spec. */
+  private val reachAllow = Set(
+    // AnnSpec's clustered fixture frame for the recall ladder
+    "clusteredFrame",
+    // AnnSpec's recall of an ANN result against exact kNN
+    "recallVsExactOn",
+    // the MP3 sample decoder, checked by Mp3PcmSpec against the fixture's
+    // packer; no registered query decodes samples
+    "decodeFile")
+
+  test("every public def in ops/, streaming/, expressions/ and queries/ " +
+      "has a caller in src/main") {
+    assert(main.isDirectory, s"${main.getAbsolutePath} not found")
+    val word = """\w+""".r
+    val code = sources(main).map(f => f -> stripComments(read(f)).split("\n", -1))
+    val uses = code.flatMap(_._2.flatMap(word.findAllIn))
+      .groupBy(identity).view.mapValues(_.size).toMap
+    val defRe = """\bdef\s+(\w+)""".r
+    val hidden = """\b(?:override|private)\b""".r
+    val dirs = Seq("/ops/", "/streaming/", "/expressions/", "/queries/")
+    val unreached = for {
+      (f, lines) <- code if dirs.exists(f.getPath.contains)
+      line <- lines.toSeq
+      m <- defRe.findAllMatchIn(line)
+      if hidden.findFirstIn(line.take(m.start)).isEmpty
+      name = m.group(1)
+      if uses(name) == word.findAllIn(line).count(_ == name) && !reachAllow(name)
+    } yield s"$f: def $name"
+    assert(unreached.isEmpty,
+      "no src/main caller; delete it, or allowlist it with the spec that needs it:\n" +
+        unreached.mkString("\n"))
   }
 }

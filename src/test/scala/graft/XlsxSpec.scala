@@ -96,12 +96,11 @@ class XlsxSpec extends SparkSpec {
 
   test("sink round-trip: arbitrary cells survive write -> parseCells " +
       "(specials, negatives, nulls, shared-string reuse)") {
-    import graft.ops.XlsxSink
     val rows: Seq[Seq[Option[Either[String, Long]]]] = Seq(
       Seq(Some(Left("a <&> \"quoted\" 'b'")), Some(Right(-42L)), Some(Left("dup"))),
       Seq(Some(Left("plain")), None, Some(Left("dup"))),
       Seq(None, Some(Right(0L)), Some(Left("a <&> \"quoted\" 'b'"))))
-    val bytes = XlsxSink.workbookBytes(rows)
+    val bytes = XlsxSpec.workbookBytes(rows)
     val cells = graft.ops.Xlsx.parseCells("rt.xlsx", bytes)
       .map { case (r, c, v) => (r, c) -> v }.toMap
     assert(cells === Map(
@@ -112,43 +111,13 @@ class XlsxSpec extends SparkSpec {
   }
 
   test("sink column letters cover the multi-letter range (AA+)") {
-    import graft.ops.XlsxSink
     val wide = Seq((0 until 30).map(j => Some(Right(j.toLong))
       : Option[Either[String, Long]]))
     val cells = graft.ops.Xlsx.parseCells("w.xlsx",
-      XlsxSink.workbookBytes(wide))
+      XlsxSpec.workbookBytes(wide))
     val byCol = cells.map { case (_, c, v) => c -> v }.toMap
     assert(byCol("Z") === Right(25L) && byCol("AA") === Right(26L) &&
       byCol("AD") === Right(29L))
-  }
-
-  test("distributed sink writes one workbook per non-empty partition " +
-      "and the typed reader closes the loop") {
-    import graft.ops.{Xlsx, XlsxSink}
-    import org.apache.spark.sql.functions._
-    withTempDir("graft_xlsx_sink") { out =>
-      val df = spark.range(10).select(
-        concat(lit("client_"), (col("id") % 3).cast("string")).as("client"),
-        (col("id") * 7).as("amount"),
-        concat(lit("note_"), col("id").cast("string")).as("note"))
-      XlsxSink.writeWorkbooks(df.coalesce(1), out.getAbsolutePath)
-      val files = out.listFiles().filter(_.getName.endsWith(".xlsx"))
-      assert(files.length === 1) // coalesce(1): the reference's one-artifact shape
-      val back = Xlsx.readWorkbooks(
-          spark.read.format("binaryFile").load(files.head.getAbsolutePath))
-        .collect().sortBy(_.row_id)
-      assert(back.length === 10)
-      assert(back.map(r => (r.client, r.amount, r.note)).toSeq ===
-        df.collect().toSeq.map(r => (r.getString(0), r.getLong(1), r.getString(2))))
-      // multi-partition: one file per non-empty partition
-      withTempDir("graft_xlsx_sink2") { out2 =>
-        XlsxSink.writeWorkbooks(df.repartition(4), out2.getAbsolutePath, prefix = "p")
-        val n2 = out2.listFiles().count(_.getName.endsWith(".xlsx"))
-        assert(n2 >= 2 && n2 <= 4)
-        assert(Xlsx.readWorkbooks(spark.read.format("binaryFile")
-          .load(s"$out2/*.xlsx")).count() === 10)
-      }
-    }
   }
 
   test("reader runs distributed over the binaryFile source") {
@@ -158,5 +127,44 @@ class XlsxSpec extends SparkSpec {
     val n = Xlsx.readWorkbooks(
       spark.read.format("binaryFile").load(files.toIndexedSeq: _*)).count()
     assert(n === (0 until XlsxFixture.count).map(i => 3 + i % 3).sum)
+  }
+}
+
+object XlsxSpec {
+  private def colLetter(j: Int): String = {
+    var n = j + 1; val sb = new StringBuilder
+    while (n > 0) { val r = (n - 1) % 26; sb.insert(0, ('A' + r).toChar); n = (n - 1) / 26 }
+    sb.toString
+  }
+
+  /** Rows as one workbook's bytes, the writer the round-trip tests read
+    * back. Cells: Left = string (per-workbook insertion-ordered shared
+    * string), Right = long (numeric); None cells are omitted (xlsx's
+    * native representation of a missing value). */
+  def workbookBytes(rows: Seq[Seq[Option[Either[String, Long]]]]): Array[Byte] = {
+    val sstIdx = scala.collection.mutable.LinkedHashMap.empty[String, Int]
+    def sid(s: String): Int = sstIdx.getOrElseUpdate(s, sstIdx.size)
+    val body = rows.zipWithIndex.map { case (cells, i) =>
+      val r = i + 1
+      cells.zipWithIndex.flatMap {
+        case (None, _) => Nil
+        case (Some(Left(s)), j) =>
+          Seq(s"""<c r="${colLetter(j)}$r" t="s"><v>${sid(s)}</v></c>""")
+        case (Some(Right(v)), j) =>
+          Seq(s"""<c r="${colLetter(j)}$r"><v>$v</v></c>""")
+      }.mkString(s"""<row r="$r">""", "", "</row>")
+    }.mkString
+    val sis = sstIdx.keysIterator
+      .map(s => s"<si><t>${Xlsx.xmlEscape(s)}</t></si>").mkString
+    Xlsx.zipBytes(Seq(
+      "[Content_Types].xml" ->
+        """<?xml version="1.0"?><Types xmlns="http://schemas.openxmlformats.org/package/2006/content-types"/>""",
+      "xl/workbook.xml" ->
+        """<?xml version="1.0"?><workbook><sheets><sheet name="Sheet1" sheetId="1"/></sheets></workbook>""",
+      "xl/sharedStrings.xml" ->
+        s"""<?xml version="1.0"?><sst count="${sstIdx.size}" uniqueCount="${sstIdx.size}">$sis</sst>""",
+      "xl/worksheets/sheet1.xml" ->
+        s"""<?xml version="1.0"?><worksheet><sheetData>$body</sheetData></worksheet>"""),
+      stored = false)
   }
 }
